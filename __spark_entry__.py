@@ -55,58 +55,25 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness gate checks the FIRST 50 entries of queries() in
-# dict order, so with 176 registered queries the window must rotate across
-# rounds for every query to get a hard driver-oracle check. Rotation is
-# automatic: count how many past CORRECTNESS_r*.json rounds each query was
-# fully GREEN in (rows+schema+hash all matched, no err — an errored or
-# mismatched row does not count as checked), and order never/least-green
-# queries first (stable by registration order within a tier). _PRIORITY
-# front-loads the queries the round-3 judge flagged as never driver-verified.
-_PRIORITY = frozenset({
-    "approx_distinct_users", "stream_sessionize", "stream_hourly_rollup",
-    "top_supplier_revenue", "nation_revenue_share", "bulk_part_suppliers",
-    "market_share", "big_orders", "compact_small_files", "stratified_sample",
-    "incremental_rollup", "incremental_distinct_hll", "forecast_revenue",
-    "min_cost_supplier", "nation_year_profit", "returned_item_revenue",
-    "brand_supplier_count", "rollup_hierarchy", "source_mixture",
-    "asof_forward_next_purchase", "user_segments_setops",
-    "containment_decontam", "repetition_stats", "funnel_analysis",
-    "url_canonicalize", "range_join_price_bands",
-})
-
-# Queries whose SEMANTICS changed after their last green round — past
-# greens certify the old output, so rotation must treat them as never
-# checked until the driver re-verifies the new form. Maps query name ->
-# the round its semantics changed IN: greens recorded at or BEFORE that
-# round are discounted, greens from any later round count normally — so
-# a post-change driver green naturally releases the query instead of it
-# hogging the rotation forever (r8 ADVICE). r8: the prefix-Jaccard pair
-# (repointed from the 31-token worst-case corpus onto the Zipf corpus).
-_RECHECK: dict[str, int] = {
-    "prefix_jaccard_neardup": 8,
-    "neardup_clusters_exact": 8,
-    # r11: routed cosine/IP retrieval now reports dist/rank recomputed
-    # with the oracle's float64 fold over raw vectors (the determinism
-    # fix for the r10 driver-red cosine pair) — the IP pair's r10 greens
-    # certified the old augmented-l2 dist values
-    "retrieve_routed_ip": 11,
-    "retrieve_routed_ip_nsw": 11,
-    # r12: the cosine pins' hashed projection drops the engine-computed
-    # double entirely — (ids, rank, document, dist_ok boolean invariant)
-    # vs constant-TRUE oracle; r10+r11 proved fold-alignment cannot make
-    # a hashed round(double,6) engine-portable here
-    "retrieve_routed_cosine": 12,
-    "retrieve_routed_cosine_nsw": 12,
-    "routed_sql_cosine": 12,
-}
-
-
-def _rotated(names: list[str]) -> list[str]:
+# dict order, so the window must rotate across rounds for every query to get
+# a hard driver-oracle check. Rotation is automatic: count how many past
+# CORRECTNESS_r*.json rounds each query was fully GREEN in (rows+schema+hash
+# all matched, no err — an errored or mismatched row does not count as
+# checked), and order least-green queries first (stable by registration
+# order within a tier). A query whose semantics changed declares
+# ``recheck_round`` (workload.query): greens recorded at or BEFORE that round
+# certified the old output and are discounted, greens from any later round
+# count normally — so a post-change driver green releases the query instead
+# of it hogging the rotation forever.
+def _rotated() -> list[str]:
     import glob
     import json
     import re
 
+    from chatbot_spark.workload import QUERY_META
+
     here = os.path.dirname(os.path.abspath(__file__))
+    recheck = {n: meta["recheck_round"] or 0 for n, meta in QUERY_META.items()}
     times_green: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -121,31 +88,21 @@ def _rotated(names: list[str]) -> list[str]:
                         and bool(row.get("hash_match"))
                         and not row.get("err")
                     )
-                    # a green at or before the query's semantics-change
-                    # round certified the OLD output — discount it
-                    if green and file_round > _RECHECK.get(n, 0):
+                    if green and file_round > recheck.get(n, 0):
                         times_green[n] = times_green.get(n, 0) + 1
         except (OSError, ValueError):
             continue
-    reg_index = {n: i for i, n in enumerate(names)}
-    return sorted(
-        names,
-        key=lambda n: (
-            times_green.get(n, 0),
-            0 if n in _PRIORITY else 1,
-            reg_index[n],
-        ),
-    )
+    # sorted() is stable: registration order within a tier
+    return sorted(QUERY_META, key=lambda n: times_green.get(n, 0))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from chatbot_spark.workload import SPARK_QUERIES
 
-    return {n: SPARK_QUERIES[n] for n in _rotated(list(SPARK_QUERIES))}
+    return {n: SPARK_QUERIES[n] for n in _rotated()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from chatbot_spark.workload import ORACLE_SQL, SPARK_QUERIES
+    from chatbot_spark.workload import ORACLE_SQL
 
-    order = _rotated(list(SPARK_QUERIES))
-    return {n: ORACLE_SQL[n] for n in order if n in ORACLE_SQL}
+    return {n: ORACLE_SQL[n] for n in _rotated() if n in ORACLE_SQL}

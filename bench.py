@@ -1,4 +1,5 @@
-"""Benchmark harness (driver contract): run the headline queries at
+"""Benchmark harness (driver contract): run the headline queries (every
+registered query without a ``bench_skip`` reason, in registration order) at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and print ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -15,274 +16,13 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-# headline subset: one per operator family (vector search, similarity join,
-# dedup, text analysis, chunking, relational agg/join/window when present)
-HEADLINE = [
-    "knn_exact_l2",
-    "knn_exact_cosine",
-    "radius_search",
-    "hard_negatives",
-    "mmr_diversified",
-    "coreset_kcenter",
-    "rm3_expanded_search",
-    "knn_per_label_quota",
-    "embedding_neardup",
-    "text_stats",
-    "dedup_exact",
-    "neardup_jaccard",
-    "chunk_fixed",
-    "vector_norms",
-    "pricing_summary",
-    "top_orders_by_revenue",
-    "revenue_by_nation",
-    "rollup_returns",
-    "supplier_running_qty",
-    "events_hourly",
-    "events_hopping_window",
-    "sessionize",
-    "top_events_per_user",
-    "event_type_pivot",
-    "asof_purchase_click",
-    "first_touch_attribution",
-    "host_pagerank",
-    "html_main_content",
-    "lm_quality_buckets",
-    "phrase_search",
-    "alpha_source_mixture",
-    "incremental_pagerank",
-    "web_curation_pipeline",
-    "sft_pair_assembly",
-    "equi_depth_histogram",
-    "corpus_drift_monitor",
-    "mlm_example_build",
-    "t5_span_corrupt",
-    "fim_example_build",
-    "ngram_novelty",
-    "dpo_pair_mining",
-    "incremental_minhash_neardup",
-    "per_lang_neardup",
-    "incremental_embed",
-    "join_cardinality_estimate",
-    "frequent_pairs",
-    "host_triangles",
-    "lpa_communities",
-    "incremental_lpa",
-    "hdr_quantile_sketch",
-    "host_components",
-    "stream_hdr_quantiles",
-    "pmi_collocations",
-    "incremental_components",
-    "mad_outlier_audit",
-    "prefix_jaccard_neardup",
-    "hdr_sketch_slice",
-    "neardup_clusters_exact",
-    "stream_components",
-    "decremental_components",
-    "retrieve_routed",
-    "retrieve_routed_pruned",
-    "retrieve_routed_nsw",
-    "retrieve_routed_nsw_pruned",
-    "routed_sql_topk",
-    "retrieve_filtered_ivf",
-    "retrieve_filtered_nsw",
-    "retrieve_filtered_pruned",
-    "retrieve_filtered_auto",
-    "routed_sql_filtered",
-    "routed_sql_cosine",
-    "retrieve_routed_cosine",
-    "retrieve_routed_cosine_nsw",
-    "retrieve_routed_ip",
-    "retrieve_routed_ip_nsw",
-    "radius_search_routed",
-    "mixed_edge_batch_components",
-    "decremental_components_stored",
-    "mixed_edge_batch_stored",
-    "exact_substring_sa",
-    "training_shard_plan",
-    "token_budget_mixture",
-    "event_transitions",
-    "cohort_retention",
-    "retrieval_eval",
-    "active_user_stickiness",
-    "conversion_time_quartiles",
-    "source_overlap_matrix",
-    "snapshot_diff",
-    "revenue_wow_growth",
-    "ann_ranking_eval",
-    "frequent_triples",
-    "rfm_segments",
-    "event_trigrams",
-    # retrieve_routed_calibrated: the calibration loop is up to nlist
-    # driver-coordinated searches by design — the job floor, not the plan
-    # host_peel_layers: 15 driver-coordinated peel rounds — wall-clock is
-    # the per-round job floor like bpe_train; excluded for the same reason
-    # host_hops_from_seeds: 9 driver-coordinated BFS rounds — same class
-    # host_signals: composes the peel + BFS driver loops — same class
-    # host_hits: 5 rounds x 2 checkpointed Pregel passes — same class
-    # stream_point_in_time: multi-batch streaming drain — same class
-    # stream_retract_rollup: multi-batch streaming drain — excluded like
-    # its siblings (wall-clock measures the replay harness, not the plan)
-    # stream_event_crud_components / stream_edge_crud_components:
-    # multi-batch streaming drain with two full in-stream solves —
-    # wall-clock measures the replay harness; excluded like its siblings
-    # stream_event_transitions: multi-batch streaming drain — excluded
-    # like the other replay-harness streaming queries
-    # stream_approx_distinct_hourly: streaming drain + exact-side
-    # comparison — same exclusion class
-    # stream_ann_enrich: multi-batch streaming drain (routed-index
-    # serving per micro-batch) — excluded like its siblings; the index
-    # build/search paths are measured by the ivf_* legs below
-    # stream_ann_serve_during_optimize: streaming drain + TWO optimize
-    # cycles in-stream — wall-clock measures the replay harness and the
-    # maintenance builds; excluded like the other streaming drains
-    # stream_heavy_hitters: parity-gated; excluded like the other
-    # multi-batch streaming drains (wall-clock measures the replay
-    # harness, not the plan)
-    "minhash_lsh_neardup",
-    "simhash_neardup",
-    "dedup_clusters",
-    "hybrid_rerank",
-    "media_features",
-    "image_phash_neardup",
-    "rag_pipeline_e2e",
-    "quality_filter",
-    "sparse_lexical_weights",
-    "customer_ntile",
-    "events_lag_lead",
-    "rolling_zscore_anomalies",
-    "ols_daily_trend",
-    "orders_cube",
-    "revenue_grouping_sets",
-    "range_join_price_bands",
-    "small_quantity_revenue",
-    "late_orders_by_priority",
-    "null_aware_not_in",
-    "volume_shipping",
-    "promo_revenue",
-    "urgent_late_by_year",
-    "brand_disjunctive_revenue",
-    "acctbal_percentiles",
-    "supplier_rank_distribution",
-    "train_test_split",
-    "leakage_free_split",
-    "vocab_topk",
-    "pack_sequences",
-    "length_bucketed_batches",
-    "event_type_unpivot",
-    "setext_atx",
-    "doc_url_rewrite",
-    "json_roundtrip",
-    "rolling_fingerprints",
-    "markdown_scan",
-    "warc_ingest",
-    "colbert_rerank",
-    "audio_features",
-    "video_frames",
-    "scene_cuts",
-    "audio_energy_segments",
-    "catalog_roundtrip",
-    "table_stats_orders",
-    "component_code_join",
-    "reference_dedup",
-    "citation_rewrite",
-    "intents_batch",
-    "tfidf_topk",
-    "salted_event_counts",
-    "salted_join_enrich",
-    "upsert_latest",
-    "merge_into_changes",
-    "cdc_apply_changes",
-    "approx_percentile_slo",
-    "csv_orc_roundtrip",
-    "schema_evolution_read",
-    "stream_static_join",
-    "order_count_distribution",
-    "idle_rich_customers",
-    "late_sole_supplier",
-    "top_supplier_revenue",
-    "nation_revenue_share",
-    "bulk_part_suppliers",
-    "market_share",
-    "big_orders",
-    "pq_knn",
-    "sq_knn",
-    "compact_small_files",
-    "stratified_sample",
-    "capped_class_sample",
-    "incremental_rollup",
-    "incremental_join_view",
-    "incremental_join_view_stored",
-    "retractable_rollup",
-    "incremental_distinct_hll",
-    "incremental_kmv_distinct",
-    "forecast_revenue",
-    "min_cost_supplier",
-    "nation_year_profit",
-    "returned_item_revenue",
-    "brand_supplier_count",
-    "dataprep_pipeline",
-    "dataset_card",
-    # stream_left_outer_join / stream_late_data_drop: parity-gated but
-    # excluded here like the other multi-batch streaming drains — the
-    # wall-clock measures the file-replay/restart harness, not the plan
-    "range_layout_pruning",
-    "zorder_layout_pruning",
-    "bloom_layout_pruning",
-    "bm25_topk",
-    # ivfpq_knn: like ivf_knn, the correctness query bundles build + an
-    # exact-scan recall check — measured by ivfpq_build/ivfpq_search below
-    "rollup_hierarchy",
-    "scd2_user_state",
-    "source_mixture",
-    "asof_forward_next_purchase",
-    "point_in_time_features",
-    "resample_forward_fill",
-    "rrf_hybrid",
-    "user_segments_setops",
-    "fuzzy_name_pairs",
-    "decontaminate",
-    "repetition_stats",
-    "pii_redact",
-    "k_anonymity_audit",
-    "constraint_audit",
-    "cms_heavy_hitters",
-    "kmv_distinct_users",
-    "kmv_jaccard_userdays",
-    "semantic_dedup",
-    "semantic_dedup_bucketed",
-    "incremental_exact_dedup",
-    "paragraph_dedup",
-    "exact_substring_dedup",
-    "hashed_quality_score",
-    "containment_decontam",
-    "weighted_sample",
-    "encode_tokens",
-    "dsir_select",
-    # bpe_train: 10 driver-coordinated merge rounds — wall-clock is the
-    # per-round job floor (~2 s x 10), not a data-plane cost, so it is
-    # excluded like the multi-batch streaming drains
-    # bpe_train_speculative: same class (driver-round floor; the batching
-    # win is measured at 2k merges in BENCH_BPE.json's speculative section)
-    # snapshot_time_travel: three commit cycles of the versioned-commit
-    # writer — measures the commit harness, not a query plan; excluded
-    # like the streaming drains
-    # graph_knn_maintained: three append/rebalance/commit/vacuum OPTIMIZE
-    # cycles — maintenance harness wall-clock, not a query plan; the
-    # nsw_* legs below measure the index's build/search paths
-
-    # *_fullprobe / *_append correctness queries bundle index builds —
-    # the per-index build/search legs below measure those paths
-    # graph_knn_deleted: bundles build + two full-probe phases — same class
-    # graph_knn / graph_knn_fullprobe: correctness queries bundle build +
-    # recall/exact checks — measured by nsw_build/nsw_search below
-]
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
     from chatbot_spark.session import get_spark
-    from chatbot_spark.workload import SPARK_QUERIES
+    from chatbot_spark.workload import QUERY_META, SPARK_QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -300,45 +40,7 @@ def main() -> None:
     # combined output, and r2's progress spam + one long JSON line left the
     # headline unparseable (BENCH_r02 "parsed": null)
     spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
-    # warm the JVM + file listing + Arrow python workers so per-query times
-    # measure the queries, not one-time process startup. EVERY table is
-    # touched: r2's range_join_price_bands "3.1× regression" was just the
-    # first `part`-table query of the run paying cold file-listing + footer
-    # reads (~3.5 s) that r1's suite order happened to charge elsewhere.
-    for tbl in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        spark.read.parquet(os.path.join(sf_dir, f"{tbl}.parquet")).count()
-    import pandas as pd
-    from pyspark.sql.functions import col, pandas_udf
-
-    def _warm_fn(s):
-        return s
-
-    # real-class annotations: string hints (future-annotations) don't resolve
-    _warm_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    _warm = pandas_udf("long")(_warm_fn)
-
-    spark.range(32).repartition(32).select(_warm(col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # JIT-warm the common physical-operator paths (hash join, window,
-    # hash agg, broadcast) on tiny synthetic data: otherwise whichever
-    # heavy DAG the rotation puts first eats ~5-7 s of one-time C2
-    # compilation that reads as a per-query regression across rounds
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    _a = spark.range(10_000).withColumn("k", col("id") % 100)
-    _b = spark.range(100).withColumnRenamed("id", "k")
-    (
-        _a.join(_F.broadcast(_b), "k")
-        .withColumn("r", _F.row_number().over(_W.partitionBy("k").orderBy("id")))
-        .groupBy("k")
-        .agg(_F.sum("r").alias("s"), _F.countDistinct("id").alias("d"))
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm(spark, sf_dir)
 
     # min-of-two for EVERY entry (uniform policy — retiming only slow
     # entries would be one-sided resampling that biases the total downward):
@@ -347,20 +49,25 @@ def main() -> None:
     # the standard steady-state estimator and both passes pay identical
     # warm-up, so no entry gets a second chance the others don't.
     times: dict[str, float] = {}
-    for pass_n in range(2):
-        for name in HEADLINE:
-            fn = SPARK_QUERIES.get(name)
-            if fn is None:
-                continue
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t = round(time.time() - t0, 3)
-            times[name] = t if pass_n == 0 else min(times[name], t)
-            # drop DataFrames the query persisted and never released (e.g.
-            # pipeline subtree shares): across ~100 entries leaked cache
-            # squeezes the unified memory pool and inflates LATE entries by
-            # 3-6× (cms_heavy_hitters measured 10 s late vs 1.7 s solo)
-            spark.catalog.clearCache()
+
+    def time_min_of_two(names: list[str], suffix: str = "") -> None:
+        for pass_n in range(2):
+            for name in names:
+                t0 = time.time()
+                SPARK_QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                t = round(time.time() - t0, 3)
+                key = name + suffix
+                times[key] = t if pass_n == 0 else min(times[key], t)
+                # drop DataFrames the query persisted and never released
+                # (e.g. pipeline subtree shares): across ~100 entries leaked
+                # cache squeezes the unified memory pool and inflates LATE
+                # entries by 3-6× (cms_heavy_hitters measured 10 s late vs
+                # 1.7 s solo)
+                spark.catalog.clearCache()
+
+    time_min_of_two([n for n, meta in QUERY_META.items() if meta["bench_skip"] is None])
 
     # gate-off regression leg (r13 verdict item 2): since r13 every graph/
     # dedup maintenance entry driver-solves at sf0.1, so the DISTRIBUTED
@@ -368,28 +75,13 @@ def main() -> None:
     # number and a regression in _cc_round/_lpa_round/the Pregel loop
     # would be invisible round-over-round. CBS_FORCE_DISTRIBUTED=1
     # (chatbot_spark.gating.effective_gate) forces every size gate to 0
-    # for four representative entries; timings land as ADDED
-    # `<name>__gateoff` keys (existing entries untouched). min-of-two,
-    # same policy as the main loop.
-    gateoff = [
-        "mixed_edge_batch_components",
-        "incremental_lpa",
-        "incremental_pagerank",
-        "exact_substring_sa",
-    ]
+    # for the gateoff=True entries; timings land as ADDED `<name>__gateoff`
+    # keys (existing entries untouched).
     os.environ["CBS_FORCE_DISTRIBUTED"] = "1"
     try:
-        for pass_n in range(2):
-            for name in gateoff:
-                fn = SPARK_QUERIES.get(name)
-                if fn is None:
-                    continue
-                key = f"{name}__gateoff"
-                t0 = time.time()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                t = round(time.time() - t0, 3)
-                times[key] = t if pass_n == 0 else min(times[key], t)
-                spark.catalog.clearCache()
+        time_min_of_two(
+            [n for n, meta in QUERY_META.items() if meta["gateoff"]], "__gateoff"
+        )
     finally:
         os.environ.pop("CBS_FORCE_DISTRIBUTED", None)
 
@@ -496,181 +188,11 @@ def main() -> None:
         # newest canonical-true artifact (tools/bench_diff.py enforces).
         "canonical": (load_start is not None and load_start <= 2.0),
     }
-    # attach the recorded sf1 point (tools/bench_sf1.py: a PINNED entry
-    # list re-run at a 10x key-shifted replication of sf0.1 — sf0.1 sits
-    # at the scheduling floor, which hides plan differences). Per-query
-    # times ride along so rounds compare entry-by-entry, not just in
-    # aggregate (round-5 verdict item 4).
-    sf1_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SF1.json"
-    )
-    if os.path.exists(sf1_path):
-        try:
-            with open(sf1_path) as f:
-                sf1 = json.load(f)
-            payload["sf1"] = {
-                "value": sf1["value"],
-                "n_queries": len(sf1.get("queries", {})),
-                "derivation": sf1.get("derivation"),
-                "queries": sf1.get("queries", {}),
-            }
-        except (OSError, ValueError, KeyError):
-            pass
-    # attach the SemDeDup pair-generation scale point (tools/bench_semdedup.py:
-    # tiled-exact vs cluster-blocked generator on a clustered synthetic corpus
-    # at two sizes — the testdata can't discriminate them after dup-collapse)
-    sd_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_SEMDEDUP.json"
-    )
-    if os.path.exists(sd_path):
-        try:
-            with open(sd_path) as f:
-                sd = json.load(f)
-            payload["semdedup_scale"] = {
-                "sizes": sd["sizes"],
-                "growth_tiled": sd["growth_tiled"],
-                "growth_bucketed": sd["growth_bucketed"],
-            }
-        except (OSError, ValueError, KeyError):
-            pass
-    # attach the prefix-Jaccard scale point (tools/bench_prefixjoin.py:
-    # naive posting-list join vs prefix-filtered join on the Zipf corpus —
-    # the sub-quadratic case the sf0.1 headline fixture can't show)
-    pj_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_PREFIXJOIN.json"
-    )
-    if os.path.exists(pj_path):
-        try:
-            with open(pj_path) as f:
-                pj = json.load(f)
-            payload["prefixjoin_scale"] = {
-                "sizes": pj["sizes"],
-                "data_growth": pj["data_growth"],
-                "growth_naive": pj["growth_naive"],
-                "growth_prefix": pj["growth_prefix"],
-            }
-        except (OSError, ValueError, KeyError):
-            pass
-    # attach the recorded 1M-vector ANN crossover (tools/bench_ann_scale.py)
-    # and the hierarchy walk point (tools/bench_hnsw_layers.py)
-    for fname, key, fields in (
-        (
-            "BENCH_ANN_SCALE.json",
-            "ann_scale_1m",
-            (
-                "n", "exact_search_sec", "ivf_search_sec", "speedup_search",
-                "recall_at_10", "ivfpq_speedup_search", "ivfpq_recall_at_10",
-                "nsw_search_sec", "nsw_speedup_search", "nsw_recall_at_10",
-            ),
-        ),
-        (
-            "BENCH_ANN_10M.json",
-            "ann_scale_10m",
-            (
-                "n", "exact_search_sec", "knng_build_sec",
-                "calibrated_nprobe", "ef_search", "index_search_sec",
-                "index_search_speedup_vs_exact", "index_recall_at_10",
-                "routed_e2e_sec", "routed_e2e_speedup_vs_exact",
-                "routed_recall_at_10", "optimize_cycle_sec",
-            ),
-        ),
-        (
-            "BENCH_ANN_20M.json",
-            "ann_scale_20m",
-            (
-                "n", "exact_search_sec", "knng_build_sec",
-                "calibrated_nprobe", "ef_search", "index_search_sec",
-                "index_search_speedup_vs_exact", "index_recall_at_10",
-                "routed_e2e_sec", "routed_e2e_speedup_vs_exact",
-                "routed_recall_at_10", "optimize_cycle_sec",
-            ),
-        ),
-        (
-            "BENCH_ANN_CALIB.json",
-            "ann_calibration",
-            ("n_docs", "nlist", "full_probe_search_sec", "slos"),
-        ),
-        (
-            "BENCH_HNSW_LAYERS.json",
-            "hnsw_layer_walk",
-            (
-                "descent_visited_growth_10x", "entry0_visited_growth_10x",
-                "descent_walk_ms_growth_10x",
-            ),
-        ),
-    ):
-        fpath = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
-        if os.path.exists(fpath):
-            try:
-                with open(fpath) as f:
-                    rec = json.load(f)
-                payload[key] = {k: rec[k] for k in fields if k in rec}
-            except (OSError, ValueError, KeyError):
-                pass
-    # attach the BPE per-round flatness point (tools/bench_bpe.py:
-    # incremental pair maintenance + lineage caps — marginal cost per
-    # merge round must not grow with the round number)
-    bpe_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_BPE.json"
-    )
-    if os.path.exists(bpe_path):
-        try:
-            with open(bpe_path) as f:
-                rec = json.load(f)
-            payload["bpe_scale"] = {
-                k: rec[k]
-                for k in (
-                    "merge_points", "total_sec",
-                    "marginal_sec_per_round_51_100",
-                    "marginal_sec_per_round_101_200",
-                    "late_vs_early_marginal_ratio",
-                )
-                if k in rec
-            }
-        except (OSError, ValueError, KeyError):
-            pass
-    ivm_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_IVM.json"
-    )
-    if os.path.exists(ivm_path):
-        try:
-            with open(ivm_path) as f:
-                rec = json.load(f)
-            payload["ivm_scale"] = {
-                k: rec[k]
-                for k in (
-                    "n_orders", "n_batches",
-                    "delta_refresh_sec", "full_rebuild_sec",
-                )
-                if k in rec
-            }
-        except (OSError, ValueError, KeyError):
-            pass
-    graph_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_GRAPH.json"
-    )
-    if os.path.exists(graph_path):
-        try:
-            with open(graph_path) as f:
-                recs = json.load(f)
-            payload["graph_scale"] = {
-                "n_edges": [r["n_edges"] for r in recs],
-                "triangle_sec": [r["triangle_sec"] for r in recs],
-                "bfs_sec": [r["bfs_sec"] for r in recs],
-                "hits_sec": [r["hits_sec"] for r in recs],
-            }
-            for k in ("lpa12_sec", "lpa_full_sec", "lpa_incr_sec",
-                      "lpa_incr_speedup", "cc_full_sec", "cc_incr_sec",
-                      "cc_rebuild_sec", "cc_incr_speedup",
-                      "cc_decr_sec", "cc_decr_speedup"):
-                if all(k in r for r in recs):
-                    payload["graph_scale"][k] = [r[k] for r in recs]
-        except (OSError, ValueError, KeyError):
-            pass
+    payload.update(attachments(REPO))
     full_line = json.dumps(payload, separators=(",", ":"))
     # full per-query detail goes to a file (the driver's capture window is
     # ~2 KB of tail; a ~100-entry queries map does not reliably fit)
-    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
+    out_path = os.path.join(REPO, "BENCH_FULL.json")
     # canonical-downgrade refusal (r8 verdict item 8): a loaded-host run
     # must never OVERWRITE a canonical artifact — the r8 tree ended up
     # carrying a loadavg-10 refresh over the committed quiet-host number.
@@ -695,10 +217,7 @@ def main() -> None:
                 if not payload["canonical"]
                 else f"sf {payload.get('sf')} != pinned sf {prev_sf}"
             )
-            out_path = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "BENCH_FULL_noncanonical.json",
-            )
+            out_path = os.path.join(REPO, "BENCH_FULL_noncanonical.json")
             print(
                 f"# {reason}: run kept aside as "
                 "BENCH_FULL_noncanonical.json (canonical artifact preserved)"
@@ -725,10 +244,133 @@ def main() -> None:
         # tail window is ~2 KB: summary only here, per-query sf1 detail
         # lives in BENCH_FULL.json
         tail_payload["sf1"] = {
-            k: payload["sf1"][k] for k in ("value", "n_queries", "derivation")
+            k: payload["sf1"].get(k) for k in ("value", "n_queries", "derivation")
         }
     print(json.dumps(tail_payload, separators=(",", ":")))
     spark.stop()
+
+
+# Recorded scale points attached to the payload: (artifact at the repo
+# root, payload key, fields kept). A list-shaped artifact (one record per
+# scale point) attaches each field as a per-record list.
+_ATTACH = (
+    # tools/bench_sf1.py: the sf1=True queries re-run at a 10x key-shifted
+    # replication of sf0.1, where plan differences show (sf0.1 sits at the
+    # scheduling floor); per-query times let rounds compare entry by entry
+    ("BENCH_SF1.json", "sf1", ("value", "derivation", "queries")),
+    # tools/bench_semdedup.py: tiled-exact vs cluster-blocked SemDeDup
+    # pair generation on a clustered synthetic corpus at two sizes
+    ("BENCH_SEMDEDUP.json", "semdedup_scale",
+     ("sizes", "growth_tiled", "growth_bucketed")),
+    # tools/bench_prefixjoin.py: naive posting-list vs prefix-filtered
+    # Jaccard join on the Zipf corpus (the sub-quadratic case)
+    ("BENCH_PREFIXJOIN.json", "prefixjoin_scale",
+     ("sizes", "data_growth", "growth_naive", "growth_prefix")),
+    # tools/bench_ann_scale.py: the 1M-vector ANN crossover
+    ("BENCH_ANN_SCALE.json", "ann_scale_1m", (
+        "n", "exact_search_sec", "ivf_search_sec", "speedup_search",
+        "recall_at_10", "ivfpq_speedup_search", "ivfpq_recall_at_10",
+        "nsw_search_sec", "nsw_speedup_search", "nsw_recall_at_10",
+    )),
+    ("BENCH_ANN_10M.json", "ann_scale_10m", (
+        "n", "exact_search_sec", "knng_build_sec",
+        "calibrated_nprobe", "ef_search", "index_search_sec",
+        "index_search_speedup_vs_exact", "index_recall_at_10",
+        "routed_e2e_sec", "routed_e2e_speedup_vs_exact",
+        "routed_recall_at_10", "optimize_cycle_sec",
+    )),
+    # no knng_build_sec: the 20M build was never timed (null in the file)
+    ("BENCH_ANN_20M.json", "ann_scale_20m", (
+        "n", "exact_search_sec",
+        "calibrated_nprobe", "ef_search", "index_search_sec",
+        "index_search_speedup_vs_exact", "index_recall_at_10",
+        "routed_e2e_sec", "routed_e2e_speedup_vs_exact",
+        "routed_recall_at_10", "optimize_cycle_sec",
+    )),
+    ("BENCH_ANN_CALIB.json", "ann_calibration",
+     ("n_docs", "nlist", "full_probe_search_sec", "slos")),
+    # tools/bench_hnsw_layers.py: the hierarchy walk point
+    ("BENCH_HNSW_LAYERS.json", "hnsw_layer_walk", (
+        "descent_visited_growth_10x", "entry0_visited_growth_10x",
+        "descent_walk_ms_growth_10x",
+    )),
+    # tools/bench_bpe.py: marginal cost per merge round must not grow
+    # with the round number
+    ("BENCH_BPE.json", "bpe_scale", (
+        "merge_points", "total_sec", "marginal_sec_per_round_51_100",
+        "marginal_sec_per_round_101_200", "late_vs_early_marginal_ratio",
+    )),
+    ("BENCH_IVM.json", "ivm_scale",
+     ("n_orders", "n_batches", "delta_refresh_sec", "full_rebuild_sec")),
+    ("BENCH_GRAPH.json", "graph_scale", (
+        "n_edges", "triangle_sec", "bfs_sec", "hits_sec",
+        "lpa12_sec", "lpa_full_sec", "lpa_incr_sec", "lpa_incr_speedup",
+        "cc_full_sec", "cc_incr_sec", "cc_rebuild_sec", "cc_incr_speedup",
+        "cc_decr_sec", "cc_decr_speedup",
+    )),
+)
+
+
+def attachments(repo_dir: str) -> dict:
+    """The recorded scale points under ``repo_dir``, keyed as in _ATTACH.
+    A missing or unreadable artifact is skipped; a field is kept when the
+    artifact has it (in every record, for list-shaped artifacts)."""
+    out: dict = {}
+    for fname, key, fields in _ATTACH:
+        try:
+            with open(os.path.join(repo_dir, fname)) as f:
+                rec = json.load(f)
+            if isinstance(rec, list):
+                out[key] = {
+                    k: [r[k] for r in rec]
+                    for k in fields
+                    if all(k in r for r in rec)
+                }
+            else:
+                out[key] = {k: rec[k] for k in fields if k in rec}
+        except (OSError, ValueError, TypeError):
+            continue
+    if "sf1" in out:
+        out["sf1"]["n_queries"] = len(out["sf1"].get("queries", {}))
+    return out
+
+
+def warm(spark, sf_dir: str) -> None:
+    """Pay one-time process costs before anything is timed. EVERY table is
+    touched: r2's range_join_price_bands "3.1x regression" was just the
+    first `part`-table query of the run paying cold file-listing + footer
+    reads (~3.5 s). Then the Arrow python workers start, and the common
+    physical-operator paths (hash join, window, hash agg, broadcast) are
+    JIT-warmed on tiny synthetic data: otherwise whichever heavy DAG runs
+    first eats ~5-7 s of one-time C2 compilation."""
+    import pandas as pd
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    for tbl in (
+        "region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings",
+    ):
+        spark.read.parquet(os.path.join(sf_dir, f"{tbl}.parquet")).count()
+
+    def _warm_fn(s):
+        return s
+
+    # real-class annotations: string hints (future-annotations) don't resolve
+    _warm_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    _warm = F.pandas_udf("long")(_warm_fn)
+    spark.range(32).repartition(32).select(_warm(F.col("id"))).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    a = spark.range(10_000).withColumn("k", F.col("id") % 100)
+    b = spark.range(100).withColumnRenamed("id", "k")
+    (
+        a.join(F.broadcast(b), "k")
+        .withColumn("r", F.row_number().over(Window.partitionBy("k").orderBy("id")))
+        .groupBy("k")
+        .agg(F.sum("r").alias("s"), F.countDistinct("id").alias("d"))
+        .write.format("noop").mode("overwrite").save()
+    )
 
 
 if __name__ == "__main__":

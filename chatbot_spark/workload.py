@@ -44,16 +44,56 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 SPARK_QUERIES: dict[str, QueryFn] = {}
 ORACLE_SQL: dict[str, str] = {}
+# name -> {"bench_skip", "sf1", "gateoff", "recheck_round"}: the one place
+# bench.py, tools/bench_sf1.py and __spark_entry__.py read query lists from
+QUERY_META: dict[str, dict] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(
+    name: str,
+    oracle: str | None = None,
+    *,
+    bench_skip: str | None = None,
+    sf1: bool = False,
+    gateoff: bool = False,
+    recheck_round: int | None = None,
+):
+    """Register a Spark query and its DuckDB oracle under ``name``.
+
+    Keyword facts, read by the tools instead of hand-kept name lists:
+      bench_skip: why bench.py leaves the query out of its headline suite
+        (None = benched; every query is benched unless it says why not).
+      sf1: time it in tools/bench_sf1.py's derived-sf1 suite. Never drop
+        the flag: sf1 numbers compare entry by entry across rounds.
+      gateoff: also time it in bench.py with every size gate forced to the
+        distributed path (``<name>__gateoff`` keys).
+      recheck_round: the round its semantics last changed; the driver
+        rotation in __spark_entry__.py discounts oracle greens recorded at
+        or before it, so the query is re-checked first.
+
+    Raises ValueError when ``name`` is already registered.
+    """
+    if name in SPARK_QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+
     def deco(fn: QueryFn) -> QueryFn:
         SPARK_QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
+        QUERY_META[name] = {
+            "bench_skip": bench_skip,
+            "sf1": sf1,
+            "gateoff": gateoff,
+            "recheck_round": recheck_round,
+        }
         return fn
 
     return deco
+
+
+# shared bench_skip reasons
+_DRAIN = "multi-batch streaming drain: times the replay harness, not the plan"
+_ROUNDS = "driver-coordinated rounds: times the per-round job floor, not the plan"
 
 
 # DuckDB L2 distance reproducing functions/vector.py bit-for-bit:
@@ -297,6 +337,7 @@ WHERE a.vec_id < b.vec_id
   AND {_DUCK_DOT.format(a='a.embedding', b='b.embedding')}
       / (sqrt({_DUCK_NORM.format(a='a.embedding')}) * sqrt({_DUCK_NORM.format(a='b.embedding')})) >= 0.35
 """,
+    sf1=True,
 )
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: ε-ball similarity self-join (embedding-cosine near-dup) — the
@@ -333,6 +374,7 @@ SELECT e.vec_id,
        CAST(CASE WHEN coalesce(c.canonical, e.vec_id) = e.vec_id THEN 1 ELSE 0 END AS INT) AS kept
 FROM embeddings e LEFT JOIN canon c ON c.id = e.vec_id
 """,
+    sf1=True,
 )
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) — embedding-space semantic dedup as
@@ -401,6 +443,7 @@ SELECT e.vec_id,
        CAST(CASE WHEN coalesce(c.canonical, e.vec_id) = e.vec_id THEN 1 ELSE 0 END AS INT) AS kept
 FROM embeddings e LEFT JOIN canon c ON c.id = e.vec_id
 """,
+    sf1=True,
 )
 def semantic_dedup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with the cluster-blocked pair generator — the 100 TB
@@ -559,6 +602,7 @@ SELECT w.doc_id,
        CAST(CASE WHEN s.f IS NULL AND w.doc_id = w.first_id THEN 1 ELSE 0 END AS INT) AS kept
 FROM w LEFT JOIN seen s ON s.f = w.f
 """,
+    sf1=True,
 )
 def incremental_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-incremental dedup (the production crawl shape): a new
@@ -702,6 +746,7 @@ FROM tk
 LEFT JOIN span_agg sa ON sa.doc_id = tk.doc_id
 LEFT JOIN kept k ON k.doc_id = tk.doc_id
 """,
+    sf1=True,
 )
 def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2d: ExactSubstr duplicated-passage removal (Lee et al. 2021) —
@@ -817,6 +862,7 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """,
+    sf1=True,
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D: hash aggregation with partial (map-side) combine — TPC-H Q1 shape.
@@ -900,6 +946,7 @@ JOIN nation n ON n.n_nationkey = c.c_nationkey
 JOIN region r ON r.r_regionkey = n.n_regionkey
 GROUP BY n.n_name, r.r_name
 """,
+    sf1=True,
 )
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C: multi-way join chain — fact-to-fact shuffle join (lineitem⋈orders)
@@ -930,6 +977,7 @@ FROM customer c
 ANTI JOIN orders o ON o.o_custkey = c.c_custkey
 GROUP BY c.c_mktsegment
 """,
+    bench_skip="anti-join shape is timed by idle_rich_customers, null_aware_not_in",
 )
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C: anti join (NOT EXISTS) — left_anti in Spark."""
@@ -950,6 +998,7 @@ FROM part p
 SEMI JOIN lineitem l ON l.l_partkey = p.p_partkey
 GROUP BY p.p_brand
 """,
+    bench_skip="semi-join shape is timed by bulk_part_suppliers",
 )
 def parts_ordered_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C: semi join (EXISTS) — left_semi in Spark."""
@@ -1119,7 +1168,7 @@ def events_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("stream_hopping_rollup", _HOPPING_ORACLE)
+@query("stream_hopping_rollup", _HOPPING_ORACLE, bench_skip=_DRAIN)
 def stream_hopping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of events_hopping_window: real readStream ->
     watermarked OVERLAPPING windows -> AvailableNow drain, hash-matched
@@ -1185,6 +1234,7 @@ SELECT event_type,
        CAST(count(*) AS BIGINT) AS n
 FROM events GROUP BY event_type
 """,
+    bench_skip="JSON hop is timed by json_roundtrip",
 )
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H8 analog: JSON field extraction + aggregation (props is a JSON
@@ -1225,6 +1275,7 @@ SELECT user_id FROM events WHERE event_type = 'click'
 INTERSECT
 SELECT user_id FROM events WHERE event_type = 'purchase'
 """,
+    bench_skip="set-op shape is timed by user_segments_setops",
 )
 def users_click_and_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G: INTERSECT set op."""
@@ -1243,6 +1294,7 @@ EXCEPT
 SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
 FROM events WHERE event_type = 'purchase'
 """,
+    bench_skip="set-op shape is timed by user_segments_setops",
 )
 def user_days_click_not_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G: EXCEPT set op at (user, day) grain (subtract = EXCEPT DISTINCT;
@@ -1290,6 +1342,7 @@ SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
        1 AS within_slo
 FROM events GROUP BY event_type
 """,
+    bench_skip="HLL shape is timed by incremental_distinct_hll",
 )
 def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6: approx_count_distinct (HyperLogLog++). Raw sketch estimates are
@@ -1350,6 +1403,7 @@ def _ann_recall_summary(approx: DataFrame, exact: DataFrame, slo: float = 0.95) 
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    bench_skip="bundles build + exact recall check; timed as ivf_build/ivf_search",
 )
 def ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6: IVF (KMeans-cell) ANN search — batch analog of the reference's
@@ -1388,6 +1442,7 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist
 FROM ranked WHERE rank <= 10
 """,
+    bench_skip="bundles an IVF build; timed as ivf_build/ivf_search",
 )
 def ivf_knn_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 correctness envelope, oracle-checked: IVF search probing EVERY
@@ -1418,6 +1473,8 @@ def ivf_knn_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    bench_skip="bundles build + exact recall check; timed as nsw_build/nsw_search",
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def graph_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6: sharded NSW graph ANN — the direct batch analog of the
@@ -1457,6 +1514,8 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist
 FROM ranked WHERE rank <= 10
 """,
+    bench_skip="bundles build + exact check; timed as nsw_build/nsw_search",
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def graph_knn_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 correctness envelope for the graph index, oracle-checked:
@@ -1501,6 +1560,7 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist
 FROM ranked WHERE rank <= 10
 """,
+    bench_skip="bundles two IVF builds; timed as ivf_build/ivf_search",
 )
 def ivf_append_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 index MAINTENANCE, oracle-checked: build IVF on half the corpus,
@@ -1542,6 +1602,8 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist
 FROM ranked WHERE rank <= 10
 """,
+    bench_skip="three OPTIMIZE cycles: times the maintenance harness, not a plan",
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def graph_knn_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 cross-run index MAINTENANCE, oracle-checked (round-5 verdict
@@ -1613,6 +1675,7 @@ SELECT doc_id,
        {_duck_minhash_sig_cols()}
 FROM sh GROUP BY doc_id
 """,
+    bench_skip="signatures are timed inside minhash_lsh_neardup",
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: portable MinHash signatures — md5 hash family means any engine
@@ -1721,6 +1784,7 @@ ham AS (
 SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
 FROM ham WHERE hamming <= 8
 """,
+    sf1=True,
 )
 def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (SimHash family): 64-bit md5-derived simhash → block-LSH
@@ -1743,6 +1807,7 @@ def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    bench_skip="bundles an LSH fit and the in-plan exact recall check",
 )
 def lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 (LSH family): MLlib BucketedRandomProjectionLSH bucket-join
@@ -2797,6 +2862,7 @@ SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00:00') AS hour,
 FROM events
 GROUP BY 1, 2
 """,
+    bench_skip=_DRAIN,
 )
 def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of events_hourly run as a real readStream →
@@ -2822,6 +2888,7 @@ FROM events
 WHERE ts >= TIMESTAMP '2024-01-08'
 GROUP BY 1, 2
 """,
+    bench_skip=_DRAIN,
 )
 def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark DROP semantics, oracle-proven across RESTARTS: run 1
@@ -3024,6 +3091,7 @@ WHERE EXISTS (
   WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
 GROUP BY o_orderpriority
 """,
+    sf1=True,
 )
 def late_orders_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS semi-join — orders with at least one line
@@ -3061,6 +3129,7 @@ SELECT component_code,
 FROM d WHERE component_code IN (0, 1)
 GROUP BY component_code ORDER BY component_code
 """,
+    bench_skip="write + read-back harness; perfbench times the ingest path",
 )
 def ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9/K1/B2: synthesize markdown from documents, run the reference's
@@ -3148,6 +3217,7 @@ reach(id, r) AS (
 SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS canonical_id
 FROM reach GROUP BY id
 """,
+    sf1=True,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 resolution step: exact-Jaccard near-dup pairs → connected
@@ -3213,6 +3283,7 @@ SELECT user_id, min(ts) AS session_start,
        CAST(count(*) AS BIGINT) AS n_events
 FROM s GROUP BY user_id, sess_id
 """,
+    bench_skip=_DRAIN,
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sessionization (built-in session_window, 30-min gap)
@@ -3265,6 +3336,7 @@ SELECT user_id, session_start, session_end, n_events
 FROM (SELECT g.*, max(sess_id) OVER (PARTITION BY user_id) AS mx FROM g)
 WHERE sess_id < mx
 """,
+    bench_skip=_DRAIN,
 )
 def stream_boundary_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
@@ -3632,6 +3704,7 @@ SELECT user_id, CAST(event_id AS BIGINT) AS last_event_id,
        event_type AS last_type
 FROM ranked WHERE rn = 1
 """,
+    bench_skip=_DRAIN,
 )
 def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MERGE-maintenance (A9's streaming twin): events arrive in
@@ -3738,6 +3811,7 @@ SELECT component_code,
        CAST(16 AS BIGINT) AS max_dim
 FROM d GROUP BY component_code ORDER BY component_code
 """,
+    bench_skip=_DRAIN,
 )
 def stream_ingest_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's write path (§3.3: markdown → split → embed →
@@ -3876,6 +3950,7 @@ FROM events
 WHERE event_id < 20000
 GROUP BY event_type
 """,
+    bench_skip=_DRAIN,
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup (J1's streaming twin): the same events are
@@ -4007,6 +4082,7 @@ SELECT d.doc_id,
        CAST(coalesce(s.score, 0) AS BIGINT) AS score
 FROM documents d LEFT JOIN s ON s.doc_id = d.doc_id
 """,
+    sf1=True,
 )
 def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance scoring (Xie et al. 2023, "Data Selection
@@ -4273,7 +4349,7 @@ w{r + 1} AS (
     return "".join(parts) + "\n" + unions
 
 
-@query("bpe_train", _bpe_oracle_sql(10))
+@query("bpe_train", _bpe_oracle_sql(10), bench_skip=_ROUNDS)
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 learn-side: distributed BPE tokenizer training (Sennrich et al.
     2016) — 10 driver-coordinated merge rounds over the word-count table
@@ -4297,7 +4373,11 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("bpe_train_speculative", _bpe_oracle_sql(10))
+@query(
+    "bpe_train_speculative",
+    _bpe_oracle_sql(10),
+    bench_skip="driver-round floor; its batching win is in BENCH_BPE.json",
+)
 def bpe_train_speculative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 learn-side, r12 batching form: speculate-then-verify BPE
     (operators/bpe.py::train_bpe_speculative) — the driver speculates a
@@ -4690,6 +4770,7 @@ SELECT component,
        CAST(1 AS BIGINT) AS table_ok
 FROM mapping
 """,
+    sf1=True,
 )
 def catalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1+K3+K4+K5+D3 in one round-trip: extend the component mapping with
@@ -5120,6 +5201,7 @@ SELECT column_name, CAST(n_rows AS BIGINT) AS n_rows,
        CAST(n_distinct AS BIGINT) AS n_distinct, min_value, max_value
 FROM s
 """,
+    sf1=True,
 )
 def table_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE surface (io/tables.py::collect_table_stats): the
@@ -5435,6 +5517,7 @@ FROM snaps GROUP BY snapshot
             h="md5(CAST(id AS VARCHAR) || ':' || CAST(version AS VARCHAR) || ':' || text)"
         )
     ),
+    bench_skip="three commit cycles: times the commit harness, not a plan",
 )
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel over the versioned-commit table: three batches commit
@@ -5580,6 +5663,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(count(DISTINCT o_orderdate) AS BIGINT) AS n_dates
 FROM orders
 """,
+    sf1=True,
 )
 def csv_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.A source formats beyond parquet/JSON: orders → CSV (header,
@@ -5622,6 +5706,7 @@ SELECT e.event_type, d.cohort,
 FROM events e JOIN dim d ON d.user_id = e.user_id
 GROUP BY e.event_type, d.cohort
 """,
+    sf1=True,
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming enrich: a real readStream joined per micro-batch to a
@@ -5767,6 +5852,7 @@ WHERE l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
       AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
 GROUP BY s.s_name
 """,
+    sf1=True,
 )
 def late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: EXISTS + NOT EXISTS against the same fact table —
@@ -5984,6 +6070,7 @@ SELECT o_year,
              / sum(rev_e4), 6) AS share
 FROM base GROUP BY o_year
 """,
+    sf1=True,
 )
 def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: market share — NATION_7's fraction of ECONOMY-part
@@ -6095,6 +6182,7 @@ FROM c JOIN p
   ON p.user_id = c.user_id AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 2 HOUR
 GROUP BY c.user_id % 10
 """,
+    bench_skip=_DRAIN,
 )
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (the funnel/attribution shape): click
@@ -6143,6 +6231,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    sf1=True,
 )
 def pq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 memory-scale path: product-quantized ANN (operators/pq.py) —
@@ -6650,6 +6739,7 @@ FROM cand c JOIN m ON m.p_partkey = c.p_partkey AND c.acctbal_cents = m.min_cent
 ORDER BY c.acctbal_cents DESC, c.p_partkey ASC, c.s_suppkey ASC
 LIMIT 100
 """,
+    sf1=True,
 )
 def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated scalar-min subquery (the lowest-balance
@@ -6886,6 +6976,7 @@ SELECT CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'val' ELSE 'test' 
        CAST(count(DISTINCT source) AS BIGINT) AS n_sources
 FROM b GROUP BY split
 """,
+    sf1=True,
 )
 def dataprep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pretraining-data-prep DAG as ONE composed Spark plan:
@@ -6968,6 +7059,7 @@ FROM c LEFT JOIN p
   ON p.user_id = c.user_id AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 2 HOUR
 GROUP BY c.user_id % 10
 """,
+    bench_skip=_DRAIN,
 )
 def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream LEFT OUTER interval join, drained with
@@ -7046,6 +7138,7 @@ SELECT 1 AS clustered_le_2_files, 1 AS clustered_lt_unclustered,
        CAST(sum(user_id * 1000003 + event_id) AS BIGINT) AS content_checksum
 FROM events WHERE user_id < 2
 """,
+    sf1=True,
 )
 def range_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Layout clustering: the same events written two ways — round-robin
@@ -7113,6 +7206,7 @@ SELECT 1 AS z_user_le_8_files, 1 AS z_time_le_8_files, 1 AS z_beats_onedim_on_ti
 FROM events
 WHERE user_id < 2 AND ts < TIMESTAMP '2024-01-05'
 """,
+    sf1=True,
 )
 def zorder_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-dimensional layout clustering (OPTIMIZE ZORDER BY): events
@@ -7359,6 +7453,7 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(score, 6) AS score
 FROM ranked WHERE rank <= 10
 """,
+    sf1=True,
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I5: BM25 top-10 (k1=1.2, b=0.75, rational idf) over the same
@@ -7386,6 +7481,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    bench_skip="bundles build + recall check; timed as ivfpq_build/ivfpq_search",
 )
 def ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """I6 composed scale path: IVF-PQ (operators/ivfpq.py) — coarse cells
@@ -7666,6 +7762,7 @@ SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neig
        CAST(rank AS BIGINT) AS rank, round(score, 6) AS score
 FROM franked WHERE rank <= 10
 """,
+    sf1=True,
 )
 def rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval, fused by RRF (k=60): dense top-20 (deterministic
@@ -7781,6 +7878,7 @@ cand AS (
 SELECT id_a, id_b, CAST(dist AS BIGINT) AS dist
 FROM cand WHERE dist <= 2
 """,
+    sf1=True,
 )
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution pairs: supplier names within edit distance 2, via
@@ -8034,6 +8132,7 @@ FROM est e JOIN exact x USING (user_id)
 ORDER BY exact_cnt DESC, user_id ASC
 LIMIT 20
 """,
+    sf1=True,
 )
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 heavy hitters with CMS estimates beside exact counts. The
@@ -8097,6 +8196,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_users,
          AS click_to_purchase
 FROM pu
 """,
+    bench_skip="window shape is timed by sessionize, first_touch_attribution",
 )
 def funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered view→click→purchase funnel: each stage's timestamp is the
@@ -8191,6 +8291,7 @@ canon AS (
   FROM parts)
 SELECT doc_id, canonical_url FROM canon
 """,
+    bench_skip="URL rewrite shape is timed by doc_url_rewrite",
 )
 def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-crawl URL canonicalization: scheme/host lowercased, default
@@ -8407,6 +8508,7 @@ SELECT doc_id,
             ELSE 'tail' END AS bucket
 FROM scored
 """,
+    sf1=True,
 )
 def lm_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet quality bucketing: a bigram count LM trained on the clean
@@ -8607,7 +8709,7 @@ SELECT CAST(node AS BIGINT) AS host, rank AS rank_scaled FROM b2
     return sql
 
 
-@query("incremental_pagerank", _incr_pagerank_oracle())
+@query("incremental_pagerank", _incr_pagerank_oracle(), sf1=True, gateoff=True)
 def incremental_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warm-started PageRank after a crawl delta: batch 1 (every 4th doc's
     rule-1 links) ranks for 4 supersteps; the full graph then arrives and
@@ -8718,7 +8820,7 @@ GROUP BY k.doc_id % 50, r.rank
     return sql
 
 
-@query("web_curation_pipeline", _web_curation_oracle())
+@query("web_curation_pipeline", _web_curation_oracle(), sf1=True)
 def web_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end web curation in ONE lazy DAG: (1) jusText boilerplate
     removal over the synthesized pages, (2) CCNet bigram-LM scoring of
@@ -9153,6 +9255,7 @@ SELECT i.doc_id, i.n_tokens,
        md5(coalesce(t.target, '')) AS target_md5
 FROM inputs i LEFT JOIN targets t USING (doc_id)
 """,
+    sf1=True,
 )
 def t5_span_corrupt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 denoising example construction: deterministic md5-seeded spans
@@ -9297,6 +9400,7 @@ SELECT doc_id,
        CAST(n_unique * 1000 // n_shingles AS BIGINT) AS novelty_milli
 FROM per_doc
 """,
+    sf1=True,
 )
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc novelty: the milli-fraction of its word 8-grams that occur
@@ -9583,6 +9687,7 @@ SELECT CAST(CAST(props->>'k' AS BIGINT) % 8 AS BIGINT) AS shard,
 FROM events
 GROUP BY CAST(props->>'k' AS BIGINT) % 8, CAST(props->>'k' AS BIGINT)
 """,
+    bench_skip=_DRAIN,
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SpaceSaving: the event payload key (0-99) sharded mod 8,
@@ -9757,6 +9862,7 @@ SELECT event_type, val_bucket,
          AS sq_milli_diff
 FROM cells
 """,
+    bench_skip=_DRAIN,
 )
 def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live drift gate: the event stream's (event_type × value-bucket)
@@ -9905,6 +10011,7 @@ FROM p
 JOIN ic ca ON ca.item = p.item_a
 JOIN ic cb ON cb.item = p.item_b
 """,
+    sf1=True,
 )
 def frequent_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket frequent-pair mining (operators/basket.py): orders
@@ -9952,6 +10059,7 @@ SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
 FROM (SELECT unnest([x, y, z]) AS node FROM tri)
 GROUP BY node
 """,
+    sf1=True,
 )
 def host_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host triangle counts (operators/graph.py::triangle_count) over
@@ -10144,7 +10252,7 @@ def _peel_oracle(rounds: int, k: int) -> str:
     )
 
 
-@query("host_peel_layers", _peel_oracle(18, 4))
+@query("host_peel_layers", _peel_oracle(18, 4), bench_skip=_ROUNDS)
 def host_peel_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core onion decomposition (operators/graph.py::peel_layers) of a
     dense deterministic host graph (six chord generators on 120 hosts):
@@ -10289,7 +10397,7 @@ def _bfs_oracle(rounds: int, seeds: tuple[int, ...]) -> str:
     return "WITH " + ",\n".join(ctes) + f"\n{layers}"
 
 
-@query("host_hops_from_seeds", _bfs_oracle(12, (0, 77)))
+@query("host_hops_from_seeds", _bfs_oracle(12, (0, 77)), bench_skip=_ROUNDS)
 def host_hops_from_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distance (operators/graph.py::bfs_layers)
     from trusted seed hosts {0, 77} over the ring-chord host graph — the
@@ -10444,7 +10552,7 @@ LEFT JOIN bfs b ON b.node = p.node
     )
 
 
-@query("host_signals", _host_signals_oracle())
+@query("host_signals", _host_signals_oracle(), bench_skip=_ROUNDS)
 def host_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The graph-curation capstone: ONE host link graph, FOUR authority /
     structure signals joined into the per-host curation table a FineWeb-
@@ -10769,7 +10877,7 @@ FROM h{iterations} h JOIN a{iterations} a ON a.node = h.node
     )
 
 
-@query("host_hits", _hits_oracle(5, 50, 10**8))
+@query("host_hits", _hits_oracle(5, 50, 10**8), bench_skip=_ROUNDS)
 def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kleinberg HITS over the host_pagerank link graph
     (operators/graph.py::hits_integer): hubs (link out to good
@@ -10927,6 +11035,7 @@ SELECT t.from_type, t.to_type, t.n_trans,
        CAST(t.n_trans * 1000000 // tot.n_from AS BIGINT) AS p_ppm
 FROM t JOIN tot USING (from_type)
 """,
+    bench_skip=_DRAIN,
 )
 def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of event_transitions: the custom stateful operator
@@ -11034,6 +11143,7 @@ t AS (
   GROUP BY 1, 2, 3 HAVING count(*) >= 3)
 SELECT item_a, item_b, item_c, triple_count FROM t
 """,
+    sf1=True,
 )
 def frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent item triples (operators/basket.py::frequent_triples).
@@ -11096,6 +11206,7 @@ SELECT CAST(
        CAST(count(*) AS BIGINT) AS n_customers
 FROM cust GROUP BY 1
 """,
+    sf1=True,
 )
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation at scale: recency (days to a fixed
@@ -11201,6 +11312,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_hours,
        1 AS all_within_slo
 FROM h
 """,
+    bench_skip=_DRAIN,
 )
 def stream_approx_distinct_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming hourly approx-distinct users: HLL++ inside a watermarked
@@ -11337,7 +11449,7 @@ FROM sel_{_MMR_K}
     return "".join(parts)
 
 
-@query("mmr_diversified", _mmr_oracle())
+@query("mmr_diversified", _mmr_oracle(), sf1=True)
 def mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversified rerank (operators/diversify.py::mmr_select) over
     the standard 5-query workload: stage 1 is the exact distributed
@@ -11550,6 +11662,7 @@ SELECT c.c_mktsegment,
 FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
 GROUP BY c.c_mktsegment
 """,
+    sf1=True,
 )
 def incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN maintenance (operators/ivm.py::delta_join_view):
@@ -11687,6 +11800,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_classes,
        CAST(min(n_sensitive) AS BIGINT) AS min_l
 FROM cls
 """,
+    sf1=True,
 )
 def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity release audit
@@ -11761,7 +11875,7 @@ FROM lab_{_LPA_ROUNDS} GROUP BY label
     return "".join(parts)
 
 
-@query("lpa_communities", _lpa_oracle())
+@query("lpa_communities", _lpa_oracle(), sf1=True)
 def lpa_communities_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synchronous label propagation
     (operators/graph.py::lpa_communities, 4 rounds) over the same
@@ -11809,7 +11923,7 @@ _LPA_UPD_RAW_SQL = """
   UNION ALL SELECT doc_id % 120, (doc_id * 7 + 13) % 120 FROM d WHERE doc_id % 5 = 0"""
 
 
-@query("incremental_lpa", _lpa_oracle(_LPA_UPD_RAW_SQL))
+@query("incremental_lpa", _lpa_oracle(_LPA_UPD_RAW_SQL), sf1=True, gateoff=True)
 def incremental_lpa_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental community maintenance
     (operators/graph.py::incremental_lpa): the previous snapshot ran LPA
@@ -11883,6 +11997,7 @@ SELECT t.check_name, CAST(n.n_rows AS BIGINT) AS n_rows,
        CAST(CASE WHEN t.v = 0 THEN 1 ELSE 0 END AS INT) AS passed
 FROM t, n
 """,
+    sf1=True,
 )
 def constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative data-quality gate (operators/quality.py): five
@@ -11940,6 +12055,7 @@ SELECT event_type, CAST(n AS BIGINT) AS n,
                      * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END, 6) AS r2
 FROM s
 """,
+    sf1=True,
 )
 def ols_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-wise closed-form OLS (operators/timeseries.py::groupwise_ols):
@@ -12097,6 +12213,7 @@ SELECT event_type,
                      WHEN event_id % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_retractions
 FROM events GROUP BY event_type
 """,
+    bench_skip=_DRAIN,
 )
 def stream_retract_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming retract-stream maintenance (streaming/events.py::
@@ -12175,6 +12292,8 @@ topk AS (
 SELECT ph.phase, t.query_id, t.neighbor_id, t.rank, t.dist
 FROM topk t CROSS JOIN (SELECT 'tombstoned' AS phase UNION ALL SELECT 'compacted') ph
 """,
+    bench_skip="bundles build + two full-probe phases; timed as nsw_build/nsw_search",
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def graph_knn_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector deletes on the graph index (hnsw.py::delete /
@@ -12240,6 +12359,7 @@ SELECT COALESCE(state, '__none') AS prior_state,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
 FROM pit GROUP BY prior_state
 """,
+    bench_skip=_DRAIN,
 )
 def stream_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming feature materialization: the purchase stream replays as
@@ -12350,6 +12470,7 @@ FROM cum c
 JOIN ranks r ON c.returnflag = r.returnflag
             AND c.cum - c.cnt < r.rank_target AND r.rank_target <= c.cum
 """,
+    sf1=True,
 )
 def hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p90/p99 of lineitem price-in-cents per returnflag via the
@@ -12595,7 +12716,11 @@ _CC_UNION_RAW_SQL = _CC_RAW_SQL + """
   SELECT u, u + 50 AS v FROM d WHERE doc_id % 100 = 0"""
 
 
-@query("incremental_components", _cc_oracle(rounds=8, raw_sql=_CC_UNION_RAW_SQL))
+@query(
+    "incremental_components",
+    _cc_oracle(rounds=8, raw_sql=_CC_UNION_RAW_SQL),
+    sf1=True,
+)
 def incremental_components_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental connected components under edge additions
     (operators/components.py::incremental_components): the previous
@@ -12765,6 +12890,8 @@ JOIN sizes x ON x.doc_id = t.id_a
 JOIN sizes y ON y.doc_id = t.id_b
 WHERE t.i * 5 >= (x.n + y.n - t.i) * 4
 """,
+    sf1=True,
+    recheck_round=8,  # repointed onto the Zipf corpus
 )
 def prefix_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complete exact near-dup join (operators/dedup.py::
@@ -12811,6 +12938,7 @@ JOIN sizes x ON x.doc_id = t.id_a
 JOIN sizes y ON y.doc_id = t.id_b
 WHERE t.i * 5 >= (x.n + y.n - t.i) * 4
 """,
+    bench_skip="small correctness pin; prefix_jaccard_neardup is benched",
 )
 def prefix_jaccard_adversarial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The prefix join's ADVERSARIAL worst case, kept as a small
@@ -12849,6 +12977,7 @@ ranks AS (
 SELECT r.q_ppm, r.rank_target, c.qv AS quantile
 FROM cum c JOIN ranks r ON c.cum - c.cnt < r.rank_target AND r.rank_target <= c.cum
 """,
+    sf1=True,
 )
 def hdr_sketch_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored-sketch-table contract (operators/hdrsketch.py): per-day
@@ -12942,7 +13071,8 @@ FROM l{cc_rounds} GROUP BY lbl"""
     return head + "".join(rounds) + tail
 
 
-@query("neardup_clusters_exact", _neardup_cluster_oracle())
+# recheck_round 8: repointed onto the Zipf corpus
+@query("neardup_clusters_exact", _neardup_cluster_oracle(), sf1=True, recheck_round=8)
 def neardup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact near-dup CLUSTER table — the composition a dedup
     pipeline actually materializes: prefix-filtered complete Jaccard
@@ -12979,7 +13109,7 @@ def neardup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("stream_components", _cc_oracle(rounds=8, raw_sql=_CC_UNION_RAW_SQL))
+@query("stream_components", _cc_oracle(rounds=8, raw_sql=_CC_UNION_RAW_SQL), sf1=True)
 def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming graph maintenance: the component table kept current as
     edges ARRIVE — rings, chords, and bridges of the 10-island graph
@@ -13054,7 +13184,11 @@ _CC_DECR_RAW_SQL = _CC_RAW_SQL + """
   SELECT u, u + 50 AS v FROM d WHERE doc_id % 100 = 0 AND u % 200 <> 0"""
 
 
-@query("decremental_components", _cc_oracle(rounds=8, raw_sql=_CC_DECR_RAW_SQL))
+@query(
+    "decremental_components",
+    _cc_oracle(rounds=8, raw_sql=_CC_DECR_RAW_SQL),
+    sf1=True,
+)
 def decremental_components_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decremental connected components under edge REMOVALS
     (operators/components.py::decremental_components) — the delete verb
@@ -13123,6 +13257,7 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist,
        'doc-' || CAST(neighbor_id AS VARCHAR) AS document
 FROM ranked WHERE rank <= 10
 """,
+    sf1=True,
 )
 def retrieve_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-aware retrieval routing (SURVEY §4's deferred optimizer
@@ -13179,6 +13314,8 @@ _CC_MIXED_RAW_SQL = _CC_RAW_SQL + """
 @query(
     "mixed_edge_batch_components",
     _cc_oracle(rounds=8, raw_sql=_CC_MIXED_RAW_SQL),
+    sf1=True,
+    gateoff=True,
 )
 def mixed_edge_batch_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MIXED maintenance batch — removals and additions in one delta,
@@ -13339,6 +13476,8 @@ SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist,
        'doc-' || CAST(neighbor_id AS VARCHAR) AS document
 FROM ranked WHERE rank <= 10
 """,
+    sf1=True,
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def retrieve_routed_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-aware routing onto the sharded-NSW index (r8 verdict item
@@ -13396,6 +13535,7 @@ def retrieve_routed_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def retrieve_routed_nsw_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NSW-routed read path at its PRUNED setting — recall_slo=0.95
@@ -13558,6 +13698,7 @@ def _cc_snapshot_dir(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "decremental_components_stored",
     _cc_oracle(rounds=8, raw_sql=_CC_DECR_RAW_SQL),
+    sf1=True,
 )
 def decremental_components_stored_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decremental refresh against a WRITTEN snapshot (r8 verdict
@@ -13599,6 +13740,7 @@ def decremental_components_stored_query(spark: SparkSession, sf_dir: str) -> Dat
 @query(
     "mixed_edge_batch_stored",
     _cc_oracle(rounds=8, raw_sql=_CC_MIXED_RAW_SQL),
+    sf1=True,
 )
 def mixed_edge_batch_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MIXED maintenance batch against the WRITTEN snapshot —
@@ -13677,6 +13819,8 @@ SELECT doc_id, CAST(min(s) AS BIGINT) AS span_start,
        CAST(max(s) + 7 AS BIGINT) AS span_end
 FROM isl GROUP BY doc_id, island
 """,
+    sf1=True,
+    gateoff=True,
 )
 def exact_substring_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2d, suffix-array semantics WITHOUT hashing (r8 verdict item 7;
@@ -13707,6 +13851,7 @@ def exact_substring_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, 1 AS rows_ok
 """,
+    bench_skip=_ROUNDS,
 )
 def retrieve_routed_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The routed read path with PER-CORPUS probe calibration (r8
@@ -13778,6 +13923,7 @@ def retrieve_routed_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stream_edge_crud_components",
     _cc_oracle(rounds=8, raw_sql=_CC_MIXED_RAW_SQL),
+    bench_skip=_DRAIN,
 )
 def stream_edge_crud_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CRUD graph maintenance under an out-of-order-TOLERANT
@@ -13872,6 +14018,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(doc_id) AS BIGINT) AS member_checksum
 FROM cum WHERE c <= 20000 GROUP BY source
 """,
+    sf1=True,
 )
 def token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budgeted source mixture
@@ -14000,7 +14147,8 @@ def retrieve_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("retrieve_filtered_nsw", _FILTERED_ORACLE)
+# recheck_round 14: NSW build: f32 candidate selection
+@query("retrieve_filtered_nsw", _FILTERED_ORACLE, recheck_round=14)
 def retrieve_filtered_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered routed retrieval over the sharded-NSW graph index
     (hnsw.py::NSWGraphIndex.search ``allowed=``): graph rows never carry
@@ -14051,6 +14199,8 @@ def retrieve_filtered_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 SELECT 1 AS recall_ok, CAST(10 AS BIGINT) AS n_queries, CAST(100 AS BIGINT) AS n_rows
 """,
+    sf1=True,
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def retrieve_filtered_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The filtered NSW route at its PRUNED setting (recall_slo=0.95,
@@ -14255,6 +14405,7 @@ ranked AS (
 SELECT neighbor_id, CAST(rank AS BIGINT) AS rank, TRUE AS dist_ok
 FROM ranked WHERE rank <= 10
 """,
+    recheck_round=12,  # hashed projection drops the engine double
 )
 def routed_sql_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-SQL COSINE nearest-neighbor routing (r11 — the metric-family
@@ -14416,7 +14567,8 @@ def _cosine_checked_projection(
     )
 
 
-@query("retrieve_routed_cosine", _COSINE_ROUTED_ORACLE)
+# recheck_round 12: hashed projection drops the engine double
+@query("retrieve_routed_cosine", _COSINE_ROUTED_ORACLE, sf1=True, recheck_round=12)
 def retrieve_routed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-metric routed retrieval over the IVF index (ann.py::
     IVFIndex metric="cosine"): cosine reduces to l2 over UNIT vectors —
@@ -14459,7 +14611,8 @@ def retrieve_routed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cosine_checked_projection(spark, sf_dir, res)
 
 
-@query("retrieve_routed_cosine_nsw", _COSINE_ROUTED_ORACLE)
+# recheck_round 14: NSW build: f32 candidate selection
+@query("retrieve_routed_cosine_nsw", _COSINE_ROUTED_ORACLE, recheck_round=14)
 def retrieve_routed_cosine_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-metric routed retrieval over the sharded-NSW graph index
     (hnsw.py::NSWGraphIndex metric="cosine") — the ANN contract-
@@ -14520,7 +14673,8 @@ FROM ranked WHERE rank <= 10
 """
 
 
-@query("retrieve_routed_ip", _IP_ROUTED_ORACLE)
+# recheck_round 11: dist now the oracle's float64 fold
+@query("retrieve_routed_ip", _IP_ROUTED_ORACLE, sf1=True, recheck_round=11)
 def retrieve_routed_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner-product routed retrieval over the IVF index (ann.py::
     IVFIndex metric="inner_product"): rows are stored as the MIPS->L2
@@ -14566,7 +14720,8 @@ def retrieve_routed_ip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("retrieve_routed_ip_nsw", _IP_ROUTED_ORACLE)
+# recheck_round 14: NSW build: f32 candidate selection
+@query("retrieve_routed_ip_nsw", _IP_ROUTED_ORACLE, recheck_round=14)
 def retrieve_routed_ip_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner-product routed retrieval over the sharded-NSW graph index —
     the metric-family uniformity pin: the same augmentation reduces MIPS
@@ -14668,6 +14823,7 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist
 FROM ranked WHERE rank <= 10
 """,
+    bench_skip=_DRAIN,
 )
 def stream_ann_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN serving (the online-retrieval pattern, composing
@@ -14757,6 +14913,8 @@ ranked AS (
 SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, round(d, 6) AS dist
 FROM ranked WHERE rank <= 10
 """,
+    bench_skip=_DRAIN,
+    recheck_round=14,  # NSW build: f32 candidate selection
 )
 def stream_ann_serve_during_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve-during-OPTIMIZE version isolation (r11): streaming ANN

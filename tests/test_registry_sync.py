@@ -1,11 +1,16 @@
-"""Documentation/registry drift gates (round-4 verdict item 8): the
-README's query counts and the bench HEADLINE list must track the live
-registry — counts drifted every round they were maintained by hand."""
+"""Registry gates: the README's query counts must track the live registry
+(round-4 verdict item 8: counts drifted every round they were maintained by
+hand), every query ships an oracle, names are unique, and the driver
+rotation re-checks what changed."""
 
 from __future__ import annotations
 
+import glob
+import inspect
 import os
 import re
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -35,52 +40,38 @@ def test_every_query_has_an_oracle():
     assert set(SPARK_QUERIES) == set(ORACLE_SQL)
 
 
-def test_bench_sf1_pinned_names_are_registered():
-    """The frozen sf1 entry list (round-5 verdict item 4) must stay in
-    sync with the registry — a renamed query would silently drop out of
-    the sf1 comparison otherwise."""
-    import sys
+def test_query_rejects_duplicate_name():
+    """Bench, sf1, gate-off and recheck membership all derive from the
+    registry, so a silently overwritten entry is the one drift path left."""
+    from chatbot_spark import workload
 
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from bench_sf1 import PINNED
-
-    from chatbot_spark.workload import SPARK_QUERIES
-
-    unknown = [n for n in PINNED if n not in SPARK_QUERIES]
-    assert not unknown, f"pinned sf1 entries not in registry: {unknown}"
-    assert len(set(PINNED)) == len(PINNED), "duplicate pinned sf1 entries"
-
-
-def test_bench_headline_names_are_registered():
-    import sys
-
-    sys.path.insert(0, REPO)
-    from bench import HEADLINE
-
-    from chatbot_spark.workload import SPARK_QUERIES
-
-    unknown = [n for n in HEADLINE if n not in SPARK_QUERIES]
-    assert not unknown, f"bench HEADLINE references unregistered queries: {unknown}"
-    assert len(set(HEADLINE)) == len(HEADLINE), "duplicate HEADLINE entries"
+    fn = workload.SPARK_QUERIES["knn_exact_l2"]
+    oracle = workload.ORACLE_SQL["knn_exact_l2"]
+    try:
+        with pytest.raises(ValueError, match="knn_exact_l2"):
+            workload.query("knn_exact_l2", "SELECT 1")(lambda spark, sf_dir: None)
+    finally:
+        workload.SPARK_QUERIES["knn_exact_l2"] = fn
+        workload.ORACLE_SQL["knn_exact_l2"] = oracle
 
 
-def test_rotation_recheck_and_priority_names_are_registered():
-    """A renamed query would silently drop out of the rotation tiers —
-    the RECHECK tier especially must track the registry, since its whole
-    point is forcing re-verification of semantically-changed queries."""
-    import importlib.util
-    import sys
+def test_nsw_builders_rechecked_inside_driver_window():
+    """Every query that builds an NSW graph is re-checked after the round-14
+    f32 candidate selection: until a driver round after its recheck round
+    has run, the rotation must put it inside the driver's 50-query window."""
+    import __spark_entry__
+    from chatbot_spark.workload import QUERY_META, SPARK_QUERIES
 
-    spec = importlib.util.spec_from_file_location(
-        "_entry_under_test", os.path.join(REPO, "__spark_entry__.py")
+    builds_nsw = re.compile(r"NSWGraphIndex\.build|nsw_optimize_cycle\(")
+    builders = [
+        n for n, fn in SPARK_QUERIES.items() if builds_nsw.search(inspect.getsource(fn))
+    ]
+    assert "retrieve_routed_nsw" in builders and "graph_knn" in builders
+    assert all((QUERY_META[n]["recheck_round"] or 0) >= 14 for n in builders)
+    latest = max(
+        int(re.search(r"CORRECTNESS_r(\d+)\.json$", p).group(1))
+        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
     )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["_entry_under_test"] = mod
-    spec.loader.exec_module(mod)
-
-    from chatbot_spark.workload import SPARK_QUERIES
-
-    unknown = [n for n in mod._RECHECK if n not in SPARK_QUERIES]
-    assert not unknown, f"_RECHECK names not in registry: {unknown}"
-    unknown_p = [n for n in mod._PRIORITY if n not in SPARK_QUERIES]
-    assert not unknown_p, f"_PRIORITY names not in registry: {unknown_p}"
+    pending = {n for n in builders if QUERY_META[n]["recheck_round"] >= latest}
+    window = set(list(__spark_entry__.queries())[:50])
+    assert pending <= window, f"outside the driver window: {sorted(pending - window)}"

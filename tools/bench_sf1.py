@@ -10,10 +10,11 @@ is 10 independent sf0.1 copies, the standard replication scale-up.
 region/nation stay fixed-size (TPC-H dimension contract). Clearly a
 BENCH-ONLY derivation: correctness still runs on driver data only.
 
-Runs a PINNED entry list (round-5 verdict item 4: the union of the
-round-4 and round-5 "20 slowest" sets, frozen so round-over-round sf1
-numbers compare entry-by-entry instead of shifting with suite
-composition) at the derived sf1, min-of-two per entry, and writes
+Runs the queries registered with ``sf1=True`` (round-5 verdict item 4:
+started as the union of the round-4 and round-5 "20 slowest" sets and
+only ever grown, so round-over-round sf1 numbers compare entry-by-entry
+instead of shifting with suite composition) at the derived sf1, in
+registration order, min-of-two per entry, and writes
 ``BENCH_SF1.json`` at the repo root; bench.py attaches that file to its
 printed payload so the driver's BENCH_r{N} carries the sf1 section.
 
@@ -46,85 +47,6 @@ KEY_COLS = {
 }
 
 
-# Frozen sf1 entry list = union of the r4 and r5 "20 slowest at sf0.1"
-# sets. Append new heavy entries here deliberately; never remove — the
-# point is entry-by-entry comparability across rounds.
-PINNED = [
-    "bm25_topk",
-    "catalog_roundtrip",
-    "cms_heavy_hitters",
-    "csv_orc_roundtrip",
-    "dataprep_pipeline",
-    "dedup_clusters",
-    "dsir_select",
-    "embedding_neardup",
-    "exact_substring_dedup",
-    "fuzzy_name_pairs",
-    "incremental_exact_dedup",
-    "late_orders_by_priority",
-    "late_sole_supplier",
-    "market_share",
-    "min_cost_supplier",
-    "pq_knn",
-    "pricing_summary",
-    "range_layout_pruning",
-    "revenue_by_nation",
-    "rrf_hybrid",
-    "semantic_dedup",
-    "semantic_dedup_bucketed",
-    "simhash_neardup",
-    "stream_static_join",
-    "table_stats_orders",
-    "zorder_layout_pruning",
-    # appended r6 (new heavy entries; list is append-only by contract)
-    "t5_span_corrupt",
-    "web_curation_pipeline",
-    "lm_quality_buckets",
-    "ngram_novelty",
-    "frequent_pairs",
-    "host_triangles",
-    "frequent_triples",
-    "rfm_segments",
-    # appended r6c (the new operator family; sf-scaling entries only —
-    # rm3/coreset are bounded-candidate by contract and sf-invariant)
-    "mmr_diversified",
-    "incremental_join_view",
-    "lpa_communities",
-    "k_anonymity_audit",
-    "constraint_audit",
-    "ols_daily_trend",
-    # appended r8 (round-7 verdict item 4: the r7 heavy additions whose
-    # scaling is their whole justification, plus the r8 delete verb)
-    "prefix_jaccard_neardup",
-    "neardup_clusters_exact",
-    "stream_components",
-    "incremental_components",
-    "incremental_lpa",
-    "hdr_quantile_sketch",
-    "hdr_sketch_slice",
-    "decremental_components",
-    # appended r8b (the composition + routing additions)
-    "mixed_edge_batch_components",
-    "retrieve_routed",
-    # appended r9 (stored-snapshot refreshes — scaling is the point:
-    # they must grow with the DELTA, not the snapshot — plus the NSW
-    # read path and the hash-free ExactSubstr twin)
-    "decremental_components_stored",
-    "mixed_edge_batch_stored",
-    "retrieve_routed_nsw",
-    "exact_substring_sa",
-    "token_budget_mixture",
-    # appended r13 (r12 verdict item 2: the r10-r12 heavy additions —
-    # the routed cosine/ip pins and the entries this round's driver
-    # gates / metadata-IO changes touched, so the 10x point certifies
-    # the gates fall back or stay cheap as data grows)
-    "retrieve_routed_cosine",
-    "retrieve_routed_ip",
-    "retrieve_filtered_pruned",
-    "incremental_pagerank",
-]
-
-
 def make_sf1(spark) -> None:
     from pyspark.sql import functions as F
 
@@ -147,16 +69,9 @@ def make_sf1(spark) -> None:
 
 def main() -> int:
     from chatbot_spark.session import get_spark
-    from chatbot_spark.workload import SPARK_QUERIES
+    from chatbot_spark.workload import QUERY_META, SPARK_QUERIES
 
-    if len(sys.argv) > 1:
-        names = sys.argv[1:]
-    else:
-        names = [n for n in PINNED if n in SPARK_QUERIES]
-        missing = [n for n in PINNED if n not in SPARK_QUERIES]
-        if missing:
-            print(f"WARN: pinned entries missing from registry: {missing}",
-                  file=sys.stderr)
+    names = sys.argv[1:] or [n for n, meta in QUERY_META.items() if meta["sf1"]]
 
     spark = get_spark(
         "bench-sf1", extra_conf={"spark.ui.showConsoleProgress": "false"}

@@ -27,6 +27,7 @@ def main() -> None:
         if a.startswith("--passes="):
             passes = int(a.split("=")[1])
 
+    from bench import warm
     from chatbot_spark.session import get_spark
     from chatbot_spark.workload import SPARK_QUERIES
 
@@ -48,34 +49,7 @@ def main() -> None:
             "spark.eventLog.rolling.enabled": "false",
         },
     )
-    for tbl in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ):
-        spark.read.parquet(os.path.join(sf_dir, f"{tbl}.parquet")).count()
-    import pandas as pd
-    from pyspark.sql.functions import col, pandas_udf
-
-    def _warm_fn(s):
-        return s
-
-    _warm_fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    _warm = pandas_udf("long")(_warm_fn)
-    spark.range(32).repartition(32).select(_warm(col("id"))).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
-    _a = spark.range(10_000).withColumn("k", col("id") % 100)
-    _b = spark.range(100).withColumnRenamed("id", "k")
-    (
-        _a.join(_F.broadcast(_b), "k")
-        .withColumn("r", _F.row_number().over(_W.partitionBy("k").orderBy("id")))
-        .groupBy("k")
-        .agg(_F.sum("r").alias("s"), _F.countDistinct("id").alias("d"))
-        .write.format("noop").mode("overwrite").save()
-    )
+    warm(spark, sf_dir)
 
     walls: dict[str, list[float]] = {}
     for pass_n in range(passes):
