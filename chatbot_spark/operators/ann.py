@@ -9,9 +9,9 @@ execution:
 
  * IVF (inverted-file) index: MLlib KMeans over a sample → every corpus row
    gets a ``centroid_id`` → the table is written partitioned/clustered by
-   centroid. Search = shortlist nprobe nearest centroids per query (tiny
-   broadcast cross-join against ≤ a few thousand centroids), then exact
-   re-rank only inside those cells. At 100 TB the scan prunes to
+   centroid. Search = shortlist nprobe nearest centroids per query (on the
+   driver for a bounded batch, a tiny broadcast cross-join otherwise),
+   then exact re-rank only inside those cells. At 100 TB the scan prunes to
    nprobe/nlist of the data — the batch analog of HNSW's beam search.
 
  * Random-hyperplane LSH (cosine) / BucketedRandomProjectionLSH (L2) via
@@ -23,6 +23,7 @@ per batch, and the exact operator (operators.topk) is the recall oracle.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import BucketedRandomProjectionLSH
 from pyspark.ml.functions import array_to_vector, vector_to_array
@@ -31,6 +32,12 @@ from pyspark.sql import functions as F
 
 from chatbot_spark.functions.vector import sq_l2_distance
 from chatbot_spark.io.smallio import read_small_df, write_small_parquet
+from chatbot_spark.operators.topk import (
+    order_keys,
+    pair_distances,
+    scan_topk,
+    vector_matrix,
+)
 
 
 def _numpy_kmeans(X, k: int, seed: int, max_iter: int):
@@ -494,9 +501,10 @@ class IVFIndex:
         )
         out.m2 = m2
         if ctbl is not None:
-            # driver-side read: the centroid count is already known — the
-            # _nlist() metadata job never needs to run for this instance
+            # driver-side read: the centroid count and matrix are already
+            # known — neither _nlist() nor _cell_order() runs a job
             out._nlist_memo = ctbl.num_rows
+            out._centers_memo = ctbl
         return out
 
     def search(
@@ -512,17 +520,21 @@ class IVFIndex:
     ) -> DataFrame:
         """Top-k per query over the nprobe nearest cells.
 
-        Plan shape: queries × centroids (broadcast, tiny) → nprobe shortlist
-        → equi-join on centroid_id against the clustered corpus → exact
-        distance + per-query window. The big side is only ever equi-joined
-        and scanned nprobe/nlist.
+        Plan shape, ``route="broadcast"`` (default — bounded batches; the
+        driver holds the Q × d batch): queries collected once as Arrow →
+        driver routing to the nprobe nearest centroids (``_cell_order``)
+        → ONE topk.scan_topk pass over the probed cells (centroid_id isin
+        → file pruning), each row scored only against the queries that
+        probe its cell → final per-query window. At nprobe >= nlist the
+        routing is skipped: the same scan over every cell, i.e. exactly
+        topk.knn_join, bit for bit.
 
-        ``route="broadcast"`` (default) broadcasts the routed query
-        shortlist to the corpus join — right for bounded batches (the
-        shortlist is Q × nprobe vector rows; executors each hold it
-        whole). ``route="join"`` drops the broadcast hint so Catalyst
-        shuffle-joins on centroid_id — the unbounded-query-set form (the
-        routing itself is already distributed either way).
+        ``route="join"`` (unbounded query sets; queries never touch the
+        driver): queries × centroids (broadcast, tiny) → nprobe shortlist
+        window → shuffle-join on centroid_id against the probed cells →
+        HOF distance + partial per-(query, scan partition) window → final
+        per-query window. Both routes probe the same cells (same fold,
+        same (dist, centroid_id) tie-break) and return the same rows.
 
         Filtered search (the vector-DB predicate+top-k contract — the
         reference's OceanBase backend exposes it as metadata-filtered
@@ -545,67 +557,33 @@ class IVFIndex:
           small allowed side). Both given = AND."""
         if route not in ("broadcast", "join"):
             raise ValueError(f"unknown route {route!r}; have ['broadcast', 'join']")
-        if self.metric == "cosine":
-            # unit-normalize the query once: over unit vectors the l2
-            # walk IS the cosine ranking, and dist converts exactly
-            # (||u-v||^2 / 2 = 1 - cos)
-            from chatbot_spark.functions.vector import normalize
+        queries = self._index_queries(queries, query_vec)
+        ip = ("__qnorm",) if self.metric == "inner_product" else ()
 
-            queries = queries.withColumn(query_vec, normalize(F.col(query_vec)))
-        elif self.metric == "inner_product":
-            # MIPS->L2: augment the query with a 0 slack coordinate and
-            # carry ||q||^2 through the shortlist join — the conversion
-            # back to -<x,q> needs it per query (one extra double/row)
-            from chatbot_spark.functions.vector import (
-                dot_product,
-                mips_augment_query,
-            )
-
-            queries = queries.withColumn(
-                "__qnorm", dot_product(F.col(query_vec), F.col(query_vec))
-            ).withColumn(query_vec, mips_augment_query(F.col(query_vec)))
-        qcols = [
-            F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec")
-        ]
-        if self.metric == "inner_product":
-            qcols.append(F.col("__qnorm"))
-        q = queries.select(*qcols)
-
-        # Full-probe fast path (r11): at nprobe >= nlist every cell is
-        # probed, so the routing machinery — the Q×nlist centroid window,
-        # the probed-cell collect, and the shortlist join carrying the
-        # query vectors through centroid_id — buys nothing; the plan is
-        # exactly topk.knn_join's shape (broadcast queries onto one
-        # corpus scan). Output is bit-identical to the routed full probe:
-        # the pair set is all (query, row) pairs either way and the
-        # distance/rank expressions are the same. broadcast route only —
-        # route="join" keeps the centroid_id shuffle join that IS its
-        # distribution strategy.
-        if route == "broadcast" and nprobe >= self._nlist():
-            corpus_side = self.indexed
-            if where is not None:
+        if route == "broadcast":
+            # bounded batch: collect it once, route it on the driver and
+            # let one scan_topk pass serve every query over its probed
+            # cells (nprobe >= nlist: every cell, no routing at all)
+            qtbl = queries.select(query_id, query_vec, *ip).toArrow()
+            corpus_side, probe = self.indexed, None
+            if nprobe < self._nlist():
+                cells = self._cell_order(qtbl.column(query_vec))[:, :nprobe]
+                # explicit isin → parquet PartitionFilters on a written
+                # index: guaranteed file-level pruning
                 corpus_side = corpus_side.filter(
-                    F.expr(where) if isinstance(where, str) else where
+                    F.col("centroid_id").isin(np.unique(cells).tolist())
                 )
-            if allowed is not None:
-                allow = allowed.select(
-                    F.col(allowed.columns[0]).alias(self.id_col)
-                ).distinct()
-                corpus_side = corpus_side.join(allow, self.id_col, "left_semi")
-            pairs = corpus_side.join(F.broadcast(q)).select(
-                F.col("__qid").alias(query_id),
-                F.col(self.id_col).alias("neighbor_id"),
-                sq_l2_distance(F.col("__qvec"), F.col(self.vec_col)).alias(
-                    "__rdist"
-                ),
-                *(
-                    (F.col("__qnorm"),)
-                    if self.metric == "inner_product"
-                    else ()
-                ),
+                probe = ("centroid_id", cells)
+            cands = scan_topk(
+                qtbl, self._filtered(corpus_side, where, allowed), k,
+                query_id=query_id, query_vec=query_vec,
+                corpus_id=self.id_col, corpus_vec=self.vec_col, probe=probe,
             )
-            return self._rank_and_report(pairs, k, query_id)
+            return self._rank_and_report(cands, k, query_id)
 
+        q = queries.select(
+            F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec"), *ip
+        )
         qc = (
             q.crossJoin(F.broadcast(self.centroids))
             .withColumn("__cdist", sq_l2_distance(F.col("__qvec"), F.col("centroid")))
@@ -616,55 +594,24 @@ class IVFIndex:
                 ),
             )
             .filter(F.col("__crank") <= nprobe)
-            .select(
-                "__qid", "__qvec", "centroid_id",
-                *(("__qnorm",) if self.metric == "inner_product" else ()),
-            )
+            .select("__qid", "__qvec", "centroid_id", *ip)
         )
         # Static cell pruning: the probed-cell set is tiny (≤ Q×nprobe ids,
         # one metadata-scale collect), and an explicit isin filter turns
         # into parquet PartitionFilters on a written index — guaranteed
         # file-level pruning, not dependent on dynamic partition pruning.
         probed = [r[0] for r in qc.select("centroid_id").distinct().collect()]
-        corpus_side = self.indexed.filter(F.col("centroid_id").isin(probed))
-        if where is not None:
-            corpus_side = corpus_side.filter(
-                F.expr(where) if isinstance(where, str) else where
-            )
-        if allowed is not None:
-            allow = allowed.select(
-                F.col(allowed.columns[0]).alias(self.id_col)
-            ).distinct()
-            corpus_side = corpus_side.join(allow, self.id_col, "left_semi")
-
-        qc_side = F.broadcast(qc) if route == "broadcast" else qc
-        pairs = corpus_side.join(qc_side, "centroid_id").select(
+        corpus_side = self._filtered(
+            self.indexed.filter(F.col("centroid_id").isin(probed)), where, allowed
+        )
+        pairs = corpus_side.join(qc, "centroid_id").select(
             F.col("__qid").alias(query_id),
             F.col(self.id_col).alias("neighbor_id"),
             sq_l2_distance(F.col("__qvec"), F.col(self.vec_col)).alias("__rdist"),
-            *(
-                (F.col("__qnorm"),)
-                if self.metric == "inner_product"
-                else ()
-            ),
+            *ip,
         )
-        return self._rank_and_report(pairs, k, query_id)
-
-    def _nlist(self) -> int:
-        """Centroid count, memoized per instance — one tiny metadata
-        count, paid once; centroids are immutable under append()."""
-        if getattr(self, "_nlist_memo", None) is None:
-            self._nlist_memo = self.centroids.count()
-        return self._nlist_memo
-
-    def _rank_and_report(
-        self, pairs: DataFrame, k: int, query_id: str
-    ) -> DataFrame:
-        """Shared search tail: two-phase per-query top-k over the
-        (query, neighbor, __rdist) pair stream + conversion of the l2
-        ranking value back to the index metric's reported dist."""
-        # partial top-k per (query, scan partition) — same skew guard as
-        # topk.knn_join: the final per-query window sees ≤ P×k rows
+        # partial top-k per (query, scan partition): the final per-query
+        # window sees ≤ P×k rows
         w1 = Window.partitionBy(query_id, "__pid").orderBy(
             F.col("__rdist").asc(), F.col("neighbor_id").asc()
         )
@@ -674,6 +621,75 @@ class IVFIndex:
             .filter(F.col("__lrank") <= k)
             .drop("__pid", "__lrank")
         )
+        return self._rank_and_report(pairs, k, query_id)
+
+    def _index_queries(self, queries: DataFrame, query_vec: str) -> DataFrame:
+        """Queries in the index's l2 space: cosine unit-normalizes them
+        (over unit vectors the l2 walk IS the cosine ranking, and dist
+        converts exactly: ||u-v||^2 / 2 = 1 - cos); inner_product carries
+        ||q||^2 as ``__qnorm`` (the conversion back to -<x,q> needs it)
+        and appends the MIPS 0 slack coordinate."""
+        if self.metric == "cosine":
+            from chatbot_spark.functions.vector import normalize
+
+            return queries.withColumn(query_vec, normalize(F.col(query_vec)))
+        if self.metric == "inner_product":
+            from chatbot_spark.functions.vector import (
+                dot_product,
+                mips_augment_query,
+            )
+
+            return queries.withColumn(
+                "__qnorm", dot_product(F.col(query_vec), F.col(query_vec))
+            ).withColumn(query_vec, mips_augment_query(F.col(query_vec)))
+        return queries
+
+    def _cell_order(self, qvecs) -> "np.ndarray":
+        """(Q, nlist) centroid ids of every query's cells in probe order —
+        ascending (sq_l2 dist, centroid_id), null dist first, computed
+        on the driver with the search's own distance fold. The one IVF
+        routing every broadcast search and the nprobe calibration share."""
+        if getattr(self, "_centers_memo", None) is None:
+            self._centers_memo = self.centroids.select(
+                "centroid_id", "centroid"
+            ).toArrow()
+        ctbl = self._centers_memo
+        cids = ctbl.column("centroid_id").to_numpy().astype(np.int64)
+        C, clen, cok = vector_matrix(ctbl.column("centroid"))
+        Q, qlen, qok = vector_matrix(qvecs)
+        D, valid = pair_distances(
+            "sq_l2", np.ascontiguousarray(Q.T), qlen, qok,
+            np.ascontiguousarray(C.T), clen, cok,
+        )
+        cls, key = order_keys(D, valid)
+        ids = np.broadcast_to(cids, D.shape)
+        return np.take_along_axis(ids, np.lexsort((ids, key, cls), axis=1), axis=1)
+
+    def _filtered(self, corpus_side: DataFrame, where, allowed) -> DataFrame:
+        if where is not None:
+            corpus_side = corpus_side.filter(
+                F.expr(where) if isinstance(where, str) else where
+            )
+        if allowed is not None:
+            allow = allowed.select(
+                F.col(allowed.columns[0]).alias(self.id_col)
+            ).distinct()
+            corpus_side = corpus_side.join(allow, self.id_col, "left_semi")
+        return corpus_side
+
+    def _nlist(self) -> int:
+        """Centroid count, memoized per instance — one tiny metadata
+        count, paid once; centroids are immutable under append()."""
+        if getattr(self, "_nlist_memo", None) is None:
+            self._nlist_memo = self.centroids.count()
+        return self._nlist_memo
+
+    def _rank_and_report(
+        self, cands: DataFrame, k: int, query_id: str
+    ) -> DataFrame:
+        """Shared search tail: final per-query top-k over the partial
+        (query, neighbor, __rdist) candidates + conversion of the l2
+        ranking value back to the index metric's reported dist."""
         w = Window.partitionBy(query_id).orderBy(F.col("__rdist").asc(), F.col("neighbor_id").asc())
         if self.metric == "cosine":
             reported = F.col("__rdist") / 2
@@ -686,7 +702,7 @@ class IVFIndex:
         else:
             reported = F.sqrt("__rdist")
         return (
-            pairs.withColumn("rank", F.row_number().over(w))
+            cands.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .withColumn("dist", reported)
             .drop("__rdist", *(

@@ -1132,7 +1132,7 @@ class NSWGraphIndex:
         when the requested search IS the exact scan — every shard probed
         (nprobe ≥ nshards) and a whole-shard beam (ef_search ≥ max shard
         size) on the broadcast route — the per-shard Python beam walk
-        computes exactly the broadcast-query JVM scan, row for row. The
+        computes exactly the exact scan (topk.scan_topk), row for row. The
         bit-equality argument is dim-bounded: the kernel's numpy float64
         sums are sequential (the same left fold as functions/vector)
         only at dim ≤ 128 (numpy's pairwise-summation block); above
@@ -1145,9 +1145,9 @@ class NSWGraphIndex:
         rather than a guard, keeping the fast path at high dim. The
         fast path runs the scan instead: tombstones and
         the allowed mask become plain emission filters (routing is
-        irrelevant when every node is visited), queries broadcast-join
-        without ever touching the driver. Pass False to certify the walk
-        machinery itself (the graph_knn_* pins do).
+        irrelevant when every node is visited), and the batch is
+        collected once, as the broadcast walk collects it. Pass False to
+        certify the walk machinery itself (the graph_knn_* pins do).
 
         ef_search is the beam width (reference default EF_SEARCH=64) —
         recall rises monotonically with it; ef_search ≥ shard size walks
@@ -1225,13 +1225,14 @@ class NSWGraphIndex:
             and nprobe >= len(c)
             and ef >= self._max_shard_rows()
         ):
-            # contract consistency with the walk paths (r11 ADVICE): both
-            # routes raise on an empty query batch, and this probe is
-            # strictly cheaper than the broadcast walk's full collect
-            if queries.isEmpty():
-                raise ValueError("empty query set")
-            from chatbot_spark.functions.vector import sq_l2_distance
+            # one scan_topk pass over the emitting rows; the batch is
+            # collected once, and an empty one raises like the walk
+            # routes do (r11 ADVICE)
+            from chatbot_spark.operators.topk import scan_topk
 
+            qtbl = queries.select(query_id, query_vec).toArrow()
+            if qtbl.num_rows == 0:
+                raise ValueError("empty query set")
             src = self.graph.select(id_col, vec_col)
             if self.tombstones:
                 src = src.filter(~F.col(id_col).isin(list(self.tombstones)))
@@ -1240,28 +1241,9 @@ class NSWGraphIndex:
                     F.col(allowed.columns[0]).alias(id_col)
                 ).distinct()
                 src = src.join(allow, id_col, "left_semi")
-            q = queries.select(
-                F.col(query_id).alias("__qid"),
-                F.col(query_vec).cast("array<double>").alias("__qvec"),
-            )
-            pairs = src.join(F.broadcast(q)).select(
-                F.col("__qid").alias(query_id),
-                F.col(id_col).alias("neighbor_id"),
-                sq_l2_distance(F.col("__qvec"), F.col(vec_col)).alias(
-                    "__rdist"
-                ),
-            )
-            # partial per-(query, scan-partition) top-k: the final window
-            # then sees ≤ P×k rows per query, same skew guard as the walk
-            # path's per-shard k-cap
-            w1 = Window.partitionBy(query_id, "__pid").orderBy(
-                F.col("__rdist").asc(), F.col("neighbor_id").asc()
-            )
-            cands = (
-                pairs.withColumn("__pid", F.spark_partition_id())
-                .withColumn("__lrank", F.row_number().over(w1))
-                .filter(F.col("__lrank") <= k)
-                .drop("__pid", "__lrank")
+            cands = scan_topk(
+                qtbl, src, k, query_id=query_id, query_vec=query_vec,
+                corpus_id=id_col, corpus_vec=vec_col,
             )
             return self._report_topk(cands, queries, k, query_id, query_vec)
         qid_field = queries.schema[query_id]

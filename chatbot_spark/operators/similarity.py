@@ -32,7 +32,7 @@ def cosine_topk_join(
     """Top-k most-similar corpus rows per query under cosine similarity.
     Output: (query_id, neighbor_id, rank, sim).
 
-    ``two_phase`` mirrors topk.knn_join: partial top-k per (query,
+    ``two_phase``: partial top-k per (query,
     scan-partition) first, so the per-query window never sees a Q-hot
     group at scale; output is bit-identical."""
     q = queries_df.select(F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec"))

@@ -20,6 +20,7 @@ gating (rag_graph.py:365-417).
 from __future__ import annotations
 
 import weakref
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -34,8 +35,11 @@ from chatbot_spark.operators.rerank import (
 )
 from chatbot_spark.operators.topk import (
     DEFAULT_SEARCH_LIMIT,
+    _rank_metric,
+    final_topk,
     knn_join,
     per_component_quota,
+    scan_topk,
 )
 
 
@@ -68,6 +72,9 @@ DEFAULT_FILTER_BRUTE_THRESHOLD = 100_000
 # CACHE-TAINTED — the bench persisted an identical plan before timing;
 # fixed in r11, honest full-probe cost is 12 s vs calibrated-pruned
 # 6–7 s, i.e. pruned probing genuinely pays at low fractions.)
+# The crossover was measured while the broadcast route still routed with
+# a Spark centroid window + collect; routing is now a driver-side fold over
+# the collected batch, so re-measure before moving the cutover.
 PROBE_FRACTION_CUTOVER = 0.9
 
 
@@ -350,61 +357,41 @@ def _calibrate_nprobe_ivf_histogram(
     index, sample_queries: DataFrame, slo: float, k: int, nlist: int,
     **search_kwargs,
 ) -> int:
-    """See calibrate_nprobe — the one-search IVF path. The cell ranking
-    replicates IVFIndex.search's routing expression exactly (same
-    sq_l2_distance fold over the metric-transformed query, same
-    (dist, centroid_id) tie-break), so the derived widths probe the
-    same cells the real search will."""
-    from chatbot_spark.functions.vector import (
-        mips_augment_query,
-        normalize,
-        sq_l2_distance,
-    )
+    """See calibrate_nprobe — the one-search IVF path: the minimal width
+    whose cumulative cell-rank histogram reaches ``slo``."""
+    ranks = _exact_cell_ranks(index, sample_queries, k, **search_kwargs)
+    if not ranks:
+        return nlist
+    hist = Counter(ranks)
+    cum = 0
+    for r in sorted(hist):
+        cum += hist[r]
+        if cum / len(ranks) >= slo:
+            return r
+    return nlist
 
+
+def _exact_cell_ranks(
+    index, sample_queries: DataFrame, k: int, **search_kwargs
+) -> list[int]:
+    """For every row of the full-probe (≡ exact) top-k, the probe rank
+    (1-based) of its cell for its query — from IVFIndex._cell_order, the
+    routing the search itself probes with, so a width-p search recalls
+    exactly the rows of rank ≤ p."""
     qid = search_kwargs.get("query_id", "query_id")
     qv = search_kwargs.get("query_vec", "query_embedding")
-    exact = index.search(sample_queries, k=k, nprobe=nlist, **search_kwargs)
-    q = sample_queries
-    if index.metric == "cosine":
-        q = q.withColumn(qv, normalize(F.col(qv)))
-    elif index.metric == "inner_product":
-        q = q.withColumn(qv, mips_augment_query(F.col(qv)))
-    crank = (
-        q.select(F.col(qid), F.col(qv).alias("__qvec"))
-        .crossJoin(F.broadcast(index.centroids.select("centroid_id", "centroid")))
-        .withColumn(
-            "__cdist", sq_l2_distance(F.col("__qvec"), F.col("centroid"))
-        )
-        .withColumn(
-            "__crank",
-            F.row_number().over(
-                Window.partitionBy(qid).orderBy(
-                    F.col("__cdist").asc(), F.col("centroid_id").asc()
-                )
-            ),
-        )
-        .select(qid, "centroid_id", "__crank")
-    )
+    exact = index.search(sample_queries, k=k, nprobe=index._nlist(), **search_kwargs)
+    qtbl = index._index_queries(sample_queries, qv).select(qid, qv).toArrow()
+    order = index._cell_order(qtbl.column(qv))
+    crank = {
+        q: {int(c): r + 1 for r, c in enumerate(row)}
+        for q, row in zip(qtbl.column(qid).to_pylist(), order)
+    }
     cells = index.indexed.select(
         F.col(index.id_col).alias("neighbor_id"), "centroid_id"
     )
-    hist = (
-        exact.select(qid, "neighbor_id")
-        .join(cells, "neighbor_id")
-        .join(crank, [qid, "centroid_id"])
-        .groupBy("__crank")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    total = sum(r["n"] for r in hist)
-    if total == 0:
-        return nlist
-    cum = 0
-    for r in sorted(hist, key=lambda r: r["__crank"]):
-        cum += r["n"]
-        if cum / total >= slo:
-            return int(r["__crank"])
-    return nlist
+    hits = exact.select(qid, "neighbor_id").join(cells, "neighbor_id")
+    return [crank[r[0]][r[1]] for r in hits.select(qid, "centroid_id").collect()]
 
 
 def _memo_count(corpus: DataFrame, key: str, compute) -> int:
@@ -767,29 +754,15 @@ def _routed_universal_planned(
 def _per_component_topk(
     queries_df: DataFrame, corpus: DataFrame, k: int, metric: str, codes: list[int] | None
 ) -> DataFrame:
-    from chatbot_spark.functions.vector import sq_l2_distance
-
+    """Top-k per (query, component) under ``metric`` — one scan_topk pass
+    grouped by component_code, then the (query, component) window."""
     if codes is not None:
         corpus = corpus.filter(F.col("component_code").isin(codes))  # B2 pruning
-    q = queries_df.select(
-        F.col("query_id").alias("__qid"), F.col("query_embedding").alias("__qvec")
+    cands = scan_topk(
+        queries_df, corpus, k, _rank_metric(metric), group="component_code",
+        extra_cols=["document"],
     )
-    pairs = corpus.join(F.broadcast(q)).select(
-        F.col("__qid").alias("query_id"),
-        F.col("component_code"),
-        F.col("id").alias("neighbor_id"),
-        F.col("document"),
-        sq_l2_distance(F.col("__qvec"), F.col("embedding")).alias("__rd"),
-    )
-    w = Window.partitionBy("query_id", "component_code").orderBy(
-        F.col("__rd").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("dist", F.sqrt("__rd"))
-        .drop("__rd")
-    )
+    return final_topk(cands, k, metric, ["query_id", "component_code"])
 
 
 def reference_list(results: DataFrame, url_expr=None) -> DataFrame:

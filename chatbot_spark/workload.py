@@ -9431,8 +9431,11 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-aggregated. Same integer outputs row-for-row: docs under 8
     # tokens drop on both forms (explode of an empty array ⟷ the
     # n_shingles >= 1 filter), and every (doc, count) is unchanged.
-    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = docs.select(
+    # doc_id is assumed unique per documents row (the testdata key): base
+    # emits one row per document, where the oracle's GROUP BY doc_id would
+    # merge duplicate ids into one row.
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    sh = spread(docs).select(
         "doc_id",
         F.explode(
             let(
@@ -9453,21 +9456,23 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").cast("long").alias("n_unique"))
     )
+    # base is a per-row map: no spread. n_shingles is tokenized once —
+    # exploding the one-element array filtered on n >= 1 drops short docs
+    # without a Filter that Catalyst would inline the regexp into
+    n_shingles = F.greatest(F.size(tokens(F.col("text"))) - 7, F.lit(0))
     base = docs.select(
         "doc_id",
-        F.greatest(F.size(tokens(F.col("text"))) - 7, F.lit(0))
-        .cast("long")
+        F.explode(F.filter(F.array(n_shingles.cast("long")), lambda n: n >= 1))
         .alias("n_shingles"),
-    ).filter(F.col("n_shingles") >= 1)
+    )
     return (
         base.join(uniq, "doc_id", "left")
+        .withColumn("n_unique", F.coalesce("n_unique", F.lit(0)).cast("long"))
         .select(
             "doc_id",
             "n_shingles",
-            F.coalesce("n_unique", F.lit(0)).cast("long").alias("n_unique"),
-            F.expr(
-                "coalesce(n_unique, 0) * 1000 div n_shingles"
-            ).alias("novelty_milli"),
+            "n_unique",
+            F.expr("n_unique * 1000 div n_shingles").alias("novelty_milli"),
         )
     )
 

@@ -14,7 +14,7 @@ Pairs measured (each: warm run, then a timed run on a fresh lineage):
    pushdown DISABLED vs ENABLED (the engine default). With it disabled,
    3 reducer tasks sort half the table each; enabled, every scan task
    emits only its local top-10 before the shuffle — the same partial
-   top-k idea topk.knn_join's two_phase spells out manually for plans
+   top-k idea topk.scan_topk applies inside its scan kernel for plans
    the optimizer rule doesn't cover.
 
 Aggregation skew is intentionally NOT in the pairs: for algebraic aggs
