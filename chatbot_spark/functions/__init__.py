@@ -34,9 +34,9 @@ def register_sql_functions(spark, dim: int = 64):
     from pyspark.sql.functions import pandas_udf
 
     from chatbot_spark.operators.chunking import markdown_header_split
-    from chatbot_spark.operators.embed import make_hash_embedder
+    from chatbot_spark.operators.embed import get_embedder
 
-    spark.udf.register("embed_text", make_hash_embedder(dim))
+    spark.udf.register("embed_text", get_embedder("hash", dim=dim))
     spark.udf.register("md_header_split", markdown_header_split)
 
     import hashlib

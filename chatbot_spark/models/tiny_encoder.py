@@ -146,10 +146,7 @@ def make_tiny_encoder_embedder(model_name: str = "tiny-v1", dim: int = 64):
     the REAL-model serving pattern, executed — the closure ships only the
     model identity; each executor materializes the weights once (lazy
     singleton) and runs batched vectorized inference per Arrow batch."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         if not hasattr(embed, "_model"):  # lazy per-executor singleton
             embed._model = TinyEncoder(model_name, dim)

@@ -11,10 +11,22 @@ Reference semantics (src/rag/doc_processing.py):
    (doc_processing.py:112-132).
  * H4 setext→ATX rewrite: ``Title\\n====`` → ``# Title`` (convert_headings.py:18-19).
 
-Spark-first: H2/H3/H4 are pure Catalyst expressions (sequence/transform/
-explode, regexp) — JVM codegen, no Python. H1 (stateful header-stack walk)
-is an Arrow-batched pandas UDF returning ARRAY<STRUCT> that we explode;
-one pass per document, parallel over files.
+Plan shape: ``split_documents`` crosses into Python once per task. The
+H3 filename (``regexp_extract``) is a Catalyst expression in the Project
+under it (ingest's H4 ``setext_to_atx`` lands in the same Project); then
+one ``mapInArrow`` (:func:`_chunk_kernel`) runs,
+per Arrow batch of documents, the H1 header-stack walk, the H3 titles, the
+H2 slices and ``chunk_seq``, and — when given ``embed=``, a batch function
+from ``operators.embed.get_embed_fn`` — embeds each output batch's texts:
+
+    Project [text, keep..., regexp_extract(url) AS __filename]
+      -> MapInArrow _chunk_kernel -> keep... + chunk columns [+ embedding]
+
+No Generate, Window or Exchange. ``chunk_seq`` numbers the chunks of each
+input row from 0; that equals per-URL numbering when URLs are unique, as
+:func:`scan_markdown_dir` makes them. ``subchunk`` (H2 alone) stays a pure
+Catalyst builtin chain, and SQL ``md_header_split`` the
+``markdown_header_split`` pandas UDF.
 """
 
 from __future__ import annotations
@@ -22,7 +34,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -89,46 +101,102 @@ def markdown_header_split(texts: pd.Series) -> pd.Series:
     return texts.map(_split_markdown)
 
 
+_CHUNK_FIELDS = [
+    T.StructField("headers", T.ArrayType(T.StringType())),
+    T.StructField("chunk_title", T.StringType()),
+    T.StructField("enhanced_title", T.StringType()),
+    T.StructField("doc_name", T.StringType()),
+    T.StructField("document", T.StringType()),
+    T.StructField("chunk_seq", T.IntegerType()),
+]
+_EMBEDDING_FIELD = T.StructField("embedding", T.ArrayType(T.FloatType()))
+
+
 def split_documents(
     df: DataFrame,
     text_col: str = "text",
     url_col: str = "doc_url",
     max_chunk_size: int = MAX_CHUNK_SIZE,
+    embed=None,
 ) -> DataFrame:
     """Full reference chunking pipeline: header split (H1) → title metadata
-    (H3) → fixed-size sub-chunk (H2). One row in → N chunk rows out.
+    (H3) → fixed-size sub-chunk (H2), as one ``mapInArrow`` over
+    :func:`_chunk_kernel`. One row in → N chunk rows out; a null or blank
+    ``text_col`` gives none.
 
-    Output: original cols + (headers, chunk_title, enhanced_title, doc_name,
-    chunk_seq, document).
+    ``embed``: optional batch function ``texts: pd.Series -> pd.Series``
+    (``operators.embed.get_embed_fn``); when given, the same pass embeds
+    each output batch's ``document`` texts into ``embedding``
+    ARRAY<FLOAT>.
+
+    Output: the input columns except ``text_col`` + (headers, chunk_title,
+    enhanced_title, doc_name, document, chunk_seq[, embedding]).
     """
-    exploded = (
-        df.withColumn("__chunks", markdown_header_split(F.col(text_col)))
-        .select("*", F.posexplode("__chunks").alias("__hseq", "__chunk"))
-        .drop("__chunks")
-        .withColumn("headers", F.col("__chunk.headers"))
-        .withColumn("__content", F.col("__chunk.content"))
-        .drop("__chunk")
-    )
-    # H3 title metadata (reference doc_processing.py:112-132)
+    new = _CHUNK_FIELDS + ([_EMBEDDING_FIELD] if embed is not None else [])
+    names = {text_col} | {f.name for f in new}
+    keep = [f for f in df.schema.fields if f.name not in names]
+    schema = T.StructType(keep + new)
+    max_rows = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    # the H3 filename fallback stays Spark's own regexp_extract
     filename = F.regexp_extract(F.col(url_col), r"([^/]+?)(\.mdx?)?$", 1)
-    titled = (
-        exploded.withColumn("chunk_title", F.coalesce(F.try_element_at("headers", F.lit(-1)), filename))
-        .withColumn(
-            "enhanced_title",
-            F.when(F.size("headers") > 0, F.array_join("headers", " -> ")).otherwise(filename),
+    kernel = _chunk_kernel(
+        text_col, [f.name for f in keep], max_chunk_size, embed, max_rows, schema
+    )
+    return df.withColumn("__filename", filename).mapInArrow(kernel, schema)
+
+
+def _chunk_kernel(text_col, keep, max_chunk_size, embed, max_rows, schema):
+    """The mapInArrow function of :func:`split_documents`: per Arrow batch
+    of documents, the H1 walk, the H3 titles and the H2 slices, then (with
+    ``embed``) one embed call per output batch. Streams: output batches
+    hold at most ``max_rows`` rows (no cap when ``max_rows`` ≤ 0) and only
+    the rows not yet emitted are buffered."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    fields = [arrow.field(f.name) for f in _CHUNK_FIELDS]
+    emb_type = arrow.field(_EMBEDDING_FIELD.name).type if embed is not None else None
+
+    def chunk(batch):
+        """One batch of documents -> a Table of its chunks: the kept
+        columns of each chunk's row, then the chunk columns."""
+        src, rows = [], []
+        texts = batch.column(text_col).to_pylist()
+        fnames = batch.column("__filename").to_pylist()
+        for i, (text, fname) in enumerate(zip(texts, fnames)):
+            first = len(rows)
+            for sec in _split_markdown(text):
+                h, content = sec["headers"], sec["content"]
+                titles = (h[-1], " -> ".join(h), h[0]) if h else (fname,) * 3
+                for lo in range(0, len(content), max_chunk_size):
+                    rows.append((h, *titles, content[lo : lo + max_chunk_size], len(rows) - first))
+                    src.append(i)
+        cols = list(zip(*rows)) if rows else [[]] * len(fields)
+        kept = batch.select(keep).take(pa.array(src, pa.int64()))
+        return pa.Table.from_arrays(
+            kept.columns + [pa.array(c, f.type) for c, f in zip(cols, fields)],
+            schema=pa.schema(list(kept.schema) + fields),
         )
-        .withColumn("doc_name", F.coalesce(F.try_element_at("headers", F.lit(1)), filename))
-    )
-    # H2 sub-chunking — pure builtins, lossless contiguous slices
-    sub = subchunk(titled, "__content", max_chunk_size, seq_col="__sub_seq", out_col="document")
-    w_seq = (
-        F.row_number().over(Window.partitionBy(url_col).orderBy("__hseq", "__sub_seq"))
-        - 1
-    )
-    return (
-        sub.withColumn("chunk_seq", w_seq.cast("int"))
-        .drop("__hseq", "__sub_seq", "__content")
-    )
+
+    def emit(t):
+        if embed is not None:
+            vecs = embed(t.column("document").to_pandas())
+            t = t.append_column(_EMBEDDING_FIELD.name, pa.array(list(vecs), emb_type))
+        yield from t.combine_chunks().to_batches()
+
+    def kernel(batches):
+        buf = None
+        for batch in batches:
+            t = chunk(batch)
+            buf = t if buf is None else pa.concat_tables([buf, t])
+            while 0 < max_rows <= buf.num_rows:
+                yield from emit(buf.slice(0, max_rows))
+                buf = buf.slice(max_rows)
+        if buf is not None and buf.num_rows:
+            yield from emit(buf)
+
+    return kernel
 
 
 def subchunk(

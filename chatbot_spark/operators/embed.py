@@ -19,8 +19,16 @@ config.py:270-274 — default / ollama / openai — plus its BGE-M3 model):
                plumbing (lazy per-executor singleton, Arrow batching) in
                place.
 
+Each backend factory in ``BACKENDS`` builds a plain batch function
+``texts: pd.Series -> pd.Series`` (one list of floats per text), returned
+by :func:`get_embed_fn`. :func:`get_embedder` wraps that same function in
+an ARRAY<FLOAT> pandas UDF, which ``embed_documents``, ``embed_queries``
+and the SQL ``embed_text`` apply. Ingest passes the plain function to
+``chunking.split_documents(embed=...)`` instead, so chunking and
+embedding share one Python pass per task.
+
 Scale notes: the reference embeds with batch_size=1 (bge.py:204) — a
-per-row HTTP/model call. Here embedding is an Arrow-batched pandas UDF:
+per-row HTTP/model call. Here embedding runs once per Arrow batch:
 whole Arrow record batches cross the Python boundary at once, the model is
 a per-executor lazy singleton, and batches parallelize across executors.
 """
@@ -62,9 +70,8 @@ def hash_embed_one(text: str, dim: int) -> list[float]:
 
 
 def make_hash_embedder(dim: int = DEFAULT_DIM):
-    """Arrow-batched deterministic embedder UDF (backend="hash")."""
+    """Deterministic batch embedder (backend="hash")."""
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: hash_embed_one(t, dim))
 
@@ -74,11 +81,10 @@ def make_hash_embedder(dim: int = DEFAULT_DIM):
 def make_sentence_transformers_embedder(model_name: str = "all-MiniLM-L6-v2"):
     """Real-model backend (reference default backend, README.md:204-210).
 
-    The model libs are not in this container — the UDF raises on first use,
-    but the Spark plumbing (lazy per-executor singleton + Arrow batches) is
-    the production pattern and is exercised by the hash backend."""
+    The model libs are not in this container — the function raises on
+    first use, but the Spark plumbing (lazy per-executor singleton + Arrow
+    batches) is the production pattern and is exercised by the hash backend."""
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         try:
             from sentence_transformers import SentenceTransformer  # noqa: F401
@@ -110,10 +116,9 @@ def make_openai_embedder(
     batching per Arrow record batch is the 100 TB shape (thousands of
     texts per HTTP round-trip, batches parallel across executors). Built
     on stdlib urllib so no client library is required; without an
-    endpoint configured (or network in this container) the UDF raises at
-    first use with the plumbing intact."""
+    endpoint configured (or network in this container) the function raises
+    at first use with the plumbing intact."""
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         import json
         import urllib.request
@@ -154,7 +159,6 @@ def make_ollama_embedder(
     mirror DEFAULT_OLLAMA_BASE_URL / DEFAULT_OLLAMA_MODEL). Uses the
     batched ``/api/embed`` endpoint — one POST per Arrow batch."""
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         import json
         import urllib.request
@@ -183,7 +187,6 @@ def make_bge_embedder(model_name: str = "BAAI/bge-m3"):
     FlagEmbedding isn't in this container — gated like the reference gates
     its model deps."""
 
-    @pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
         try:
             from FlagEmbedding import BGEM3FlagModel  # noqa: F401
@@ -222,12 +225,19 @@ BACKENDS = {
 }
 
 
-def get_embedder(backend: str = "hash", **kwargs):
-    """Mirror of the reference's EMBEDDED_TYPE-keyed factory
+def get_embed_fn(backend: str = "hash", **kwargs):
+    """The backend's plain batch function ``texts: pd.Series -> pd.Series``
+    — mirror of the reference's EMBEDDED_TYPE-keyed factory
     (embedding/base.py:21-66, config.py:270-274)."""
     if backend not in BACKENDS:
         raise ValueError(f"unknown embedding backend {backend!r}; have {sorted(BACKENDS)}")
     return BACKENDS[backend](**kwargs)
+
+
+def get_embedder(backend: str = "hash", **kwargs):
+    """:func:`get_embed_fn` wrapped as an Arrow-batched ARRAY<FLOAT>
+    pandas UDF."""
+    return pandas_udf(get_embed_fn(backend, **kwargs), T.ArrayType(T.FloatType()))
 
 
 def embed_documents(

@@ -7,8 +7,13 @@ into the LIST partition (embed_docs.py / doc_embedder.py:116-168, 90-114).
 Client-side batching (64/4/100-row batches) is a JDBC artifact — Spark's
 task parallelism replaces it; the limit is honored pre-embed.
 
-One job: scan → setext rewrite → header split → sub-chunk → titles →
-embed (Arrow-batched) → uuid ids → component join → partitioned write.
+One job, one Python pass per task: scan → setext rewrite (Catalyst) →
+``split_documents(..., embed=get_embed_fn(backend, dim=dim))``, a single
+``mapInArrow`` that header-splits, titles, sub-chunks and embeds each
+Arrow batch → uuid ids + metadata map (Catalyst) → partitioned write.
+Without ``output_path`` the executed plan is Project → MapInArrow →
+Project over the input: no Exchange, no ArrowEvalPython. The read-back
+after a write reuses the corpus schema, so no schema-inference job runs.
 """
 
 from __future__ import annotations
@@ -29,7 +34,9 @@ from chatbot_spark.operators.chunking import (
     setext_to_atx,
     split_documents,
 )
-from chatbot_spark.operators.embed import embed_documents
+# embed_documents stays importable from this module: tracing harnesses
+# patch ``split_documents`` and ``embed_documents`` here by name.
+from chatbot_spark.operators.embed import embed_documents, get_embed_fn  # noqa: F401
 
 
 # --------------------------------------------------------------- A6-A8
@@ -149,9 +156,9 @@ def ingest_documents(
     """Chunk + embed + id a documents DataFrame into the corpus schema
     (SURVEY §1.3): (id, embedding, document, metadata, component_code)."""
     normalized = docs.withColumn(text_col, setext_to_atx(F.col(text_col)))
-    chunks = split_documents(normalized, text_col=text_col, url_col=url_col,
-                             max_chunk_size=max_chunk_size)
-    embedded = embed_documents(chunks, text_col="document", backend=backend, dim=dim)
+    embedded = split_documents(normalized, text_col=text_col, url_col=url_col,
+                               max_chunk_size=max_chunk_size,
+                               embed=get_embed_fn(backend, dim=dim))
     corpus = embedded.select(
         F.expr("uuid()").alias("id"),  # H7 (doc_embedder.py:110)
         F.col("embedding"),
@@ -170,7 +177,7 @@ def ingest_documents(
     )
     if output_path:
         corpus.write.mode("append").partitionBy("component_code").parquet(output_path)
-        return corpus.sparkSession.read.parquet(output_path).filter(
+        return corpus.sparkSession.read.schema(corpus.schema).parquet(output_path).filter(
             F.col("component_code") == component_code
         )
     return corpus

@@ -770,7 +770,7 @@ def test_calibrate_nprobe_on_zipf_text_embeddings(spark):
     and the calibration is doing WORK (picks neither blind extreme on
     this corpus shape)."""
     from chatbot_spark.operators.ann import IVFIndex, recall_at_k
-    from chatbot_spark.operators.embed import make_hash_embedder
+    from chatbot_spark.operators.embed import get_embedder
     from chatbot_spark.plans.retrieve import calibrate_nprobe
     from chatbot_spark.workload import _ZIPF_TEXT_EXPR
 
@@ -778,7 +778,7 @@ def test_calibrate_nprobe_on_zipf_text_embeddings(spark):
         F.col("id").alias("doc_id"), F.expr(_ZIPF_TEXT_EXPR).alias("text")
     )
     emb = docs.select(
-        "doc_id", make_hash_embedder(16)(F.col("text")).alias("embedding")
+        "doc_id", get_embedder("hash", dim=16)(F.col("text")).alias("embedding")
     ).persist()
     emb.count()
     nlist = 8

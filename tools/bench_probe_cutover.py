@@ -37,7 +37,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from chatbot_spark.operators.ann import IVFIndex
-    from chatbot_spark.operators.embed import make_hash_embedder
+    from chatbot_spark.operators.embed import get_embedder
     from chatbot_spark.session import get_spark
     from chatbot_spark.workload import _ZIPF_TEXT_EXPR
 
@@ -48,7 +48,7 @@ def main() -> int:
         F.col("id").alias("doc_id"), F.expr(_ZIPF_TEXT_EXPR).alias("text")
     )
     emb = docs.select(
-        "doc_id", make_hash_embedder(dim)(F.col("text")).alias("embedding")
+        "doc_id", get_embedder("hash", dim=dim)(F.col("text")).alias("embedding")
     ).persist()
     emb.count()
     index = IVFIndex.build(emb, vec_col="embedding", id_col="doc_id", nlist=nlist)
