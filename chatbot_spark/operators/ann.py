@@ -31,7 +31,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from chatbot_spark.functions.vector import sq_l2_distance
-from chatbot_spark.io.smallio import read_small_df, write_small_parquet
+from chatbot_spark.io.smallio import (
+    arrow_table,
+    local_df,
+    read_small_df,
+    write_small_parquet,
+)
 from chatbot_spark.operators.topk import (
     order_keys,
     pair_distances,
@@ -336,11 +341,17 @@ class IVFIndex:
             indexed = corpus.withColumn(
                 "centroid_id", _assign_cells(F.col(vec_col), centers_np)
             )
-        centroids = corpus.sparkSession.createDataFrame(
+        ctbl = arrow_table(
             list(enumerate(centers)), "centroid_id INT, centroid ARRAY<DOUBLE>"
         )
-        out = cls(centroids, indexed, vec_col, id_col, metric)
+        out = cls(
+            local_df(corpus.sparkSession, ctbl), indexed, vec_col, id_col, metric
+        )
         out.m2 = m2
+        # the fit produced the centroids driver-side: routing, _nlist()
+        # and write() read this table, never a Spark job
+        out._nlist_memo = ctbl.num_rows
+        out._centers_memo = ctbl
         return out
 
     def write(self, path: str) -> None:
@@ -354,7 +365,7 @@ class IVFIndex:
         # bounded; the numpy fit produced them) — the driver-side parquet
         # writer skips two ~0.7 s Spark write jobs per index (smallio)
         spark = self.centroids.sparkSession
-        write_small_parquet(spark, f"{path}/centroids", self.centroids.toArrow())
+        write_small_parquet(spark, f"{path}/centroids", self._centroid_table())
         write_small_parquet(spark, f"{path}/meta", _meta_table(self.metric, self.m2))
 
     def append(self, new_rows: DataFrame, path: str | None = None) -> "IVFIndex":
@@ -373,8 +384,9 @@ class IVFIndex:
         """
         import numpy as np
 
-        crows = sorted(self.centroids.collect(), key=lambda r: r["centroid_id"])
-        centers = np.array([r["centroid"] for r in crows], dtype=np.float64)
+        ctbl = self._centroid_table()
+        order = np.argsort(ctbl.column("centroid_id").to_numpy(), kind="stable")
+        centers = np.array(ctbl.column("centroid").to_pylist(), dtype=np.float64)[order]
         if self.metric == "cosine":
             from chatbot_spark.functions.vector import normalize
 
@@ -460,7 +472,7 @@ class IVFIndex:
                 spark = cents.sparkSession
                 cents_tbl = cents.toArrow()
                 write_small_parquet(spark, f"{path}/centroids", cents_tbl)
-                cents = spark.createDataFrame(cents_tbl)
+                cents = local_df(spark, cents_tbl)
         if path is not None:
             assigned.write.mode("append").partitionBy("centroid_id").parquet(
                 f"{path}/cells"
@@ -649,11 +661,7 @@ class IVFIndex:
         ascending (sq_l2 dist, centroid_id), null dist first, computed
         on the driver with the search's own distance fold. The one IVF
         routing every broadcast search and the nprobe calibration share."""
-        if getattr(self, "_centers_memo", None) is None:
-            self._centers_memo = self.centroids.select(
-                "centroid_id", "centroid"
-            ).toArrow()
-        ctbl = self._centers_memo
+        ctbl = self._centroid_table()
         cids = ctbl.column("centroid_id").to_numpy().astype(np.int64)
         C, clen, cok = vector_matrix(ctbl.column("centroid"))
         Q, qlen, qok = vector_matrix(qvecs)
@@ -676,6 +684,15 @@ class IVFIndex:
             ).distinct()
             corpus_side = corpus_side.join(allow, self.id_col, "left_semi")
         return corpus_side
+
+    def _centroid_table(self):
+        """The whole centroid table (every column, radius included) as a
+        driver-side Arrow table, memoized — build() and load() set it
+        with no job; otherwise one nlist-bounded collect. Centroids are
+        immutable per instance (append/with_cell_stats return new ones)."""
+        if getattr(self, "_centers_memo", None) is None:
+            self._centers_memo = self.centroids.toArrow()
+        return self._centers_memo
 
     def _nlist(self) -> int:
         """Centroid count, memoized per instance — one tiny metadata

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chatbot_spark.io.smallio import local_df
+
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(distinct word, count) — the compressed training table."""
@@ -577,8 +579,8 @@ def train_bpe_speculative(
         # pairs stop being speculated)
         spec_counts = dict(window)
         base_counts = pairs.select("a", "b", F.col("c").alias("base"))
-        win_df = spark.createDataFrame(
-            [(a, b) for a, b in window], "a STRING, b STRING"
+        win_df = local_df(
+            spark, [(a, b) for a, b in window], "a STRING, b STRING"
         ).withColumn("w", F.lit(1))
         while len(verified) < want:
             taken = [(a, b) for a, b, _ in verified]
@@ -719,6 +721,8 @@ def encoded_token_count(words: DataFrame) -> int:
 
 
 def merges_df(spark: SparkSession, merges) -> DataFrame:
-    return spark.createDataFrame(
-        merges, "round INT, left_sym STRING, right_sym STRING, merged STRING, weight LONG"
+    return local_df(
+        spark,
+        merges,
+        "round INT, left_sym STRING, right_sym STRING, merged STRING, weight LONG",
     )

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.io.smallio import local_df
 
 __all__ = [
     "apply_component_delta",
@@ -208,7 +209,7 @@ def connected_components(
             ev = np.searchsorted(nodes_arr, und_pdf["v"].to_numpy(dtype=np.int64))
             lbl = _solve_cc_numpy(nodes_arr, eu, ev, rounds, assert_converged)
             out = pd.DataFrame({"node": nodes_arr, "component": lbl})
-            return spark.createDataFrame(out, schema="node long, component long")
+            return local_df(spark, out, schema="node long, component long")
 
     # self-loops make every node its own neighbor: m(v) <= l(v) without
     # a separate carry-forward join
@@ -439,7 +440,7 @@ def _incremental_cc_numpy(
             "component": np.concatenate([carried, lbl[is_new]]),
         }
     )
-    return spark.createDataFrame(out, schema="node long, component long")
+    return local_df(spark, out, schema="node long, component long")
 
 
 DEFAULT_BROADCAST_NODE_ROWS = 1_000_000
@@ -675,7 +676,7 @@ def decremental_components_stored(
     rm_pairs = {(int(r["u"]), int(r["v"])) for r in rm}
     rm_ids = sorted({n for uv in rm_pairs for n in uv})
     if not rm_ids:
-        return spark.createDataFrame([], "node long, component long")
+        return local_df(spark, [], "node long, component long")
 
     def _py_bucket(i: int) -> int:
         return i % n_buckets if i >= 0 else -((-i) % n_buckets)

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.io.smallio import local_df
 from chatbot_spark.operators.textstats import fingerprint, let, tokens
 
 
@@ -632,8 +633,8 @@ def resolve_duplicate_clusters(
                 parent[hi] = lo
         out = [(x, find(x)) for x in parent]
         id_type = pairs.schema["id_a"].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            out, f"doc_id {id_type}, canonical_id {id_type}"
+        return local_df(
+            pairs.sparkSession, out, f"doc_id {id_type}, canonical_id {id_type}"
         )
 
     sym = edges.union(
@@ -1060,7 +1061,7 @@ def _duplicated_spans_sa_numpy(tk: DataFrame, w: int, id_col: str) -> DataFrame:
         }
     )
     if len(flat) == 0 or len(flat) < w:
-        return spark.createDataFrame(empty_spans)
+        return local_df(spark, empty_spans)
     enc = pc.dictionary_encode(flat)
     if isinstance(enc, pa.ChunkedArray):
         enc = enc.combine_chunks()
@@ -1072,14 +1073,14 @@ def _duplicated_spans_sa_numpy(tk: DataFrame, w: int, id_col: str) -> DataFrame:
     s_local = g - off[d]  # 0-based window start within its doc
     full = s_local <= ntoks[d] - w  # window stays inside one doc
     if not full.any():
-        return spark.createDataFrame(empty_spans)
+        return local_df(spark, empty_spans)
     wins = np.lib.stride_tricks.sliding_window_view(codes, w)[full]
     wv = np.ascontiguousarray(wins).view(f"V{4 * w}").ravel()
     _, inv, cnt = np.unique(wv, return_inverse=True, return_counts=True)
     dup = cnt[inv] > 1
     dd, ds = d[full][dup], (s_local[full][dup] + 1).astype(np.int32)  # 1-based
     if len(dd) == 0:
-        return spark.createDataFrame(empty_spans)
+        return local_df(spark, empty_spans)
     # island merge per doc (inputs are doc-major, s ascending)
     brk = np.empty(len(dd), dtype=bool)
     brk[0] = True
@@ -1093,7 +1094,7 @@ def _duplicated_spans_sa_numpy(tk: DataFrame, w: int, id_col: str) -> DataFrame:
             "span_end": pa.array(ds[ends] + np.int32(w - 1), pa.int32()),
         }
     )
-    return spark.createDataFrame(out)
+    return local_df(spark, out)
 
 
 def duplicated_spans_sa(

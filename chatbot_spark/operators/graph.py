@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.io.smallio import local_df
 
 __all__ = [
     "bfs_layers",
@@ -247,8 +248,9 @@ def _pagerank_numpy(
     ids = np.unique(np.concatenate([s, d])) if len(s) else np.empty(0, np.int64)
     n = len(ids)
     if n == 0:
-        return spark.createDataFrame(
-            pa.table({"node": pa.array([], node_type), "rank": pa.array([], pa.int64())})
+        return local_df(
+            spark,
+            pa.table({"node": pa.array([], node_type), "rank": pa.array([], pa.int64())}),
         )
     si, di = np.searchsorted(ids, s), np.searchsorted(ids, d)
     r0 = scale // n
@@ -277,7 +279,7 @@ def _pagerank_numpy(
             "rank": pa.array(rank, pa.int64()),
         }
     )
-    return spark.createDataFrame(out)
+    return local_df(spark, out)
 
 
 def triangle_count(
@@ -413,7 +415,7 @@ def peel_layers(
         .persist()
     )
     spark = edges.sparkSession
-    layers = spark.createDataFrame([], "node long, layer long")
+    layers = local_df(spark, [], "node long, layer long")
     retired = [e, nodes]
 
     # iterate() localCheckpoints each round's (edges, nodes, layers):
@@ -490,8 +492,8 @@ def bfs_layers(
         .persist()
     )
     spark = edges.sparkSession
-    frontier = spark.createDataFrame(
-        [(int(s),) for s in seeds], "node long"
+    frontier = local_df(
+        spark, [(int(s),) for s in seeds], "node long"
     ).distinct().localCheckpoint(eager=True)
     visited = frontier
     out = frontier.select("node", F.lit(0).cast("long").alias("dist"))
@@ -729,7 +731,7 @@ def lpa_communities(
             has, best = _lpa_best_numpy(eu, lab[ev], len(ids))
             lab = np.where(has, best, lab)
         out = pd.DataFrame({"node": ids, "label": lab})
-        return spark.createDataFrame(out, schema="node long, label long")
+        return local_df(spark, out, schema="node long, label long")
     nodes = und.select(F.col("u").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
     labels = iterate(labels, lambda lab, _i: _lpa_round(und, lab), rounds)
@@ -810,8 +812,8 @@ def lpa_with_history(
         lab = ids.copy()
         history = []
         for r in range(rounds + 1):
-            h = spark.createDataFrame(
-                pd.DataFrame({"node": ids, "label": lab}),
+            h = local_df(
+                spark, pd.DataFrame({"node": ids, "label": lab}),
                 schema="node long, label long",
             )
             # stash the local arrays so incremental_lpa's driver replay
@@ -1017,7 +1019,7 @@ def _incremental_lpa_numpy(
         in_rec = nxt
     if return_delta:
         out = pd.DataFrame({"node": all_ids[in_rec], "label": rmap[in_rec]})
-        return spark.createDataFrame(out, schema="node long, label long")
+        return local_df(spark, out, schema="node long, label long")
     h_has, h_map = hmaps[rounds]
     node_mask = np.zeros(n, dtype=bool)
     node_mask[eu] = True
@@ -1026,7 +1028,7 @@ def _incremental_lpa_numpy(
         return None
     final = np.where(in_rec, rmap, h_map)
     out = pd.DataFrame({"node": all_ids[node_mask], "label": final[node_mask]})
-    return spark.createDataFrame(out, schema="node long, label long")
+    return local_df(spark, out, schema="node long, label long")
 
 
 def _default_bucket(col, n_buckets: int):
@@ -1209,7 +1211,7 @@ def incremental_lpa_stored(
         pruned = df.filter(F.col("__bucket").isin(_bucket_ids(ids)))
         if len(ids) <= 1024:
             return pruned.filter(F.col(id_col).isin([int(i) for i in ids]))
-        id_df = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
+        id_df = local_df(spark, [(int(i),) for i in ids], f"{id_col} long")
         return pruned.join(F.broadcast(id_df), id_col, "left_semi")
 
     def _edges_from(ids: set[int]) -> list[tuple[int, int]]:
@@ -1257,8 +1259,8 @@ def incremental_lpa_stored(
             else:
                 new_rec[u] = lab[u]  # dangling: carry own label
         aff, rec = nxt_aff, new_rec
-    return spark.createDataFrame(
-        sorted(rec.items()), "node long, label long"
+    return local_df(
+        spark, sorted(rec.items()), "node long, label long"
     )
 
 
@@ -1277,8 +1279,8 @@ def _incremental_lpa_stored_fallback(
     now, so partition pruning is moot and the Pregel-style round is the
     right plan. Same recurrence, so the result is unchanged."""
     und = spark.read.parquet(updated_adj_path).select("u", "v").persist()
-    rec_df = spark.createDataFrame(
-        sorted(rec.items()), "node long, label long"
+    rec_df = local_df(
+        spark, sorted(rec.items()), "node long, label long"
     )
     hist = spark.read.parquet(f"{snapshot_dir}/hist")
     rec_df = iterate(

@@ -54,11 +54,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from chatbot_spark.io.smallio import (
+    arrow_table,
+    local_df,
     read_small_arrow,
     read_small_df,
     write_small_parquet,
 )
 from chatbot_spark.operators.ann import _assign_cells, _meta_table, _numpy_kmeans
+
+
+def _centroid_table(centers):
+    """The (shard, centroid) side table as Arrow, from the driver-side
+    shard centers every index instance carries."""
+    import numpy as np
+
+    return arrow_table(
+        list(enumerate(np.asarray(centers, dtype=np.float64).tolist())),
+        "shard INT, centroid ARRAY<DOUBLE>",
+    )
 
 
 def _beam_search(X, adj, q, ef: int, entry: int = 0, extra_entries=(), stats=None):
@@ -529,10 +542,7 @@ class NSWGraphIndex:
             id_col, vec_col, m, ef_construction, method
         )
         graph = sharded.groupBy("shard").applyInPandas(build_kernel, out_schema)
-        centroids = corpus.sparkSession.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-            "shard INT, centroid ARRAY<DOUBLE>",
-        )
+        centroids = local_df(corpus.sparkSession, _centroid_table(centers))
         out = cls(centroids, graph, centers, vec_col, id_col, metric=metric)
         out.m2 = m2
         return out
@@ -547,15 +557,15 @@ class NSWGraphIndex:
         )
         # centroids / tombstones / meta are driver-resident by
         # construction (nlist-bounded centers, the in-memory tombstone
-        # set, one metric row) — driver-side parquet writes skip three
-        # ~0.7 s Spark write jobs per index (io/smallio)
+        # set, one metric row) — written straight from that driver state
+        # with no Spark job at all (io/smallio)
         spark = self.graph.sparkSession
-        write_small_parquet(spark, f"{path}/centroids", self.centroids.toArrow())
-        tomb = spark.createDataFrame(
+        write_small_parquet(spark, f"{path}/centroids", _centroid_table(self.centers))
+        tomb = arrow_table(
             [(t,) for t in sorted(self.tombstones)],
             f"{self.id_col} {self.graph.schema[self.id_col].dataType.simpleString()}",
         )
-        write_small_parquet(spark, f"{path}/tombstones", tomb.toArrow())
+        write_small_parquet(spark, f"{path}/tombstones", tomb)
         write_small_parquet(spark, f"{path}/meta", _meta_table(self.metric, self.m2))
 
     @classmethod
@@ -676,7 +686,7 @@ class NSWGraphIndex:
             write_small_parquet(
                 spark,
                 f"{path}/tombstones",
-                spark.createDataFrame([], f"{id_col} {id_type}").toArrow(),
+                arrow_table([], f"{id_col} {id_type}"),
             )
             compacted = spark.read.parquet(f"{path}/graph")
             from chatbot_spark.plans.retrieve import invalidate_index_cache
@@ -1043,16 +1053,12 @@ class NSWGraphIndex:
         centers_np = np.array(
             [centers_by_id[i] for i in range(len(centers_by_id))], dtype=np.float64
         )
-        centroids = spark.createDataFrame(
-            [(i, centers_by_id[i]) for i in range(len(centers_by_id))],
-            "shard INT, centroid ARRAY<DOUBLE>",
-        )
+        ctbl = _centroid_table(centers_np)
+        centroids = local_df(spark, ctbl)
 
         if path is None or not changed:
             if path is not None:
-                write_small_parquet(
-                    spark, f"{path}/centroids", centroids.toArrow()
-                )
+                write_small_parquet(spark, f"{path}/centroids", ctbl)
                 from chatbot_spark.plans.retrieve import invalidate_index_cache
 
                 invalidate_index_cache(path)
@@ -1085,7 +1091,7 @@ class NSWGraphIndex:
             ).parquet(f"{path}/graph")
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        write_small_parquet(spark, f"{path}/centroids", centroids.toArrow())
+        write_small_parquet(spark, f"{path}/centroids", ctbl)
         import shutil
 
         shutil.rmtree(tmp.replace("file:", ""), ignore_errors=True)

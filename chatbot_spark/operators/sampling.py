@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chatbot_spark.io.smallio import local_df
+
 _DENOM = 10_000
 
 
@@ -55,8 +57,8 @@ def hash_stratified_sample(
     filter — a single scan regardless of stratum count, versus
     ``sampleBy``'s RNG draw which is layout-dependent and per-engine."""
     spark = df.sparkSession
-    thresholds = spark.createDataFrame(
-        [(s, int(round(f * _DENOM))) for s, f in fractions.items()],
+    thresholds = local_df(
+        spark, [(s, int(round(f * _DENOM))) for s, f in fractions.items()],
         f"{strata_col} STRING, __keep_below INT",
     )
     return (
@@ -92,8 +94,8 @@ def weighted_mixture(
             raise ValueError(f"negative mixture weight for {s!r}: {w}")
         base = int(w)
         rows.append((s, base, int(round((w - base) * _DENOM))))
-    table = spark.createDataFrame(
-        rows, f"{strata_col} STRING, __base INT, __extra_below INT"
+    table = local_df(
+        spark, rows, f"{strata_col} STRING, __base INT, __extra_below INT"
     )
     n_copies = F.col("__base") + (
         _hash_point(F.col(key)) < F.col("__extra_below")

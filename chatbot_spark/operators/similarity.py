@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from chatbot_spark.functions.vector import cosine_similarity, dot_product, l2_norm
 from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.io.smallio import local_df
 
 
 def cosine_topk_join(
@@ -199,7 +200,7 @@ def embedding_neardup_pairs_blocked(
         outs.append(stream.mapInPandas(kernel, out_schema))
 
     if not outs:
-        return spark.createDataFrame([], out_schema)
+        return local_df(spark, [], out_schema)
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
@@ -305,7 +306,7 @@ def embedding_neardup_pairs_bucketed(
                 dtype=np.int64,
             )
             if len(ids) == 0:
-                return spark.createDataFrame([], out_schema)
+                return local_df(spark, [], out_schema)
             U = np.array(probe.column("__unit").to_pylist(), dtype=np.float64)
             thr_d = min_cosine - 1e-12
             outs_a, outs_b, outs_c = [], [], []
@@ -330,13 +331,13 @@ def embedding_neardup_pairs_bucketed(
                     "cosine": pa.array(np.concatenate(outs_c), pa.float64()),
                 }
             )
-            return spark.createDataFrame(tbl)
+            return local_df(spark, tbl)
 
     from chatbot_spark.operators.ann import _sample_matrix
 
     sample = _sample_matrix(unit, "__unit", fit_sample_size)
     if len(sample) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_df(spark, [], out_schema)
     k = min(nlist, len(sample))
     centers = _numpy_kmeans(sample, k, seed, max_iter=25)
 
@@ -348,8 +349,8 @@ def embedding_neardup_pairs_bucketed(
     ).persist()
     # Per-cell covering radius: max ||x − c_cell||, via the broadcast
     # centroid table (tiny) + a higher-order-function fold — one narrow agg.
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
+    cent_df = local_df(
+        spark, [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
         "__cell INT, __centroid ARRAY<DOUBLE>",
     )
     radii_rows = (
@@ -385,8 +386,8 @@ def embedding_neardup_pairs_bucketed(
             if cd[i, j] <= ri + rj + eps:
                 blocks.append((len(blocks), i, j))
     if not blocks:
-        return spark.createDataFrame([], out_schema)
-    blocks_df = spark.createDataFrame(blocks, "__blk INT, __ca INT, __cb INT")
+        return local_df(spark, [], out_schema)
+    blocks_df = local_df(spark, blocks, "__blk INT, __ca INT, __cb INT")
 
     left = assigned.join(
         F.broadcast(blocks_df), assigned["__cell"] == blocks_df["__ca"]

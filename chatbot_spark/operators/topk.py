@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from chatbot_spark.io.smallio import local_df
+
 DEFAULT_SEARCH_LIMIT = 10  # reference src/rag/ob.py:30
 DEFAULT_RERANK_LIMIT = 10  # reference src/rag/ob.py:31
 
@@ -221,7 +223,7 @@ def scan_topk(
     )
     spark = corpus_df.sparkSession
     if queries.num_rows == 0:
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     cell_col, cells = probe if probe is not None else (None, None)
     kernel = _scan_kernel(
         queries, query_id, query_vec, carry, k, metric,

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chatbot_spark.io.smallio import local_df
 from chatbot_spark.schemas import COMPONENT_MAPPING, DEFAULT_COMPONENT_CODES
 
 
@@ -22,8 +23,10 @@ def default_mapping(spark: SparkSession) -> DataFrame:
     """The reference DDL's partition list as a DataFrame (load.py:28-36;
     the DDL is source of truth — odp=6/odc=7, NOT the buggy Python dict
     ob.py:43-44, see SURVEY §7.4)."""
-    return spark.createDataFrame(
-        sorted(DEFAULT_COMPONENT_CODES.items(), key=lambda kv: kv[1]), COMPONENT_MAPPING
+    return local_df(
+        spark,
+        sorted(DEFAULT_COMPONENT_CODES.items(), key=lambda kv: kv[1]),
+        COMPONENT_MAPPING,
     )
 
 
@@ -49,7 +52,7 @@ def append_partition(mapping: DataFrame, component: str) -> DataFrame:
     if exists:
         return mapping
     next_code = (mapping.agg(F.max("component_code")).first()[0] or 0) + 1
-    new_row = spark.createDataFrame([(component, next_code)], COMPONENT_MAPPING)
+    new_row = local_df(spark, [(component, next_code)], COMPONENT_MAPPING)
     return mapping.unionByName(new_row)
 
 

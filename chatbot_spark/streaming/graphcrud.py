@@ -52,6 +52,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chatbot_spark.io.smallio import local_df
+
 __all__ = ["edge_crud_writer", "read_latest_version"]
 
 
@@ -84,7 +86,7 @@ def read_latest_version(spark, state_dir: str, dataset: str, schema: str) -> Dat
                     "with io/versioned.commit — or drain and rebuild "
                     "from the source events."
                 )
-        return spark.createDataFrame([], schema)
+        return local_df(spark, [], schema)
     return spark.read.schema(schema).parquet(
         os.path.join(versioned.resolve(state_dir, cur), dataset)
     )

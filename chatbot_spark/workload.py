@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chatbot_spark.functions.vector import cosine_similarity, l2_norm
+from chatbot_spark.io.smallio import local_df
 from chatbot_spark.io.tables import load_table, spread
 from chatbot_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs
 from chatbot_spark.operators.similarity import cosine_topk_join, embedding_neardup_pairs
@@ -1116,10 +1117,9 @@ def _drained_event_rollup(spark: SparkSession, sf_dir: str, rollup_fn) -> DataFr
     base = tempfile.mkdtemp(prefix="cbs_stream_q_")
     inpath = os.path.join(base, "in")
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(inpath)
-    rows = run_stream_once_complete(
-        rollup_fn(read_event_stream(spark, inpath)), os.path.join(base, "ckpt")
-    )
-    return spark.createDataFrame(rows)
+    stream = rollup_fn(read_event_stream(spark, inpath))
+    rows = run_stream_once_complete(stream, os.path.join(base, "ckpt"))
+    return local_df(spark, rows, stream.schema)
 
 
 # one definition for both the batch hopping window and its streaming
@@ -1650,7 +1650,7 @@ def graph_knn_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("dist", 6).alias("dist"),
         )
         rows = res.collect()
-        out = spark.createDataFrame(rows, res.schema)
+        out = local_df(spark, rows, res.schema)
     finally:
         shutil.rmtree(state_dir, ignore_errors=True)
     return out
@@ -1969,10 +1969,12 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate evaluated map-side — the fact table never shuffles for the
     join; only the 4-group aggregation does.
 
-    The interval dim is built with SQL VALUES (a JVM LocalTableScan), not
-    ``spark.createDataFrame`` — the latter plans as ``Scan ExistingRDD``
-    via ``applySchemaToPythonRDD``, paying a Python-worker round trip on
-    every execution (the r2 bench regression on this entry)."""
+    The interval dim is built with SQL VALUES (a JVM LocalTableScan). A
+    list-backed ``spark.createDataFrame`` would plan as ``Scan
+    ExistingRDD`` over a PythonRDD and pay a Python-worker round trip on
+    every execution (the r2 bench regression on this entry) — the cost
+    behind the engine-wide rule that driver rows enter a plan only via
+    ``io.smallio.local_df`` (Arrow, a LocalTableScan)."""
     from chatbot_spark.operators.joins import range_join
 
     part = load_table(spark, sf_dir, "part")
@@ -2939,8 +2941,8 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain()  # run 1: on-time bulk; checkpoint commits the ~Jan 30 watermark
     ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(inpath)
     drain()  # run 2: the late slice — dropped against the restored watermark
-    sent = spark.createDataFrame(
-        [(-1, -1, "click")], "event_id BIGINT, user_id BIGINT, event_type STRING"
+    sent = local_df(
+        spark, [(-1, -1, "click")], "event_id BIGINT, user_id BIGINT, event_type STRING"
     ).withColumn("ts", F.lit("2099-06-01 00:00:00").cast("timestamp"))
     for f in ev.schema.fields:
         if f.name not in sent.columns:
@@ -3302,10 +3304,9 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="cbs_sess_q_")
     inpath = os.path.join(base, "in")
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(inpath)
-    rows = run_stream_once_complete(
-        session_rollup(read_event_stream(spark, inpath)), os.path.join(base, "ckpt")
-    )
-    df = spark.createDataFrame(rows)
+    stream = session_rollup(read_event_stream(spark, inpath))
+    rows = run_stream_once_complete(stream, os.path.join(base, "ckpt"))
+    df = local_df(spark, rows, stream.schema)
     return df.select(
         "user_id", "session_start", "session_end",
         F.col("n_events").cast("long").alias("n_events"),
@@ -3372,7 +3373,11 @@ def stream_boundary_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         os.path.join(base, "ckpt"),
     )
-    df = spark.createDataFrame(rows, schema="user_id BIGINT, session_start TIMESTAMP, session_end TIMESTAMP, n_events BIGINT")
+    df = local_df(
+        spark,
+        rows,
+        schema="user_id BIGINT, session_start TIMESTAMP, session_end TIMESTAMP, n_events BIGINT",
+    )
     return df.select(
         "user_id", "session_start", "session_end",
         F.col("n_events").cast("long").alias("n_events"),
@@ -3973,8 +3978,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_stream(read_event_stream(spark, inpath, max_files_per_trigger=1)),
         os.path.join(base, "ckpt"),
     )
-    deduped = spark.createDataFrame(
-        [(r["event_id"], r["event_type"]) for r in rows],
+    deduped = local_df(
+        spark, [(r["event_id"], r["event_type"]) for r in rows],
         schema="event_id BIGINT, event_type STRING",
     )
     return deduped.groupBy("event_type").agg(F.count("*").cast("long").alias("n_unique"))
@@ -5735,7 +5740,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
     )
     rows = run_stream_once_complete(agg, os.path.join(base, "ckpt"))
-    df = spark.createDataFrame(rows)
+    df = local_df(spark, rows, agg.schema)
     return df.select(
         "event_type",
         F.col("cohort").cast("long").alias("cohort"),
@@ -7092,8 +7097,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo = hi
     # sentinel: far-future click AND purchase for user -1 — advances both
     # watermarks past all real data, flushing buffered outer-join state
-    sent = spark.createDataFrame(
-        [(-1, -1, "click"), (-2, -1, "purchase")],
+    sent = local_df(
+        spark, [(-1, -1, "click"), (-2, -1, "purchase")],
         "event_id BIGINT, user_id BIGINT, event_type STRING",
     ).withColumn("ts", F.lit("2099-06-01 00:00:00").cast("timestamp"))
     for f in ev.schema.fields:
@@ -7332,7 +7337,7 @@ def warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("content_checksum"),
         )
-        out = spark.createDataFrame(agg.collect(), agg.schema)
+        out = local_df(spark, agg.collect(), agg.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out
@@ -7393,7 +7398,8 @@ def bloom_layout_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id")
             .collect()
         )
-        out = spark.createDataFrame(
+        out = local_df(
+            spark,
             [
                 (
                     int(n_candidates <= 8),
@@ -8600,7 +8606,7 @@ def phrase_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chatbot_spark.operators.lexical import phrase_search
 
     docs = load_table(spark, sf_dir, "documents")
-    phrases = spark.createDataFrame(_PHRASES, "phrase_id long, phrase string")
+    phrases = local_df(spark, _PHRASES, "phrase_id long, phrase string")
     return phrase_search(docs, phrases)
 
 
@@ -9732,8 +9738,8 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = run_stream_once_append(
         heavy_hitters_stream(stream, capacity=16), os.path.join(base, "ckpt")
     )
-    df = spark.createDataFrame(
-        rows, schema="shard BIGINT, n_seen BIGINT, key BIGINT, cnt BIGINT"
+    df = local_df(
+        spark, rows, schema="shard BIGINT, n_seen BIGINT, key BIGINT, cnt BIGINT"
     )
     final = df.groupBy("shard").agg(F.max("n_seen").alias("__f"))
     return (
@@ -9905,7 +9911,7 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", bucket.alias("val_bucket")
     ).agg(F.count("*").cast("long").alias("n_live"))
     rows = run_stream_once_complete(live, os.path.join(staging, "ckpt"))
-    live_df = spark.createDataFrame(rows, "event_type string, val_bucket string, n_live long")
+    live_df = local_df(spark, rows, "event_type string, val_bucket string, n_live long")
     cells = live_df.join(F.broadcast(base_cells), ["event_type", "val_bucket"], "left").select(
         "event_type", "val_bucket",
         F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
@@ -11074,8 +11080,8 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         transition_counter(read_event_stream(spark, inpath, max_files_per_trigger=1)),
         os.path.join(base, "ckpt"),
     )
-    df = spark.createDataFrame(
-        rows, schema="user_id BIGINT, from_type STRING, to_type STRING, n BIGINT"
+    df = local_df(
+        spark, rows, schema="user_id BIGINT, from_type STRING, to_type STRING, n BIGINT"
     )
     t = df.groupBy("from_type", "to_type").agg(
         F.sum("n").cast("long").alias("n_trans")
@@ -11347,7 +11353,7 @@ def stream_approx_distinct_hourly(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.approx_count_distinct("user_id", rsd=0.05).alias("approx_users"))
     )
     rows = run_stream_once_complete(agg, os.path.join(base, "ckpt"))
-    approx = spark.createDataFrame(rows)
+    approx = local_df(spark, rows, agg.schema)
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
@@ -13154,7 +13160,7 @@ def stream_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         if batch_id > 0 and os.path.isdir(prev_path):
             prev = spark.read.parquet(prev_path)
         else:
-            prev = spark.createDataFrame([], "node long, component long")
+            prev = local_df(spark, [], "node long, component long")
         out = incremental_components(
             prev, batch_df, rounds=6, assert_converged=True
         )
