@@ -27,9 +27,10 @@ Driver-held rows become a DataFrame only through :func:`local_df`.
 ``spark.createDataFrame(<python list>)`` plans as ``Scan ExistingRDD``
 over a ``PythonRDD`` (``_createFromLocal`` -> ``sc.parallelize`` -> a
 ``_reserialize`` map), so EVERY execution of such a DataFrame starts
-Python workers and pays their per-task start-up: a 1-row (or empty)
-list DataFrame collects in 0.28-0.31 s on a 4-core local[4] host, the
-same rows as an Arrow ``LocalTableScan`` in 5-10 ms. ``local_df`` types
+Python workers and pays their per-task start-up: a warm 1-row (or
+empty) list DataFrame collects in 0.26-0.47 s on local[4] (4-core Xeon,
+7 collects each), the same rows as an Arrow ``LocalTableScan`` in
+3-9 ms. ``local_df`` types
 one Arrow table from the schema and hands it to
 ``spark.createDataFrame(table, schema)``: below
 ``spark.sql.execution.arrow.localRelationThreshold`` (Spark's default,
