@@ -12,7 +12,10 @@ They are NOT compiled: Spark 4.1 evaluates ``ZipWith`` and
 rows: 1.3 s on local[4], a 4-core Xeon; numpy folds the same pairs in
 ~55 ms). Bulk top-k scans over a bounded query batch therefore run
 through ``operators.topk.scan_topk``, which replays exactly this fold in
-numpy (same bits); these expressions stay the definition, the DuckDB
+numpy (same bits) — cosine top-k included: ``knn_join(metric="cosine")``
+ranks by ``cosine_distance`` and callers report ``1 - dist`` as the
+similarity (exact for similarities ≥ 0.5, within 2.2e-16 below). These
+expressions stay the definition, the DuckDB
 oracles' twin, and the path of plans that score few pairs or cannot
 collect the query side (radius joins, the IVF ``route="join"`` search,
 re-scoring the final k rows).

@@ -18,7 +18,8 @@ Two concerns live here:
   pinned bit-identical by the gate-equality tests.
 
 * ``effective_gate`` — the bench regression leg (r13 verdict item 2):
-  every driver gate resolves its threshold through this hook, so
+  every driver gate resolves its threshold through this hook
+  (``driver_solves`` = hook + probe, the one call each gate makes), so
   setting ``CBS_FORCE_DISTRIBUTED=1`` forces the distributed rounds on
   any input. bench.py uses it to time a small "gate-off" leg
   (``<name>__gateoff`` entries) each round; without it a regression in
@@ -33,9 +34,24 @@ import os
 
 from pyspark.sql import DataFrame
 
-__all__ = ["effective_gate", "rows_at_most"]
+__all__ = ["DRIVER_SOLVE_ROWS", "driver_solves", "effective_gate", "rows_at_most"]
 
 _FORCE_DISTRIBUTED_ENV = "CBS_FORCE_DISTRIBUTED"
+
+# Row gate of the driver-local graph solves (connected/incremental
+# components, PageRank, LPA and its maintenance verbs; r13): the CRUD
+# verbs hand these solvers DELTA-sized inputs by contract (incremental:
+# contracted on touched components; decremental: the affected slice), so
+# at 100 TB the iterative part is small even though the corpus is not.
+# At or below this many raw edge rows (~16 MB of long pairs — the same
+# order as components.DEFAULT_BROADCAST_NODE_ROWS and Spark's broadcast
+# budget) the recurrence replays bit-exactly in vectorized numpy on the
+# driver instead of as driver-coordinated Spark rounds: profiling (r13)
+# showed these solves spend their wall time on the per-round job floor
+# (~27 ms per job × ~5 jobs per round × rounds), not on data.
+# Corpus-scale edge sets exceed the gate and take the distributed rounds
+# unchanged.
+DRIVER_SOLVE_ROWS = 1_000_000
 
 
 def effective_gate(requested: int) -> int:
@@ -54,3 +70,11 @@ def rows_at_most(df: DataFrame, n: int) -> bool:
     of a full scan. Call it on the RAW (pre-shuffle) input — a limit on
     a distinct/aggregate still executes the full exchange upstream."""
     return df.limit(n + 1).count() <= n
+
+
+def driver_solves(df: DataFrame, n: int) -> bool:
+    """The regime decision of a size gate with threshold ``n``: True
+    (solve on the driver) iff the gate is not forced off and ``df`` has
+    at most ``n`` rows by the truncated :func:`rows_at_most` probe."""
+    n = effective_gate(n)
+    return n > 0 and rows_at_most(df, n)

@@ -186,183 +186,6 @@ def train_bpe(
     return merges, words
 
 
-def train_bpe_batched(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 10,
-    batch_size: int = 64,
-    lookahead: int = 512,
-    checkpoint_every: int = 64,
-    stats: dict | None = None,
-) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Greedy-equivalent BATCHED BPE training (r9 verdict item 1): the
-    driver applies up to ``batch_size`` merges per round instead of one,
-    cutting the serialized round floor by the realized batch factor —
-    the gap between a ~0.36 s/round serial loop and a production 32k+
-    vocab. Returns exactly what :func:`train_bpe` returns, and the merge
-    list is BIT-IDENTICAL to the serial greedy order (the equivalence
-    test trains both and compares).
-
-    Why a batch is safe (the commutation argument, each step checkable
-    on the ranked pair list alone):
-
-    * Let p_1..p_B be the maximal PAIRWISE-SYMBOL-DISJOINT PREFIX of the
-      ranked pair list ((count desc, left asc, right asc) — the greedy
-      total order), stopped at the first pair sharing a symbol with the
-      batch, and let ``s`` be that stop pair's count. Applying p_1..p_i-1
-      leaves count(p_i) unchanged (no shared symbols ⇒ no occurrence of
-      p_i is created or destroyed).
-    * Every pair NOT in the batch ranks after the stop pair or is the
-      stop pair (prefix property), so its count is ≤ s; existing pairs
-      only lose occurrences under a merge (no name collisions — see
-      below), so they stay ≤ s.
-    * A NEW pair created by applying p_i contains the merged symbol and
-      each of its occurrences consumes an occurrence of an OLD pair
-      sharing a symbol with p_i ((x,a_i) → (x,M_i), (b_i,y) → (M_i,y),
-      (b_i,a_i) → (M_i,M_i)), so its count is bounded by a non-batch
-      pair's count ≤ s.
-    * TRUNCATE the batch to members with count STRICTLY > s: then at
-      p_j's turn every competitor — old, decreased, or newly created —
-      counts ≤ s < count(p_j), so greedy's argmax is p_j. Ties cannot
-      flip the order because the batch is a prefix of the original total
-      order and batch counts never change.
-    * NAME-COLLISION GUARD: if a merged name a_i+b_i equals an EXISTING
-      symbol (one present in the pair table), new pairs would conflate
-      with that symbol's pairs and an "existing" count could increase,
-      breaking the bound — the batch is truncated before the first such
-      member (one distributed isin-filter per round over the pair
-      table). Two batch members producing the SAME merged name are fine:
-      both new-pair families stay bounded by s, and the final word table
-      (a pure string rewrite by disjoint patterns) is order-independent.
-
-    Worst case (every adjacent rank conflicts) degenerates to exact
-    serial greedy one merge per round — never worse than train_bpe.
-    ``stats``, when passed, receives {"rounds": driver rounds run} —
-    merges/rounds is the realized batch factor — plus ``"milestones"``:
-    one (rounds_so_far, merges_so_far, monotonic_sec) tuple per round,
-    so a single long run decomposes marginal cost-per-MERGE into
-    cost-per-ROUND × rounds-per-merge at any segment boundary
-    (tools/bench_bpe.py's cost model).
-    """
-    import time as _time
-    spark = df.sparkSession
-    bad = df.filter(F.col(text_col).rlike("[<>_]")).limit(1).count()
-    if bad:
-        raise ValueError(
-            "text contains reserved symbols: '<'/'>' (wrappers) or "
-            "'_' (end-of-word marker)"
-        )
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
-    if batch_size < 1:
-        raise ValueError("batch_size must be >= 1")
-    lookahead = max(lookahead, batch_size + 1)
-    base = (
-        word_counts(df, text_col)
-        .withColumn("rep", _initial_rep())
-        .persist()
-    )
-    base.count()
-    words = base
-    pairs = _pair_counts(words).localCheckpoint(eager=False)
-    merges: list[tuple[int, str, str, str, int]] = []
-    since_ckpt = 0
-    rounds = 0
-    if stats is not None:
-        stats["t_start_monotonic"] = _time.monotonic()
-    while len(merges) < n_merges:
-        rounds += 1
-        want = min(batch_size, n_merges - len(merges))
-        top = pairs.orderBy(
-            F.col("c").desc(), F.col("a").asc(), F.col("b").asc()
-        ).limit(lookahead).collect()
-        if not top:
-            break
-        # maximal disjoint prefix, stop at first symbol conflict
-        batch: list = []
-        syms: set[str] = set()
-        stop_count = -1  # no pair beyond the collected set
-        for i, row in enumerate(top):
-            if len(batch) >= want:
-                stop_count = int(row["c"])
-                break
-            if row["a"] in syms or row["b"] in syms:
-                stop_count = int(row["c"])
-                break
-            batch.append(row)
-            syms.add(row["a"])
-            syms.add(row["b"])
-        else:
-            if len(top) == lookahead:
-                # ranking may continue past the window: the last collected
-                # pair becomes the boundary instead of a batch member
-                stop_count = int(top[-1]["c"])
-                batch = batch[:-1] if len(batch) > 1 else batch[:1]
-        # strict-majority truncation: every non-batch competitor must
-        # stay strictly below every batch member
-        kept = [r for r in batch if int(r["c"]) > stop_count]
-        if not kept:
-            kept = [top[0]]  # plain greedy step — always sound
-        # name-collision guard (only multi-merge batches need it)
-        if len(kept) > 1:
-            mnames = [r["a"] + r["b"] for r in kept]
-            colliding = {
-                row[0]
-                for row in pairs.select("a")
-                .filter(F.col("a").isin(mnames))
-                .union(pairs.select("b").filter(F.col("b").isin(mnames)))
-                .distinct()
-                .collect()
-            }
-            if colliding:
-                cut = next(
-                    (i for i, r in enumerate(kept) if r["a"] + r["b"] in colliding),
-                    len(kept),
-                )
-                kept = kept[: max(cut, 1)]
-        pats = [f"<{r['a']}><{r['b']}>" for r in kept]
-        subs = [f"<{r['a'] + r['b']}>" for r in kept]
-        for r in kept:
-            merges.append(
-                (len(merges) + 1, r["a"], r["b"], r["a"] + r["b"], int(r["c"]))
-            )
-
-        def _apply_all(col: F.Column) -> F.Column:
-            for p, sbst in zip(pats, subs):
-                col = F.replace(col, F.lit(p), F.lit(sbst))
-            return col
-
-        cond = None
-        for p in pats:
-            c = F.col("rep").contains(p)
-            cond = c if cond is None else (cond | c)
-        changed = words.filter(cond)
-        changed_new = changed.withColumn("rep", _apply_all(F.col("rep")))
-        neg = _pair_counts(changed).select("a", "b", (-F.col("c")).alias("c"))
-        pos = _pair_counts(changed_new).select("a", "b", "c")
-        pairs = (
-            pairs.unionByName(pos)
-            .unionByName(neg)
-            .groupBy("a", "b")
-            .agg(F.sum("c").alias("c"))
-            .filter(F.col("c") > 0)
-            .localCheckpoint(eager=False)
-        )
-        words = words.withColumn("rep", _apply_all(F.col("rep")))
-        since_ckpt += len(kept)
-        if since_ckpt >= checkpoint_every:
-            words = words.localCheckpoint(eager=True)
-            since_ckpt = 0
-        if stats is not None:
-            stats.setdefault("milestones", []).append(
-                (rounds, len(merges), _time.monotonic())
-            )
-    base.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    return merges, words
-
-
 _DELTA_STRUCT = "array<struct<step: int, a: string, b: string, d: bigint>>"
 
 
@@ -460,11 +283,12 @@ def train_bpe_speculative(
     checkpoint_every: int = 64,
     stats: dict | None = None,
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Speculate-then-verify BATCHED BPE (r11 verdict item 4): bit-
-    identical to serial greedy like :func:`train_bpe_batched`, but the
-    batch is no longer capped by the symbol-disjoint PREFIX rule (whose
-    realized factor measured 1.14 — natural-language top pairs share
-    symbols constantly). Per driver round:
+    """Speculate-then-verify BATCHED BPE (r11 verdict item 4): the merge
+    list is BIT-IDENTICAL to :func:`train_bpe`'s serial greedy order
+    (the equivalence tests train both and compare), but one driver
+    action can certify many merges instead of one — a batch is not
+    capped by any symbol-disjointness rule, because natural-language top
+    pairs share symbols constantly. Per driver round:
 
     1. Collect the top-``lookahead`` ranked pairs (window). ``floor`` =
        the window's last count — every pair outside the window counts
@@ -491,8 +315,8 @@ def train_bpe_speculative(
 
     ``stats`` receives {"rounds": driver ACTIONS run} — window collects
     + verification collects, the honest denominator for the realized
-    batch factor (train_bpe/train_bpe_batched count one action per loop
-    round, so the numbers compare directly) — plus "milestones" in the
+    batch factor (train_bpe runs one action per merge, so merges/rounds
+    compares directly with it) — plus "milestones" in the
     same (rounds, merges, monotonic_sec) shape.
     """
     import time as _time
@@ -688,7 +512,7 @@ def train_bpe_speculative(
         # speculative trainer's verification is a union of per-step scans,
         # so an uncached word table multiplies the lineage replay by the
         # chain length); the eager-checkpoint cadence below still caps the
-        # PLAN depth exactly like the serial/batched trainers
+        # PLAN depth exactly like the serial trainer
         if prev_words is not base:
             prev_words.unpersist(blocking=False)
         since_ckpt += len(verified)

@@ -42,7 +42,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.gating import DRIVER_SOLVE_ROWS, driver_solves
 from chatbot_spark.io.smallio import local_df
 
 __all__ = [
@@ -58,22 +58,6 @@ __all__ = [
 ]
 
 _MAX_FIXPOINT_ROUNDS = 64
-
-# Size gate for the driver-local solve of small / delta-sized graphs
-# (r13 optimization): the CRUD verbs hand this solver DELTA-sized
-# contractions by contract (incremental: contracted on touched
-# components; decremental: the affected slice), so at 100 TB the
-# iterative part is small even though the corpus is not. Below this many
-# DISTINCT symmetrized edges (~16 MB of long pairs at the default — the
-# same order as DEFAULT_BROADCAST_NODE_ROWS and Spark's broadcast
-# budget), the label recurrence is replayed bit-exactly in vectorized
-# numpy on the driver instead of as driver-coordinated Spark rounds:
-# profiling (tools/profile_queries.py, r13) showed these solves spend
-# their wall time on the per-round job floor (~27 ms/job × ~5 jobs/round
-# × rounds, with 3 solver invocations per maintenance query), not on
-# data. Corpus-scale edge sets exceed the gate and take the distributed
-# rounds unchanged. 0 disables the fast path.
-DEFAULT_DRIVER_SOLVE_ROWS = 1_000_000
 
 
 def _solve_cc_numpy(nodes_arr, eu, ev, rounds, assert_converged):
@@ -128,7 +112,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     assert_converged: bool = False,
-    driver_solve_rows: int = DEFAULT_DRIVER_SOLVE_ROWS,
 ) -> DataFrame:
     """(node, component) — component is the minimum node id reachable
     from ``node``. Node ids must be integral (cast to long here).
@@ -147,12 +130,12 @@ def connected_components(
     therefore stay hash-green even after scale growth pushed the true
     fixpoint past the pin. Costs one O(V) count action.
 
-    ``driver_solve_rows``: below this many distinct symmetrized edges
-    (and nodes) the recurrence replays in exact numpy on the driver
+    Size gate: at or below ``gating.DRIVER_SOLVE_ROWS`` raw edge rows
+    the recurrence replays in exact numpy on the driver
     (:func:`_solve_cc_numpy`) — bit-identical labels for every
     rounds/assert combination, without the per-round job floor the
-    distributed loop pays. See DEFAULT_DRIVER_SOLVE_ROWS for the 100 TB
-    rationale; 0 forces the distributed path."""
+    distributed loop pays (see that constant for the 100 TB rationale);
+    ``CBS_FORCE_DISTRIBUTED=1`` forces the distributed path."""
     from chatbot_spark.operators.graph import _symmetrize, iterate
 
     # the edge input feeds THREE subtrees (symmetrize + both node-set
@@ -179,7 +162,7 @@ def connected_components(
     if rounds is not None and rounds < 0:
         raise ValueError("rounds must be >= 0")
 
-    # small-graph driver solve (r13; see DEFAULT_DRIVER_SOLVE_ROWS): a
+    # small-graph driver solve (r13; see gating.DRIVER_SOLVE_ROWS): a
     # truncated limit-probe on the RAW edge rows decides the regime (r14,
     # verdict item 3 — the former full count() of the distinct symmetrized
     # set paid a complete scan + shuffle per call even on obviously-huge
@@ -189,27 +172,24 @@ def connected_components(
     # recurrence replays in numpy — same labels bit-for-bit, zero
     # per-round jobs. Over the gate, the distributed rounds below run
     # unchanged after only a truncated read.
-    driver_solve_rows = effective_gate(driver_solve_rows)
-    if driver_solve_rows > 0:
-        small = rows_at_most(edges.select(F.col(src), F.col(dst)), driver_solve_rows)
-        if small:
-            import numpy as np
-            import pandas as pd
+    if driver_solves(edges.select(F.col(src), F.col(dst)), DRIVER_SOLVE_ROWS):
+        import numpy as np
+        import pandas as pd
 
-            # und and nodes are each consumed exactly once below; the
-            # persisted `edges` (shared ancestor) is what saves the
-            # double scan of an expensive input subtree
-            und_pdf = und.toPandas()
-            nodes_pdf = nodes.toPandas()
-            if _owns_cache:
-                edges.unpersist()
-            spark = edges.sparkSession
-            nodes_arr = np.sort(nodes_pdf["node"].to_numpy(dtype=np.int64))
-            eu = np.searchsorted(nodes_arr, und_pdf["u"].to_numpy(dtype=np.int64))
-            ev = np.searchsorted(nodes_arr, und_pdf["v"].to_numpy(dtype=np.int64))
-            lbl = _solve_cc_numpy(nodes_arr, eu, ev, rounds, assert_converged)
-            out = pd.DataFrame({"node": nodes_arr, "component": lbl})
-            return local_df(spark, out, schema="node long, component long")
+        # und and nodes are each consumed exactly once below; the
+        # persisted `edges` (shared ancestor) is what saves the
+        # double scan of an expensive input subtree
+        und_pdf = und.toPandas()
+        nodes_pdf = nodes.toPandas()
+        if _owns_cache:
+            edges.unpersist()
+        spark = edges.sparkSession
+        nodes_arr = np.sort(nodes_pdf["node"].to_numpy(dtype=np.int64))
+        eu = np.searchsorted(nodes_arr, und_pdf["u"].to_numpy(dtype=np.int64))
+        ev = np.searchsorted(nodes_arr, und_pdf["v"].to_numpy(dtype=np.int64))
+        lbl = _solve_cc_numpy(nodes_arr, eu, ev, rounds, assert_converged)
+        out = pd.DataFrame({"node": nodes_arr, "component": lbl})
+        return local_df(spark, out, schema="node long, component long")
 
     # self-loops make every node its own neighbor: m(v) <= l(v) without
     # a separate carry-forward join
@@ -282,7 +262,6 @@ def incremental_components(
     dst: str = "dst",
     rounds: int | None = None,
     assert_converged: bool = False,
-    driver_solve_rows: int = DEFAULT_DRIVER_SOLVE_ROWS,
 ) -> DataFrame:
     """Incremental connected components under EDGE ADDITIONS — the
     append-only crawl/dedup contract: new links can only MERGE
@@ -315,8 +294,8 @@ def incremental_components(
     runs on the delta-sized contraction only.
 
     Size gate (r13): when BOTH the previous snapshot and the delta fit
-    ``driver_solve_rows`` rows, the whole composition — contract joins,
-    the CC recurrence (:func:`_solve_cc_numpy`, the already-pinned twin)
+    ``gating.DRIVER_SOLVE_ROWS`` rows, the whole composition — contract
+    joins, the CC recurrence (:func:`_solve_cc_numpy`, the already-pinned twin)
     and the stitch — replays on the driver in exact int64 numpy,
     bit-identical row multiset included (each prev row relabels
     one-for-one; new endpoints anti-joined the same way). The
@@ -332,11 +311,8 @@ def incremental_components(
     # truncated limit-probe (r14 verdict item 3), so a corpus-sized
     # snapshot rejects after a bounded read instead of a full
     # columnless scan per maintenance call
-    driver_solve_rows = effective_gate(driver_solve_rows)
-    if (
-        driver_solve_rows > 0
-        and rows_at_most(e, driver_solve_rows)
-        and rows_at_most(prev, driver_solve_rows)
+    if driver_solves(e, DRIVER_SOLVE_ROWS) and driver_solves(
+        prev, DRIVER_SOLVE_ROWS
     ):
         return _incremental_cc_numpy(prev, e, rounds, assert_converged)
     lu = prev.select(F.col("node").alias("u"), F.col("component").alias("cu"))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.gating import driver_solves
 from chatbot_spark.io.smallio import local_df
 from chatbot_spark.operators.textstats import fingerprint, let, tokens
 
@@ -1097,12 +1097,15 @@ def _duplicated_spans_sa_numpy(tk: DataFrame, w: int, id_col: str) -> DataFrame:
     return local_df(spark, out)
 
 
+# token gate of duplicated_spans_sa's driver numpy pass (r13)
+SA_DRIVER_SOLVE_TOKENS = 5_000_000
+
+
 def duplicated_spans_sa(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = 8,
-    driver_solve_tokens: int = 5_000_000,
 ) -> DataFrame:
     """Suffix-grouping form of :func:`duplicated_spans` — the Lee et al.
     suffix-array semantics computed by EXACT token comparison, no hash
@@ -1143,7 +1146,7 @@ def duplicated_spans_sa(
     equality on random corpora.
 
     Size gate (r13, same rationale as the components/LPA driver
-    solves): below ``driver_solve_tokens`` total tokens the duplicated
+    solves): below ``SA_DRIVER_SOLVE_TOKENS`` total tokens the duplicated
     set is computed in one vectorized numpy pass on the driver —
     EXACT token comparison as here (integer-coded tokens, byte-view
     window grouping — no hash truncation anywhere), identical
@@ -1151,7 +1154,7 @@ def duplicated_spans_sa(
     windows > 1 is a property of the data, not the algorithm), same
     island merge. The prefix-doubling rounds pay ceil(log2 w)+1 eager
     exchanges of job-floor latency that tiny inputs never amortize;
-    past the gate the distributed rounds run unchanged. 0 disables.
+    past the gate the distributed rounds run unchanged.
     """
     w = int(window)
     if w < 2:
@@ -1165,12 +1168,9 @@ def duplicated_spans_sa(
     # budget rejects on a truncated row probe first (every non-empty doc
     # has >= 1 token) — the full tokenize-and-sum pass only runs on
     # doc-count-bounded inputs
-    driver_solve_tokens = effective_gate(driver_solve_tokens)
-    if driver_solve_tokens > 0 and rows_at_most(
-        df.select(F.col(id_col)), driver_solve_tokens
-    ):
+    if driver_solves(df.select(F.col(id_col)), SA_DRIVER_SOLVE_TOKENS):
         total = tk.agg(F.sum(F.greatest(F.col("__n"), F.lit(0)))).first()[0] or 0
-        if total <= driver_solve_tokens:
+        if total <= SA_DRIVER_SOLVE_TOKENS:
             return _duplicated_spans_sa_numpy(tk, w, id_col)
     pos = (
         tk.filter(F.col("__n") >= 1)

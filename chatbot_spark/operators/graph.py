@@ -30,7 +30,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.gating import DRIVER_SOLVE_ROWS, driver_solves
 from chatbot_spark.io.smallio import local_df
 
 __all__ = [
@@ -107,7 +107,6 @@ def pagerank_integer(
     src: str = "src",
     dst: str = "dst",
     init: DataFrame | None = None,
-    driver_solve_rows: int = 1_000_000,
 ) -> DataFrame:
     """Simplified PageRank in exact BIGINT fixed-point.
 
@@ -135,13 +134,13 @@ def pagerank_integer(
     recurrence applied to (coalesced init) — oracle-replayable.
 
     Size gate (r13, the components/LPA driver-solve precedent; probe
-    cheapened r14): at or below ``driver_solve_rows`` raw de-self-looped
-    edge rows (limit-probed, no full scan) the supersteps replay on
-    the driver in vectorized int64 numpy — the arithmetic is EXACT
+    cheapened r14): at or below ``gating.DRIVER_SOLVE_ROWS`` raw
+    de-self-looped edge rows (limit-probed, no full scan) the supersteps
+    replay on the driver in vectorized int64 numpy — the arithmetic is EXACT
     integer floor-division and order-independent integer sums on both
     paths, so the replay is bit-identical by construction (every
     quantity non-negative, so floor == Spark's truncating ``div``).
-    Past the gate the Pregel rounds below run unchanged; 0 disables.
+    Past the gate the Pregel rounds below run unchanged.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
@@ -161,10 +160,9 @@ def pagerank_integer(
     # de-self-looped rows instead of a full count of the distinct set —
     # raw <= gate bounds the collected distinct set at gate rows, and an
     # over-gate input rejects after a bounded read, no shuffle
-    driver_solve_rows = effective_gate(driver_solve_rows)
-    if driver_solve_rows > 0 and rows_at_most(
+    if driver_solves(
         edges.select(F.col(src), F.col(dst)).filter(F.col(src) != F.col(dst)),
-        driver_solve_rows,
+        DRIVER_SOLVE_ROWS,
     ):
         out = _pagerank_numpy(
             e, iterations, scale, damping_num, damping_den, init
@@ -625,18 +623,6 @@ def hits_integer(
     return out
 
 
-# Size gate for the driver-local replay of the LPA recurrences (r13) —
-# same rationale and default as components.DEFAULT_DRIVER_SOLVE_ROWS
-# (which cannot be imported here: components imports this module): the
-# maintenance verbs operate on delta-sized frontiers and the bench-scale
-# community graphs are tiny, so the wall cost of the distributed rounds
-# is the per-round job-scheduling floor, not data. Below this many
-# symmetrized edge rows the synchronous recurrence replays bit-exactly
-# in vectorized numpy (exact int64 counts and argmax — the max_by
-# tie-break is total); above it the distributed rounds run unchanged.
-DEFAULT_DRIVER_SOLVE_ROWS = 1_000_000
-
-
 def _lpa_best_numpy(u_idx, lab_vals, n):
     """Exact numpy twin of :func:`_best_label`: per-u most frequent
     label, count DESC / label ASC tie-break. ``u_idx``: int array of
@@ -687,7 +673,6 @@ def lpa_communities(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    driver_solve_rows: int = DEFAULT_DRIVER_SOLVE_ROWS,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) made fully
     deterministic: every node starts as its own label; each round every
@@ -716,10 +701,7 @@ def lpa_communities(
     # edge rows — raw <= gate bounds the collected symmetrized set at
     # 2·gate rows; over-gate inputs reject after a bounded read instead
     # of paying the full symmetrize shuffle just to be counted
-    driver_solve_rows = effective_gate(driver_solve_rows)
-    if driver_solve_rows > 0 and rows_at_most(
-        edges.select(F.col(src), F.col(dst)), driver_solve_rows
-    ):
+    if driver_solves(edges.select(F.col(src), F.col(dst)), DRIVER_SOLVE_ROWS):
         import numpy as np
         import pandas as pd
 
@@ -800,9 +782,7 @@ def lpa_with_history(
     und = _symmetrize(edges, src, dst).persist()
     # truncated raw-row limit-probe (r14 verdict item 3; see
     # lpa_communities)
-    if effective_gate(DEFAULT_DRIVER_SOLVE_ROWS) > 0 and rows_at_most(
-        edges.select(F.col(src), F.col(dst)), DEFAULT_DRIVER_SOLVE_ROWS
-    ):
+    if driver_solves(edges.select(F.col(src), F.col(dst)), DRIVER_SOLVE_ROWS):
         import numpy as np
         import pandas as pd
 
@@ -915,8 +895,8 @@ def incremental_lpa(
     # collected symmetrized set at 2·gate rows; a corpus-sized
     # updated_edges rejects after a bounded read, not a full
     # symmetrize + count
-    if effective_gate(DEFAULT_DRIVER_SOLVE_ROWS) > 0 and rows_at_most(
-        updated_edges.select(F.col(src), F.col(dst)), DEFAULT_DRIVER_SOLVE_ROWS
+    if driver_solves(
+        updated_edges.select(F.col(src), F.col(dst)), DRIVER_SOLVE_ROWS
     ):
         local = _incremental_lpa_numpy(und, ch, history, return_delta)
         if local is not None:

@@ -1127,7 +1127,6 @@ class NSWGraphIndex:
         ef_search: int = 64,
         query_id: str = "query_id",
         query_vec: str = "query_embedding",
-        query_chunk: int = 4096,
         route: str = "broadcast",
         allowed: DataFrame | None = None,
         exact_fallback: bool = True,
@@ -1200,8 +1199,7 @@ class NSWGraphIndex:
           shard's routed queries.
 
         Both modes return the same contract and the same rows (up to
-        probe-order ULP ties). ``query_chunk`` is kept for API
-        stability; the beam walk is per-query either way."""
+        probe-order ULP ties)."""
         import numpy as np
 
         if self.metric == "cosine":

@@ -1,6 +1,5 @@
 """Similarity joins over embedding columns (SURVEY §2.J J3, §2.C C1).
 
- * cosine_topk_join — brute-force cosine top-k (baseline / oracle).
  * embedding_neardup_pairs — ε-ball self-join (near-duplicate detection by
    embedding cosine), exact; the LSH/IVF variants in operators.ann are the
    scale path with identical output contracts.
@@ -8,6 +7,10 @@
 Scale: the self-join projects to (id, vec) before joining, ranks on
 squared/dot quantities (no sqrt per pair), and the ε-ball variant is the
 operator to replace with ann.BRPIndex bucket joins once N² stops fitting.
+
+Exact cosine top-k per query is ``topk.knn_join(metric="cosine")`` (the
+Arrow ``scan_topk`` kernel); it reports cosine DISTANCE, so a similarity
+is ``1 - dist``.
 """
 
 from __future__ import annotations
@@ -15,45 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from chatbot_spark.functions.vector import cosine_similarity, dot_product, l2_norm
-from chatbot_spark.gating import effective_gate, rows_at_most
+from chatbot_spark.functions.vector import dot_product, l2_norm
+from chatbot_spark.gating import driver_solves
 from chatbot_spark.io.smallio import local_df
-
-
-def cosine_topk_join(
-    queries_df: DataFrame,
-    corpus_df: DataFrame,
-    k: int = 10,
-    query_id: str = "query_id",
-    query_vec: str = "query_embedding",
-    corpus_id: str = "id",
-    corpus_vec: str = "embedding",
-    two_phase: bool = True,
-) -> DataFrame:
-    """Top-k most-similar corpus rows per query under cosine similarity.
-    Output: (query_id, neighbor_id, rank, sim).
-
-    ``two_phase``: partial top-k per (query,
-    scan-partition) first, so the per-query window never sees a Q-hot
-    group at scale; output is bit-identical."""
-    q = queries_df.select(F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qvec"))
-    pairs = corpus_df.join(F.broadcast(q)).select(
-        F.col("__qid").alias(query_id),
-        F.col(corpus_id).alias("neighbor_id"),
-        cosine_similarity(F.col("__qvec"), F.col(corpus_vec)).alias("sim"),
-    )
-    if two_phase:
-        w1 = Window.partitionBy(query_id, "__pid").orderBy(
-            F.col("sim").desc(), F.col("neighbor_id").asc()
-        )
-        pairs = (
-            pairs.withColumn("__pid", F.spark_partition_id())
-            .withColumn("__lrank", F.row_number().over(w1))
-            .filter(F.col("__lrank") <= k)
-            .drop("__pid", "__lrank")
-        )
-    w = Window.partitionBy(query_id).orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return pairs.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def embedding_neardup_pairs(
@@ -212,6 +179,10 @@ def embedding_neardup_pairs_blocked(
 # exercise chunk boundaries on small corpora
 _DRIVER_PAIR_CHUNK = 4096
 
+# row gate of embedding_neardup_pairs_bucketed's driver BLAS pass (r13):
+# at 20k rows the full pair scan is a few dgemm slabs on the driver
+NEARDUP_DRIVER_SOLVE_ROWS = 20_000
+
 
 def embedding_neardup_pairs_bucketed(
     df: DataFrame,
@@ -221,21 +192,20 @@ def embedding_neardup_pairs_bucketed(
     nlist: int = 64,
     seed: int = 42,
     fit_sample_size: int = 200_000,
-    driver_solve_rows: int = 20_000,
 ) -> DataFrame:
     """Cluster-blocked ε-ball self-join — the SemDeDup-style (Abbas et al.
     2023) scale path for embedding near-dup, with an EXACTNESS guarantee
     the plain "compare within cluster" recipe lacks.
 
     Size gate (r13, the components/LPA driver-solve precedent): at or
-    below ``driver_solve_rows`` non-zero-norm rows the pair set is
+    below ``NEARDUP_DRIVER_SOLVE_ROWS`` raw rows the pair set is
     computed in one chunked BLAS pass on the driver over the SAME
     JVM-normalized unit vectors the distributed kernel would see — the
     emitted (min id, max id) pair set is identical (each unordered pair
     enumerated exactly once either way, same ``thr`` guard band), and
     the cosine values are the same dgemm to reassociation (~1e-15; the
     band the distributed kernel already carries). Past the gate the
-    fit + radius + block machinery below runs unchanged; 0 disables.
+    fit + radius + block machinery below runs unchanged.
 
     Geometry: on unit vectors, cosine ≥ τ  ⟺  L2 ≤ ε = sqrt(2 − 2τ). Fit
     k-means cells (the IVFIndex coarse-quantizer machinery), record each
@@ -295,43 +265,41 @@ def embedding_neardup_pairs_bucketed(
     # shipped up to N+1 full embedding vectors to the driver per call
     # just to decide. raw rows >= non-zero-norm rows, so raw <= gate
     # still bounds the collect below.
-    driver_solve_rows = effective_gate(driver_solve_rows)
-    if driver_solve_rows > 0:
-        if rows_at_most(df.select(F.col(id_col)), driver_solve_rows):
-            import pyarrow as pa
+    if driver_solves(df.select(F.col(id_col)), NEARDUP_DRIVER_SOLVE_ROWS):
+        import pyarrow as pa
 
-            probe = unit.toArrow()  # bounded by the row probe above
-            ids = np.asarray(
-                probe.column("__id").to_numpy(zero_copy_only=False),
-                dtype=np.int64,
-            )
-            if len(ids) == 0:
-                return local_df(spark, [], out_schema)
-            U = np.array(probe.column("__unit").to_pylist(), dtype=np.float64)
-            thr_d = min_cosine - 1e-12
-            outs_a, outs_b, outs_c = [], [], []
-            step = _DRIVER_PAIR_CHUNK  # bounds the sims slab at step x n
-            for a in range(0, len(U), step):
-                sims = U[a : a + step] @ U.T
-                bi, bj = np.nonzero(sims >= thr_d)
-                gi = bi + a
-                # id-strict (r13 ADVICE): the distributed diagonal kernel
-                # keeps lids[bi] < lids[bj], so duplicate ids never emit
-                # self-pairs — match it exactly (ids unique => identical
-                # to the former position-triangle keep)
-                keep = ids[gi] < ids[bj]
-                ia, ib = ids[gi[keep]], ids[bj[keep]]
-                outs_a.append(np.minimum(ia, ib))
-                outs_b.append(np.maximum(ia, ib))
-                outs_c.append(sims[bi[keep], bj[keep]])
-            tbl = pa.table(
-                {
-                    "id_a": pa.array(np.concatenate(outs_a), pa.int64()),
-                    "id_b": pa.array(np.concatenate(outs_b), pa.int64()),
-                    "cosine": pa.array(np.concatenate(outs_c), pa.float64()),
-                }
-            )
-            return local_df(spark, tbl)
+        probe = unit.toArrow()  # bounded by the row probe above
+        ids = np.asarray(
+            probe.column("__id").to_numpy(zero_copy_only=False),
+            dtype=np.int64,
+        )
+        if len(ids) == 0:
+            return local_df(spark, [], out_schema)
+        U = np.array(probe.column("__unit").to_pylist(), dtype=np.float64)
+        thr_d = min_cosine - 1e-12
+        outs_a, outs_b, outs_c = [], [], []
+        step = _DRIVER_PAIR_CHUNK  # bounds the sims slab at step x n
+        for a in range(0, len(U), step):
+            sims = U[a : a + step] @ U.T
+            bi, bj = np.nonzero(sims >= thr_d)
+            gi = bi + a
+            # id-strict (r13 ADVICE): the distributed diagonal kernel
+            # keeps lids[bi] < lids[bj], so duplicate ids never emit
+            # self-pairs — match it exactly (ids unique => identical
+            # to the former position-triangle keep)
+            keep = ids[gi] < ids[bj]
+            ia, ib = ids[gi[keep]], ids[bj[keep]]
+            outs_a.append(np.minimum(ia, ib))
+            outs_b.append(np.maximum(ia, ib))
+            outs_c.append(sims[bi[keep], bj[keep]])
+        tbl = pa.table(
+            {
+                "id_a": pa.array(np.concatenate(outs_a), pa.int64()),
+                "id_b": pa.array(np.concatenate(outs_b), pa.int64()),
+                "cosine": pa.array(np.concatenate(outs_c), pa.float64()),
+            }
+        )
+        return local_df(spark, tbl)
 
     from chatbot_spark.operators.ann import _sample_matrix
 

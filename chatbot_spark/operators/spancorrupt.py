@@ -8,47 +8,34 @@ examples are a pure function of the corpus — reproducible across runs,
 engines and partitionings (swap the seed string per epoch for fresh
 corruption), and therefore oracle-checkable bit-for-bit.
 
-Pipeline (all keyed by doc/(doc,pos) — no global state):
-  1. positional postings (posexplode),
+Construction (strictly per document — one narrow pass of array
+expressions, no join, window or exchange):
+  1. tokens: whitespace split of the lowered text (textstats.tokens);
+     zero-token and null documents emit no row,
   2. span seeds: position p seeds a span iff hash(p) mod 1000 <
      start_permille; its length is 1 + hash mod max_span,
-  3. masked set = union of seeded ranges clipped to the document
-     (explode + distinct), overlaps allowed,
-  4. islands: maximal masked runs via the mpos − row_number() trick
-     (window keyed by doc) — each island is ONE sentinel span even when
-     several seeds overlap, exactly T5's contiguous-span contract,
+  3. masked set: p is masked iff a seed among the max_span positions
+     ending at p covers it (overlaps allowed),
+  4. islands: maximal masked runs (a start is masked with an unmasked
+     predecessor) — each island is ONE sentinel span even when several
+     seeds overlap, exactly T5's contiguous-span contract,
   5. assembly: unmasked tokens keep their position, an island's first
      position becomes <extra_id_k>, interior masked positions drop;
      targets are '<extra_id_k> tok ...' per island in order.
 
-Per-doc strings are reassembled with sort_array(collect_list(struct)) —
-deterministic order from the unique pos key, never shuffle luck.
+All of it is integer/string logic over positions in array order, so
+the output is deterministic and oracle-checkable (the DuckDB oracle in
+workload.py replays the same md5 arithmetic).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from chatbot_spark.operators.textstats import let, tokens
 
 __all__ = ["t5_span_corrupt"]
-
-
-def _pos_hash(id_col: str) -> F.Column:
-    return F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col(id_col).cast("string"), F.lit(":"), F.col("pos").cast("string")
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
 
 
 def t5_span_corrupt(
@@ -70,20 +57,14 @@ def t5_span_corrupt(
     narrow pass of array expressions — the former position-keyed
     posexplode + 2 joins + 2 windows + 3 persists (6 exchanges at sf1)
     assembled per-position rows only to regroup them by the document
-    they never left. Exact by construction: identical md5/integer
-    arithmetic per position, identical island decomposition (a position
-    is masked iff one of the max_span preceding seeds covers it; an
-    island starts where masked starts), identical join-with-space
-    assembly — all integer/string logic, no floats. The join form
-    remains below (:func:`_t5_span_corrupt_joins`) as the pinned
-    equivalence twin.
+    they never left. All integer/string logic, no floats.
     """
     sentinel = lambda k: F.concat(  # noqa: E731  k is the 0-based island index
         F.lit("<extra_id_"), k.cast("string"), F.lit(">")
     )
 
     def _hash_at(p: Column) -> Column:
-        # the exact _pos_hash expression with pos = p (lambda variable)
+        # md5(doc_id:pos) -> first 8 hex digits -> long, pos = p
         return F.conv(
             F.substring(
                 F.md5(
@@ -187,8 +168,7 @@ def t5_span_corrupt(
         F.col(id_col),
         let(tokens(F.col(text_col)), _assemble).alias("__r"),
     ).filter(
-        # the join form's posexplode drops zero-token (and null-text)
-        # documents from the output entirely — replicate that contract
+        # zero-token (and null-text) documents emit no row
         F.col("__r.n_tokens") >= 1
     )
     return out.select(
@@ -198,140 +178,4 @@ def t5_span_corrupt(
         "__r.n_masked",
         "__r.input",
         "__r.target",
-    )
-
-
-def _t5_span_corrupt_joins(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    start_permille: int = 60,
-    max_span: int = 3,
-) -> DataFrame:
-    """The r13 position-keyed join/window execution of
-    :func:`t5_span_corrupt` — kept as the pinned equivalence twin (the
-    array form must emit the identical row set; tests toggle between
-    them on the same corpus)."""
-    tk = tokens(F.col(text_col))
-    # The postings feed THREE consumers (seed scan, mask-token join,
-    # final assembly) and the span table two; without persisting, each
-    # branch re-scans and re-explodes the corpus — 7 parquet scans in
-    # the physical plan (measured). Persist the shared subtrees so the
-    # corpus is read ONCE however many branches compose downstream —
-    # the same shared-subtree discipline as plans/dataprep.
-    post = docs.select(
-        F.col(id_col).alias("__id"),
-        F.size(tk).alias("n"),
-        F.posexplode(tk).alias("pos", "tok"),
-    ).persist()
-    h = _pos_hash("__id")
-    seeded = post.withColumn("__h", h).filter(
-        F.col("__h") % 1000 < start_permille
-    )
-    masked = (
-        seeded.select(
-            "__id",
-            F.explode(
-                F.sequence(
-                    F.col("pos"),
-                    F.least(
-                        F.col("pos") + (F.col("__h") % max_span).cast("int"),
-                        F.col("n") - 1,
-                    ),
-                )
-            ).alias("mpos"),
-        )
-        .distinct()
-    )
-    maskt = masked.join(
-        post.select("__id", F.col("pos").alias("mpos"), "tok"), ["__id", "mpos"]
-    ).persist()
-    w_run = Window.partitionBy("__id").orderBy("mpos")
-    runs = maskt.withColumn("__grp", F.col("mpos") - F.row_number().over(w_run))
-    spans = runs.groupBy("__id", "__grp").agg(
-        F.min("mpos").alias("span_start"),
-        F.count("*").cast("long").alias("span_len"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("mpos", "tok"))),
-                lambda s: s["tok"],
-            ),
-            " ",
-        ).alias("span_text"),
-    )
-    w_span = Window.partitionBy("__id").orderBy("span_start")
-    spans = spans.withColumn("span_idx", F.row_number().over(w_span)).persist()
-    flags = maskt.select(
-        F.col("__id").alias("__fid"), F.col("mpos").alias("__fpos"), F.lit(1).alias("__m")
-    )
-    sent = spans.select(
-        F.col("__id").alias("__sid"), F.col("span_start").alias("__spos"), "span_idx"
-    )
-    pieces = (
-        post.join(
-            flags,
-            (F.col("__id") == F.col("__fid")) & (F.col("pos") == F.col("__fpos")),
-            "left",
-        )
-        .join(
-            sent,
-            (F.col("__id") == F.col("__sid")) & (F.col("pos") == F.col("__spos")),
-            "left",
-        )
-        .select(
-            "__id",
-            "pos",
-            F.when(
-                F.col("span_idx").isNotNull(),
-                F.concat(
-                    F.lit("<extra_id_"),
-                    (F.col("span_idx") - 1).cast("string"),
-                    F.lit(">"),
-                ),
-            )
-            .when(F.col("__m").isNotNull(), F.lit(None).cast("string"))
-            .otherwise(F.col("tok"))
-            .alias("piece"),
-            "n",
-        )
-    )
-    inputs = pieces.groupBy("__id").agg(
-        F.max("n").cast("long").alias("n_tokens"),
-        F.array_join(
-            F.filter(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "piece"))),
-                    lambda s: s["piece"],
-                ),
-                lambda x: x.isNotNull(),
-            ),
-            " ",
-        ).alias("input"),
-    )
-    targets = spans.groupBy("__id").agg(
-        F.count("*").cast("long").alias("n_spans"),
-        F.sum("span_len").cast("long").alias("n_masked"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("span_idx", "span_text"))),
-                lambda s: F.concat(
-                    F.lit("<extra_id_"),
-                    (s["span_idx"] - 1).cast("string"),
-                    F.lit("> "),
-                    s["span_text"],
-                ),
-            ),
-            " ",
-        ).alias("target"),
-    )
-    return (
-        inputs.join(targets, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            "n_tokens",
-            F.coalesce("n_spans", F.lit(0).cast("long")).alias("n_spans"),
-            F.coalesce("n_masked", F.lit(0).cast("long")).alias("n_masked"),
-            "input",
-            F.coalesce("target", F.lit("")).alias("target"),
-        )
     )

@@ -33,11 +33,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chatbot_spark.functions.vector import cosine_similarity, l2_norm
+from chatbot_spark.functions.vector import l2_norm
 from chatbot_spark.io.smallio import local_df
 from chatbot_spark.io.tables import load_table, spread
 from chatbot_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs
-from chatbot_spark.operators.similarity import cosine_topk_join, embedding_neardup_pairs
+from chatbot_spark.operators.similarity import embedding_neardup_pairs
 from chatbot_spark.operators.textstats import with_text_stats
 from chatbot_spark.operators.topk import knn_join
 
@@ -253,15 +253,18 @@ FROM ranked WHERE rank <= 10
 )
 def knn_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine variant of I4 (cosine is the conventional metric for text
-    embeddings; the engine supports l2/cosine/inner_product)."""
+    embeddings; the engine supports l2/cosine/inner_product). knn_join
+    ranks by cosine distance; sim = 1 - dist."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queries_from_embeddings(spark, sf_dir)
-    res = cosine_topk_join(q, emb, k=10, corpus_id="vec_id", corpus_vec="embedding")
+    res = knn_join(
+        q, emb, k=10, metric="cosine", corpus_id="vec_id", corpus_vec="embedding"
+    )
     return res.select(
         "query_id",
         "neighbor_id",
         F.col("rank").cast("long").alias("rank"),
-        F.round("sim", 6).alias("sim"),
+        F.round(1.0 - F.col("dist"), 6).alias("sim"),
     )
 
 
@@ -11463,9 +11466,8 @@ FROM sel_{_MMR_K}
 @query("mmr_diversified", _mmr_oracle(), sf1=True)
 def mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversified rerank (operators/diversify.py::mmr_select) over
-    the standard 5-query workload: stage 1 is the exact distributed
-    top-20 by cosine (two-phase WindowGroupLimit like every knn query);
-    stage 2 builds the within-shortlist pair sims JVM-side and runs the
+    the standard 5-query workload: stage 1 is the exact top-20 by cosine
+    (knn_join's scan_topk pass, rel = 1 - cosine distance); stage 2 builds the within-shortlist pair sims JVM-side and runs the
     greedy (lam=0.7, k=8) in ONE applyInPandas pass keyed by query — the
     shape that parallelizes over millions of queries. Bit-exact oracle:
     all 8 rounds unrolled."""
@@ -11473,14 +11475,16 @@ def mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queries_from_embeddings(spark, sf_dir, n=5)
-    sims = cosine_topk_join(
-        q, emb, k=_MMR_N, query_id="query_id", query_vec="query_embedding",
-        corpus_id="vec_id", corpus_vec="embedding",
+    top = knn_join(
+        q, emb, k=_MMR_N, metric="cosine", corpus_id="vec_id",
+        corpus_vec="embedding",
     )
-    cands = sims.join(
+    cands = top.join(
         emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
         "neighbor_id",
-    ).select("query_id", "neighbor_id", "embedding", F.col("sim").alias("rel"))
+    ).select(
+        "query_id", "neighbor_id", "embedding", (1.0 - F.col("dist")).alias("rel")
+    )
     res = mmr_select(cands, k=_MMR_K, lam=0.7)
     return res.select(
         "query_id", "rank", "neighbor_id",

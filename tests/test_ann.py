@@ -371,23 +371,6 @@ def test_nsw_write_load_prunes_partitions(spark, corpus, queries, tmp_path):
     assert "shard" in plan.split("PartitionFilters")[1][:200]
 
 
-def test_nsw_chunked_queries_equal_unchunked(corpus, queries):
-    """Chunk-invariance: per-chunk routing + per-chunk beam branches must
-    compose to the identical global top-k (beam distances are per-query
-    numpy folds — chunk-shape independent, so bit-equality holds)."""
-    from chatbot_spark.operators.hnsw import NSWGraphIndex
-
-    index = NSWGraphIndex.build(
-        corpus, vec_col="embedding", id_col="vec_id", nlist=8, m=16,
-        ef_construction=128,
-    )
-    whole = sorted(map(tuple, index.search(queries, k=10, nprobe=4).collect()))
-    chunked = sorted(
-        map(tuple, index.search(queries, k=10, nprobe=4, query_chunk=3).collect())
-    )
-    assert whole == chunked
-
-
 def test_ivf_append_fullprobe_equals_exact_over_union(spark, corpus, queries, tmp_path):
     """Index maintenance: build on half the corpus, append the other half
     (no centroid refit), full-probe search over the grown index must equal
@@ -517,8 +500,8 @@ def _n_jobs(spark) -> int:
 def test_ann_search_jobs_independent_of_query_count(spark, corpus):
     """The distributed query side: a PQ/IVF-PQ/NSW search is one bounded
     query-collect plus ONE scan job — the Spark job count must not grow
-    with the query count or shrink with query_chunk (the old driver chunk
-    loop submitted one serialized job per chunk)."""
+    with the query count or shrink with PQ/IVF-PQ's query_chunk (the old
+    driver chunk loop submitted one serialized job per chunk)."""
     from chatbot_spark.operators.hnsw import NSWGraphIndex
     from chatbot_spark.operators.ivfpq import IVFPQIndex
     from chatbot_spark.operators.pq import PQIndex
@@ -544,15 +527,13 @@ def test_ann_search_jobs_independent_of_query_count(spark, corpus):
         return _n_jobs(spark) - before
 
     for idx, kwargs in (
-        (pq, {}),
-        (ivfpq, {"nprobe": 2}),
+        (pq, {"query_chunk": 3}),
+        (ivfpq, {"nprobe": 2, "query_chunk": 3}),
         (nsw, {"nprobe": 2}),
     ):
         few = jobs_for(lambda: idx.search(q_of(3), k=5, **kwargs))
-        many_chunked = jobs_for(
-            lambda: idx.search(q_of(40), k=5, query_chunk=3, **kwargs)
-        )
-        assert many_chunked == few, type(idx).__name__
+        many = jobs_for(lambda: idx.search(q_of(40), k=5, **kwargs))
+        assert many == few, type(idx).__name__
         assert few <= 6, type(idx).__name__
 
 

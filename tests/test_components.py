@@ -111,10 +111,10 @@ def test_incremental_equals_scratch_on_union(spark):
     assert got == _uf_reference(base + delta)
 
 
-def test_incremental_driver_gate_equals_distributed(spark):
+def test_incremental_driver_gate_equals_distributed(spark, monkeypatch):
     """r13 composition gate: the driver replay of contract + solve +
-    stitch must equal the distributed composition (gate toggled via
-    driver_solve_rows) as a row MULTISET, across random deltas, pinned
+    stitch must equal the distributed composition (forced via
+    CBS_FORCE_DISTRIBUTED=1) as a row MULTISET, across random deltas, pinned
     rounds, and assert_converged."""
     from chatbot_spark.operators.components import incremental_components
 
@@ -134,14 +134,11 @@ def test_incremental_driver_gate_equals_distributed(spark):
         drv = sorted(
             map(tuple, incremental_components(prev, ddf, **kw).collect())
         )
-        dist = sorted(
-            map(
-                tuple,
-                incremental_components(
-                    prev, ddf, driver_solve_rows=0, **kw
-                ).collect(),
+        with monkeypatch.context() as m:
+            m.setenv("CBS_FORCE_DISTRIBUTED", "1")
+            dist = sorted(
+                map(tuple, incremental_components(prev, ddf, **kw).collect())
             )
-        )
         assert drv == dist, kw
     # under-pinned rounds must raise identically through the gate
     import pytest
@@ -258,7 +255,7 @@ def test_decremental_unknown_removed_edge_is_harmless(spark):
     assert got == {0: 0, 1: 0}
 
 
-def test_cc_driver_solve_matches_distributed_exactly(spark):
+def test_cc_driver_solve_matches_distributed_exactly(spark, monkeypatch):
     # r13: the small-graph driver fast path (numpy recurrence twin) must
     # be bit-identical to the distributed rounds in EVERY mode — fixpoint,
     # converged truncated pin, and a NON-converged truncated pin (the
@@ -272,23 +269,26 @@ def test_cc_driver_solve_matches_distributed_exactly(spark):
             r["node"]: r["component"]
             for r in connected_components(df, rounds=rounds).collect()
         }
-        dist = {
-            r["node"]: r["component"]
-            for r in connected_components(
-                df, rounds=rounds, driver_solve_rows=0
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setenv("CBS_FORCE_DISTRIBUTED", "1")
+            dist = {
+                r["node"]: r["component"]
+                for r in connected_components(df, rounds=rounds).collect()
+            }
         assert fast == dist, f"rounds={rounds}"
 
 
-def test_cc_driver_solve_assert_converged_raises_like_distributed(spark):
+def test_cc_driver_solve_assert_converged_raises_like_distributed(
+    spark, monkeypatch
+):
     # a 64-node chain cannot converge in 2 rounds: both regimes must raise
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "src long, dst long"
     )
-    for kw in ({}, {"driver_solve_rows": 0}):
+    for forced in ("0", "1"):
+        monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", forced)
         with pytest.raises(RuntimeError, match="did not reach the fixpoint"):
-            connected_components(chain, rounds=2, assert_converged=True, **kw)
+            connected_components(chain, rounds=2, assert_converged=True)
 
 
 def test_decremental_gate_shuffle_path_same_labels_and_warns(spark):

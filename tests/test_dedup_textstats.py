@@ -715,67 +715,6 @@ def test_bpe_200_merges_matches_reference_with_bounded_plans(spark):
     assert plan.count("replace(") <= 64
 
 
-def test_bpe_batched_equals_serial_greedy(spark):
-    """r9 verdict item 1: the batched trainer must reproduce serial
-    greedy BIT-FOR-BIT (same merge list, same weights, same order) at
-    every batch size — the disjoint-prefix + strict-count-truncation +
-    collision-guard rule is an equivalence, not an approximation."""
-    import random
-
-    from chatbot_spark.operators.bpe import train_bpe_batched
-
-    rng = random.Random(5)
-    vocab = [
-        "".join(rng.choice("abcdef") for _ in range(rng.randrange(3, 9)))
-        for _ in range(300)
-    ]
-    word_cnt: dict[str, int] = {}
-    for w in vocab:
-        word_cnt[w] = word_cnt.get(w, 0) + rng.randrange(1, 6)
-    docs = spark.createDataFrame(
-        [(w + " ") * c for w, c in word_cnt.items()], "string"
-    ).toDF("text")
-    want = _py_bpe_reference(word_cnt, 120)
-    for bs in (2, 8, 64):
-        merges, _ = train_bpe_batched(
-            docs, n_merges=120, batch_size=bs, checkpoint_every=64
-        )
-        assert merges == want, f"batch_size={bs} diverged from serial greedy"
-
-
-def test_bpe_batched_adversarial_shared_symbols(spark):
-    """The case a naive 'top-B disjoint pairs, skipping conflicts' batch
-    gets WRONG: a mid-ranked pair sharing a symbol with the top pair
-    ((x,a) between (a,b) and (c,d)) can, after (a,b) merges, still
-    outrank (c,d) — so (c,d) must NOT ride in (a,b)'s batch. The
-    prefix-stop rule stops the batch at (x,a); serial equivalence on a
-    corpus built to trigger exactly that, plus heavy self-overlap
-    ('ababab') and chain ('abcdef') structure."""
-    import random
-
-    from chatbot_spark.operators.bpe import train_bpe_batched
-
-    rng = random.Random(99)
-    words = {}
-    # (a,b) dominant, (x,a) mid, (c,d) low — plus overlapping repeats
-    words["ab"] = 60
-    words["xa"] = 25
-    words["xab"] = 15  # (x,a) and (a,b) in one word
-    words["cd"] = 30
-    words["ababab"] = 7
-    words["abcdef"] = 9
-    for _ in range(60):
-        w = "".join(rng.choice("abcdxf") for _ in range(rng.randrange(2, 7)))
-        words[w] = words.get(w, 0) + rng.randrange(1, 4)
-    docs = spark.createDataFrame(
-        [(w + " ") * c for w, c in words.items()], "string"
-    ).toDF("text")
-    want = _py_bpe_reference(words, 40)
-    for bs in (4, 32):
-        merges, _ = train_bpe_batched(docs, n_merges=40, batch_size=bs)
-        assert merges == want, f"batch_size={bs} diverged on adversarial corpus"
-
-
 def test_duplicated_spans_sa_equals_window_form(spark):
     """The hash-free suffix-grouping form and the md5 window form must
     produce the IDENTICAL span set (the docstring's equivalence proof,
@@ -819,11 +758,11 @@ def test_duplicated_spans_sa_non_power_of_two_window(spark):
     assert got == [(1, 1, 6), (2, 3, 8)]
 
 
-def test_duplicated_spans_sa_driver_gate_equals_distributed(spark):
+def test_duplicated_spans_sa_driver_gate_equals_distributed(spark, monkeypatch):
     """r13 size gate: the driver numpy kernel (token dictionary-coding +
     byte-view window grouping) must return EXACTLY the distributed
     prefix-doubling rounds' spans — same random corpus run through both
-    paths by toggling driver_solve_tokens, power-of-two and overlapping-
+    paths by toggling CBS_FORCE_DISTRIBUTED, power-of-two and overlapping-
     blocks windows, and the empty/no-dup edges."""
     import random
 
@@ -843,7 +782,9 @@ def test_duplicated_spans_sa_driver_gate_equals_distributed(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for w in (4, 6, 8):
         drv = duplicated_spans_sa(df, window=w)  # gate on (tiny corpus)
-        dist = duplicated_spans_sa(df, window=w, driver_solve_tokens=0)
+        with monkeypatch.context() as m:
+            m.setenv("CBS_FORCE_DISTRIBUTED", "1")
+            dist = duplicated_spans_sa(df, window=w)
         assert [f.dataType for f in drv.schema.fields] == [
             f.dataType for f in dist.schema.fields
         ], f"window={w}: schema drift between driver kernel and rounds"

@@ -56,7 +56,7 @@ def test_is_local_path_allowlist():
     assert is_local_path(r"C:\data\x")
 
 
-def test_sa_dedup_null_text_under_gate(spark):
+def test_sa_dedup_null_text_under_gate(spark, monkeypatch):
     """A null text row must not crash the driver SA kernel, and the gated
     result must equal the distributed rounds (which drop __n < 1 rows)."""
     from chatbot_spark.operators.dedup import duplicated_spans_sa
@@ -72,12 +72,8 @@ def test_sa_dedup_null_text_under_gate(spark):
     gated = sorted(
         map(tuple, duplicated_spans_sa(df, window=8).collect())
     )
-    dist = sorted(
-        map(
-            tuple,
-            duplicated_spans_sa(df, window=8, driver_solve_tokens=0).collect(),
-        )
-    )
+    monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", "1")
+    dist = sorted(map(tuple, duplicated_spans_sa(df, window=8).collect()))
     assert gated == dist
 
 

@@ -55,36 +55,27 @@ def test_pagerank_zero_iterations_uniform(spark):
     assert {r["rank"] for r in got} == {10**12 // 2}
 
 
-def test_pagerank_driver_gate_equals_distributed(spark):
+def test_pagerank_driver_gate_equals_distributed(spark, monkeypatch):
     """r13 size gate: the numpy replay must equal the distributed Pregel
-    rounds bit-for-bit (toggled via driver_solve_rows), including the
+    rounds bit-for-bit (forced via CBS_FORCE_DISTRIBUTED=1), including the
     warm-start init path with nodes missing from init (coalesce to r0)
     and init rows for nodes absent from the new graph (dropped)."""
     edges = [(i % 9, (i * 5 + 2) % 9) for i in range(25)] + [(9, 1), (2, 9)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    drv = {
-        r["node"]: r["rank"] for r in pagerank_integer(df, iterations=4).collect()
-    }
-    dist = {
-        r["node"]: r["rank"]
-        for r in pagerank_integer(df, iterations=4, driver_solve_rows=0).collect()
-    }
-    assert drv == dist
     # warm start: init covers some nodes, adds one absent from the graph
     init = spark.createDataFrame(
         [(0, 7_000_000), (1, 3_000_000), (999, 5)], "node long, rank long"
     )
-    drv_w = {
-        r["node"]: r["rank"]
-        for r in pagerank_integer(df, iterations=2, init=init).collect()
-    }
-    dist_w = {
-        r["node"]: r["rank"]
-        for r in pagerank_integer(
-            df, iterations=2, init=init, driver_solve_rows=0
-        ).collect()
-    }
-    assert drv_w == dist_w
+
+    def ranks(**kw):
+        return {
+            r["node"]: r["rank"] for r in pagerank_integer(df, **kw).collect()
+        }
+
+    drv, drv_w = ranks(iterations=4), ranks(iterations=2, init=init)
+    monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", "1")
+    assert drv == ranks(iterations=4)
+    assert drv_w == ranks(iterations=2, init=init)
     assert 999 not in drv_w
 
 

@@ -164,7 +164,9 @@ def test_driver_solve_results_are_arrow_backed(spark):
     assert sorted(map(tuple, cc.collect())) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
 
 
-def test_neardup_bucketed_empty_and_blocked_tables_are_arrow_backed(spark):
+def test_neardup_bucketed_empty_and_blocked_tables_are_arrow_backed(
+    spark, monkeypatch
+):
     from chatbot_spark.operators.similarity import embedding_neardup_pairs_bucketed
 
     X = _vectors(40, 8, seed=3)
@@ -174,9 +176,8 @@ def test_neardup_bucketed_empty_and_blocked_tables_are_arrow_backed(spark):
     assert not _python_rdd(empty)
     assert empty.collect() == []
 
-    blocked = embedding_neardup_pairs_bucketed(
-        corpus, min_cosine=0.99, nlist=4, driver_solve_rows=0
-    )
+    monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", "1")
+    blocked = embedding_neardup_pairs_bucketed(corpus, min_cosine=0.99, nlist=4)
     assert not _python_rdd(blocked)
     assert [(r.id_a, r.id_b) for r in blocked.collect()] == [(0, 1)]
 

@@ -20,21 +20,25 @@ TEXTS = [
 ]
 
 
+def _rebuild(ex):
+    """Input with every sentinel replaced by its target span, whitespace
+    normalized."""
+    spans = dict(
+        (int(m.group(1)), m.group(2).strip())
+        for m in re.finditer(
+            r"<extra_id_(\d+)>((?: (?!<extra_id_)\S+)*)", ex["target"]
+        )
+    )
+    rebuilt = re.sub(
+        r"<extra_id_(\d+)>", lambda m: spans[int(m.group(1))], ex["input"]
+    )
+    return re.sub(r"\s+", " ", rebuilt).strip()
+
+
 def test_span_corrupt_reconstructs_original(spark):
     got = _examples(spark, TEXTS)
     for i, text in enumerate(TEXTS):
-        ex = got[i]
-        spans = dict(
-            (int(m.group(1)), m.group(2).strip())
-            for m in re.finditer(
-                r"<extra_id_(\d+)>((?: (?!<extra_id_)\S+)*)", ex["target"]
-            )
-        )
-        rebuilt = re.sub(
-            r"<extra_id_(\d+)>", lambda m: spans[int(m.group(1))], ex["input"]
-        )
-        rebuilt = re.sub(r"\s+", " ", rebuilt).strip()
-        assert rebuilt == text.lower(), f"doc {i}"
+        assert _rebuild(got[i]) == text.lower(), f"doc {i}"
 
 
 def test_span_corrupt_counts_consistent(spark):
@@ -66,16 +70,15 @@ def test_span_corrupt_zero_span_doc_passthrough(spark):
         assert ex["input"] == "<extra_id_0>" and ex["target"] == "<extra_id_0> solo"
 
 
-def test_span_corrupt_array_form_equals_joins_form(spark):
-    """r14: the single-pass array execution must emit the identical row
-    set as the r13 position-keyed join/window form — including
-    zero-token, null and whitespace-only documents (which both drop)."""
-    from chatbot_spark.operators.spancorrupt import _t5_span_corrupt_joins
-
+def test_span_corrupt_edge_inputs(spark):
+    """Empty, null and whitespace-only documents emit no row; tab and
+    newline runs separate tokens like spaces; every emitted row rebuilds
+    its whitespace-normalized text."""
     texts = TEXTS + ["", None, "   ", "a b", " x  y\tz \n w"]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    a = sorted(map(tuple, t5_span_corrupt(df).collect()))
-    b = sorted(map(tuple, _t5_span_corrupt_joins(df).collect()))
-    assert a == b
+    got = _examples(spark, texts)
+    n = len(TEXTS)
+    assert sorted(got) == list(range(n)) + [n + 3, n + 4]
+    assert got[n + 3]["n_tokens"] == 2
+    assert got[n + 4]["n_tokens"] == 4
+    for i, ex in got.items():
+        assert _rebuild(ex) == " ".join(texts[i].lower().split()), f"doc {i}"

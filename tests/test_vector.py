@@ -234,10 +234,12 @@ def test_bucketed_neardup_equals_exact(spark, sf_dir):
             assert v == pytest.approx(exact[k], abs=1e-6)
 
 
-def test_bucketed_neardup_driver_gate_equals_distributed(spark, sf_dir):
+def test_bucketed_neardup_driver_gate_equals_distributed(
+    spark, sf_dir, monkeypatch
+):
     """r13 size gate: the driver chunked-BLAS kernel must emit the same
-    pair set as the distributed block machinery (gate toggled via
-    driver_solve_rows), cosines within the documented reassociation
+    pair set as the distributed block machinery (forced via
+    CBS_FORCE_DISTRIBUTED=1), cosines within the documented reassociation
     band, and a chunk boundary inside the corpus must not drop or
     duplicate cross-chunk pairs."""
     import pytest
@@ -246,12 +248,14 @@ def test_bucketed_neardup_driver_gate_equals_distributed(spark, sf_dir):
     from chatbot_spark.operators.similarity import embedding_neardup_pairs_bucketed
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dist = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in embedding_neardup_pairs_bucketed(
-            emb, min_cosine=0.35, nlist=8, driver_solve_rows=0
-        ).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setenv("CBS_FORCE_DISTRIBUTED", "1")
+        dist = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in embedding_neardup_pairs_bucketed(
+                emb, min_cosine=0.35, nlist=8
+            ).collect()
+        }
     drv = {
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in embedding_neardup_pairs_bucketed(

@@ -9,18 +9,19 @@ Method: one deterministic synthetic vocabulary (LCG words — no RNG deps);
 train_bpe from scratch at n_merges = 50, 100, 200 gives the EARLY-round
 marginals — which sit on a RAMP (~0.22 s/round with a tiny pair table,
 plateauing ~0.45 s/round by round ~150 on a quiet host), so the
-late/early ratio of this triple measures the ramp, not growth. The claim
-that matters for production vocabs is the PLATEAU: the single 4k-merge
-batched run's per-round milestones decompose marginal-per-merge =
-sec/round × rounds/merge at every 1k boundary, and sec/round must stay
-~flat from 1k to 4k (it measures 0.57 → 0.41–0.48; a lineage- or
-recount-driven cost would grow with the round number instead — the old
-pre-r9 form was superlinear by construction).
+late/early ratio of this triple measures the ramp, not growth. The
+default run updates those serial fields of BENCH_BPE.json in place; the
+other fields are kept as committed history.
 
-Writes BENCH_BPE.json at the repo root; bench.py attaches it as
-``bpe_scale``.
+``--speculative [n]`` instead trains train_bpe_speculative to n merges
+(default 2000) and records its driver actions, realized batch factor and
+per-1k segments in the "speculative" section. Its merge list equals
+serial greedy's by the pytest equivalence tests, so no serial cross-run
+is paid here.
 
-Usage: PYTHONPATH=/root/repo python tools/bench_bpe.py [n_words]
+bench.py attaches BENCH_BPE.json's serial fields as ``bpe_scale``.
+
+Usage: PYTHONPATH=. python tools/bench_bpe.py [n_words] [--speculative [n]]
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PATH = os.path.join(REPO, "BENCH_BPE.json")
 
 MERGE_POINTS = (50, 100, 200)
 
@@ -53,124 +55,62 @@ def make_words(n: int) -> dict[str, int]:
     return words
 
 
-def main() -> int:
-    from chatbot_spark.session import get_spark
-
-    # --serial-only: re-measure just the serial flatness points and
-    # update those fields of the existing BENCH_BPE.json in place —
-    # the 4k batched run costs ~30 min and its segment decomposition
-    # does not need re-measuring to refresh a noisy serial triple.
-    serial_only = "--serial-only" in sys.argv
-    argv = [a for a in sys.argv[1:] if a != "--serial-only"]
-    if "--speculative" in argv:
-        j = argv.index("--speculative")
-        # drop the flag and its optional numeric operand
-        tail = argv[j + 1 : j + 2]
-        drop = 2 if tail and tail[0].isdigit() else 1
-        argv = argv[:j] + argv[j + drop:]
-    n_words = int(argv[0]) if argv else 5000
-    spark = get_spark(
-        "bench-bpe", extra_conf={"spark.ui.showConsoleProgress": "false"}
-    )
-    from chatbot_spark.operators.bpe import train_bpe
-
-    words = make_words(n_words)
-    docs = spark.createDataFrame(
-        [(w + " ") * c for w, c in words.items()], "string"
-    ).toDF("text").repartition(8).persist()
-    docs.count()
-
-    # --speculative [n]: the r12 speculate-then-verify point (r11 verdict
-    # item 4). Runs train_bpe_speculative AND train_bpe_batched to the
-    # same n_merges (default 2000), asserts the merge sequences are
-    # IDENTICAL (batched is itself proven ≡ serial greedy by the pytest
-    # equivalence suite, so equality here certifies speculative ≡ serial
-    # without paying a third 700 s serial run), and records both action
-    # counts — "driver rounds" = distributed actions with a driver
-    # barrier (window sorts + verification collects for speculative; one
-    # argmax sort per loop round for batched), the honest common
-    # denominator. Updates the "speculative" section of BENCH_BPE.json.
-    if "--speculative" in sys.argv:
-        i = sys.argv.index("--speculative")
-        n_spec = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 2000
-        from chatbot_spark.operators.bpe import (
-            train_bpe_batched,
-            train_bpe_speculative,
-        )
-
-        st_s: dict = {}
-        t0 = time.time()
-        ms_spec, _ = train_bpe_speculative(
-            docs, n_merges=n_spec, batch_size=64, spec_chunk=24,
-            checkpoint_every=64, stats=st_s,
-        )
-        spec_sec = round(time.time() - t0, 2)
-        print(f"speculative {n_spec}: {spec_sec}s rounds={st_s['rounds']} "
-              f"factor={round(n_spec / st_s['rounds'], 2)}")
-        st_b: dict = {}
-        t0 = time.time()
-        ms_batch, _ = train_bpe_batched(
-            docs, n_merges=n_spec, batch_size=64, checkpoint_every=64,
-            stats=st_b,
-        )
-        batch_sec = round(time.time() - t0, 2)
-        print(f"batched {n_spec}: {batch_sec}s rounds={st_b['rounds']} "
-              f"factor={round(n_spec / st_b['rounds'], 2)}")
-        if ms_spec != ms_batch:
-            first = next(
-                (k for k, (x, y) in enumerate(zip(ms_spec, ms_batch)) if x != y),
-                min(len(ms_spec), len(ms_batch)),
-            )
-            raise AssertionError(
-                f"speculative diverged from batched(≡serial) at merge {first}"
-            )
-        path = os.path.join(REPO, "BENCH_BPE.json")
-        with open(path) as f:
+def _update(fields: dict) -> dict:
+    """Merge ``fields`` into BENCH_BPE.json (created if missing)."""
+    payload = {"metric": "bpe_round_flatness", "unit": "sec"}
+    if os.path.exists(PATH):
+        with open(PATH) as f:
             payload = json.load(f)
-        # per-1k segment factors from the speculative milestones
-        seg = {}
-        pts = {0: (0, 0, st_s["t_start_monotonic"])}
-        for b in range(1000, n_spec + 1, 1000):
-            pts[b] = next(
-                (x for x in st_s["milestones"] if x[1] >= b),
-                st_s["milestones"][-1],
-            )
-        bounds = sorted(pts)
-        for lo, hi in zip(bounds, bounds[1:]):
-            r0, g0, s0 = pts[lo]
-            r1, g1, s1 = pts[hi]
-            seg[f"{lo}_{hi}"] = {
-                "sec": round(s1 - s0, 2),
-                "merges": g1 - g0,
-                "driver_rounds": r1 - r0,
-                "batch_factor": round((g1 - g0) / max(r1 - r0, 1), 3),
-            }
-            print(f"spec segment {lo}-{hi}: {seg[f'{lo}_{hi}']}")
-        payload["speculative"] = {
-            "n_merges": n_spec,
-            "total_sec": spec_sec,
-            "driver_rounds": st_s["rounds"],
-            "batch_factor": round(n_spec / st_s["rounds"], 3),
-            "segments": seg,
-            "batched_same_n": {
-                "total_sec": batch_sec,
-                "driver_rounds": st_b["rounds"],
-                "batch_factor": round(n_spec / st_b["rounds"], 3),
-            },
-            "bit_identical_to_batched": True,
-            "rounds_vs_batched_ratio": round(
-                st_b["rounds"] / max(st_s["rounds"], 1), 2
-            ),
-            "loadavg": list(os.getloadavg()),
-        }
-        with open(path, "w") as f:
-            json.dump(payload, f, indent=1)
-            f.write("\n")
-        print(json.dumps({"speculative_rounds": st_s["rounds"],
-                          "batched_rounds": st_b["rounds"]}))
-        docs.unpersist()
-        return 0
+    payload.update(fields)
+    with open(PATH, "w") as f:
+        json.dump(payload, f, indent=1)
+        f.write("\n")
+    return payload
 
+
+def _speculative(docs, n_spec: int) -> None:
+    from chatbot_spark.operators.bpe import train_bpe_speculative
+
+    st: dict = {}
+    t0 = time.time()
+    train_bpe_speculative(
+        docs, n_merges=n_spec, batch_size=64, spec_chunk=24,
+        checkpoint_every=64, stats=st,
+    )
+    spec_sec = round(time.time() - t0, 2)
+    print(f"speculative {n_spec}: {spec_sec}s rounds={st['rounds']} "
+          f"factor={round(n_spec / st['rounds'], 2)}")
+    # per-1k segment factors from the milestones (rounds, merges, monotonic)
+    seg = {}
+    pts = {0: (0, 0, st["t_start_monotonic"])}
+    for b in range(1000, n_spec + 1, 1000):
+        pts[b] = next(
+            (x for x in st["milestones"] if x[1] >= b), st["milestones"][-1]
+        )
+    bounds = sorted(pts)
+    for lo, hi in zip(bounds, bounds[1:]):
+        r0, g0, s0 = pts[lo]
+        r1, g1, s1 = pts[hi]
+        seg[f"{lo}_{hi}"] = {
+            "sec": round(s1 - s0, 2),
+            "merges": g1 - g0,
+            "driver_rounds": r1 - r0,
+            "batch_factor": round((g1 - g0) / max(r1 - r0, 1), 3),
+        }
+        print(f"spec segment {lo}-{hi}: {seg[f'{lo}_{hi}']}")
+    _update({"speculative": {
+        "n_merges": n_spec,
+        "total_sec": spec_sec,
+        "driver_rounds": st["rounds"],
+        "batch_factor": round(n_spec / st["rounds"], 3),
+        "segments": seg,
+        "loadavg": list(os.getloadavg()),
+    }})
+    print(json.dumps({"speculative_rounds": st["rounds"]}))
+
+
+def _serial(docs, n_words: int) -> None:
+    from chatbot_spark.operators.bpe import train_bpe
 
     totals: dict[int, float] = {}
     merge_counts: dict[int, int] = {}
@@ -180,100 +120,9 @@ def main() -> int:
         totals[n] = round(time.time() - t0, 2)
         merge_counts[n] = len(merges)
         print(f"n_merges={n}: {totals[n]}s ({len(merges)} merges learned)")
-
-    if serial_only:
-        m_lo = (totals[100] - totals[50]) / 50
-        m_hi = (totals[200] - totals[100]) / 100
-        path = os.path.join(REPO, "BENCH_BPE.json")
-        with open(path) as f:
-            payload = json.load(f)
-        payload.update(
-            {
-                "total_sec": {str(k): v for k, v in totals.items()},
-                "merges_learned": {str(k): v for k, v in merge_counts.items()},
-                "marginal_sec_per_round_51_100": round(m_lo, 4),
-                "marginal_sec_per_round_101_200": round(m_hi, 4),
-                "late_vs_early_marginal_ratio": round(m_hi / max(m_lo, 1e-9), 2),
-                "loadavg": list(os.getloadavg()),
-            }
-        )
-        with open(path, "w") as f:
-            json.dump(payload, f, indent=1)
-            f.write("\n")
-        print(json.dumps({k: payload[k] for k in (
-            "total_sec", "late_vs_early_marginal_ratio")}))
-        docs.unpersist()
-        return 0
-
-    # --- production-vocab point (r9 verdict item 1, r10 verdict item 3):
-    # ONE batched run to 4k merges whose per-round milestones decompose
-    # the marginal cost-per-MERGE at every 1k boundary into the cost
-    # model  marginal/merge = sec/ROUND × rounds/merge:
-    #  * sec/round is the real engine cost (argmax sort over the pair
-    #    table + two delta explodes + the keyed fold) — the flatness
-    #    claim applies to THIS term (it grows only with pair-table
-    #    cardinality);
-    #  * rounds/merge = 1/batch-factor is a CORPUS property: late merges
-    #    on a small fixture have near-tied low counts, so the strict
-    #    count>stop truncation (required by the commutation proof)
-    #    degenerates batches toward serial. The winning-count spectrum
-    #    per segment is recorded as direct evidence — on a production
-    #    vocabulary (~10M distinct words) the count spectrum stays
-    #    spread for far longer, so the batch factor holds correspondingly
-    #    deeper into the vocab.
-    from chatbot_spark.operators.bpe import train_bpe_batched
-
-    n_batched = 4000
-    st: dict = {}
-    t0 = time.time()
-    m, _ = train_bpe_batched(
-        docs, n_merges=n_batched, batch_size=64, checkpoint_every=64,
-        stats=st,
-    )
-    batched_total = round(time.time() - t0, 2)
-    docs.unpersist()
-    print(f"batched n_merges={n_batched}: {batched_total}s "
-          f"({len(m)} merges, {st.get('rounds')} rounds)")
-
-    # segment stats from the milestones: first tuple at/after each 1k
-    # merge boundary (rounds, merges, monotonic)
-    milestones = st.get("milestones", [])
-    t_start = st["t_start_monotonic"]
-    seg_bounds = [0, 1000, 2000, 3000, 4000]
-    seg_pts: dict[int, tuple] = {0: (0, 0, t_start)}
-    for b in seg_bounds[1:]:
-        seg_pts[b] = next(
-            (ms for ms in milestones if ms[1] >= b), milestones[-1]
-        )
-    batched: dict[str, object] = {}
-    marginals: dict[str, float] = {}
-    for lo, hi in zip(seg_bounds, seg_bounds[1:]):
-        r0, g0, s0 = seg_pts[lo]
-        r1, g1, s1 = seg_pts[hi]
-        dm = max(g1 - g0, 1)
-        dr = max(r1 - r0, 1)
-        weights = [w for (_, _, _, _, w) in m[g0:g1]]
-        batched[f"{lo}_{hi}"] = {
-            "sec": round(s1 - s0, 2),
-            "merges": g1 - g0,
-            "driver_rounds": r1 - r0,
-            "sec_per_round": round((s1 - s0) / dr, 4),
-            "batch_factor": round(dm / dr, 3),
-            "sec_per_merge": round((s1 - s0) / dm, 4),
-            # tie-regime evidence: the winning-count spectrum
-            "win_count_median": sorted(weights)[len(weights) // 2]
-            if weights else None,
-            "win_count_max": max(weights) if weights else None,
-        }
-        marginals[f"{lo}_{hi}"] = round((s1 - s0) / dm, 4)
-        print(f"segment {lo}-{hi}: {batched[f'{lo}_{hi}']}")
-
     m_lo = (totals[100] - totals[50]) / 50  # marginal sec/round, rounds 51-100
     m_hi = (totals[200] - totals[100]) / 100  # rounds 101-200
-    spr = [batched[k]["sec_per_round"] for k in sorted(batched)]
-    payload = {
-        "metric": "bpe_round_flatness",
-        "unit": "sec",
+    payload = _update({
         "n_words": n_words,
         "merge_points": list(MERGE_POINTS),
         "total_sec": {str(k): v for k, v in totals.items()},
@@ -281,36 +130,39 @@ def main() -> int:
         "marginal_sec_per_round_51_100": round(m_lo, 4),
         "marginal_sec_per_round_101_200": round(m_hi, 4),
         "late_vs_early_marginal_ratio": round(m_hi / max(m_lo, 1e-9), 2),
-        "batched_n_merges": n_batched,
-        "batched_total_sec": batched_total,
-        "batched_driver_rounds": st.get("rounds"),
-        "batched_segments": batched,
-        "batched_marginal_sec_per_merge": marginals,
-        "batched_sec_per_round_ratio_last_vs_first": round(
-            spr[-1] / max(spr[0], 1e-9), 2
-        ),
-        "batched_vs_serial_extrapolation": round(
-            (m_hi * n_batched) / max(batched_total, 1e-9), 2
-        ),
         "loadavg": list(os.getloadavg()),
-        "note": (
-            "cost model: marginal/merge = sec/round ÷ batch-factor. "
-            "sec/round is the engine term and must stay ~flat (grows "
-            "only with pair-table cardinality); the batch factor is a "
-            "corpus property that decays toward 1 when winning counts "
-            "tie (the strict >stop truncation the greedy-equivalence "
-            "proof requires) — on this 5k-word fixture late merges are "
-            "near-tied (see win_count_median per segment), which is the "
-            "r10 'marginal grows 1.46x' observation decomposed; a "
-            "production vocab keeps counts spread far deeper."
-        ),
-    }
-    with open(os.path.join(REPO, "BENCH_BPE.json"), "w") as f:
-        json.dump(payload, f, indent=1)
-        f.write("\n")
+    })
     print(json.dumps({k: payload[k] for k in (
         "total_sec", "marginal_sec_per_round_51_100",
         "marginal_sec_per_round_101_200", "late_vs_early_marginal_ratio")}))
+
+
+def main() -> int:
+    from chatbot_spark.session import get_spark
+
+    argv = sys.argv[1:]
+    n_spec = None
+    if "--speculative" in argv:
+        j = argv.index("--speculative")
+        # drop the flag and its optional numeric operand
+        tail = argv[j + 1 : j + 2]
+        has_n = bool(tail) and tail[0].isdigit()
+        n_spec = int(tail[0]) if has_n else 2000
+        argv = argv[:j] + argv[j + 1 + has_n:]
+    n_words = int(argv[0]) if argv else 5000
+    spark = get_spark(
+        "bench-bpe", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
+    words = make_words(n_words)
+    docs = spark.createDataFrame(
+        [(w + " ") * c for w, c in words.items()], "string"
+    ).toDF("text").repartition(8).persist()
+    docs.count()
+    if n_spec is not None:
+        _speculative(docs, n_spec)
+    else:
+        _serial(docs, n_words)
+    docs.unpersist()
     return 0
 
 

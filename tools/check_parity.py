@@ -3,6 +3,12 @@ Spark AND its DuckDB oracle at a given sf dir, compare row count, schema
 (column names), ARROW TYPES, and order-insensitive values. Usage:
 
     python tools/check_parity.py [sf_dir] [query ...] [--paranoid-floats]
+                                 [--gate-off] [--json PATH]
+
+--gate-off: set CBS_FORCE_DISTRIBUTED=1 before any query runs, so every
+size gate (chatbot_spark.gating) takes its distributed regime — the
+oracle then checks the recurrences that sf0.01 inputs would otherwise
+always driver-solve.
 
 Type comparison: both results are fetched as Arrow and each column's type
 is reduced to a canonical family (int / float / decimal / str / ...). A
@@ -24,6 +30,7 @@ floor form on both sides before the driver flags them.
 from __future__ import annotations
 
 import math
+import os
 import re
 import sys
 import time
@@ -154,8 +161,11 @@ def main() -> int:
         i = raw.index("--json")
         json_path = raw[i + 1]
         raw = raw[:i] + raw[i + 2:]
-    argv = [a for a in raw if a != "--paranoid-floats"]
+    argv = [a for a in raw if a not in ("--paranoid-floats", "--gate-off")]
     paranoid = "--paranoid-floats" in raw
+    gate_off = "--gate-off" in raw
+    if gate_off:
+        os.environ["CBS_FORCE_DISTRIBUTED"] = "1"
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -167,7 +177,8 @@ def main() -> int:
     # Pin the oracle-engine versions into every parity report: a query can
     # be green under one duckdb release and red under another when its
     # output depends on round-on-double tie behavior.
-    print(f"engines: duckdb={duckdb.__version__} pyspark={pyspark.__version__}")
+    print(f"engines: duckdb={duckdb.__version__} pyspark={pyspark.__version__}"
+          + (" gate-off" if gate_off else ""))
 
     spark = get_spark("parity", master="local[8]", shuffle_partitions=8)
 
@@ -301,6 +312,7 @@ def main() -> int:
         payload = {
             "metric": "oracle_parity_sweep",
             "sf_dir": sf_dir,
+            "gate_off": gate_off,
             "engines": {
                 "duckdb": duckdb.__version__,
                 "pyspark": pyspark.__version__,
