@@ -125,7 +125,6 @@ def main() -> None:
             "overwrite"
         ).save()
     times["pq_search"] = round((time.time() - t0) / n_search, 3)
-    pq_loaded.release()  # free the per-search query-batch broadcasts
 
     # IVF-PQ: the composed production index — coarse-cell pruning AND
     # compressed codes; search scans nprobe/nlist of the corpus as m-byte
@@ -145,7 +144,6 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
     times["ivfpq_search"] = round((time.time() - t0) / n_search, 3)
-    ivfpq_loaded.release()
 
     # Sharded NSW graph (the HNSW-equivalent): per-shard build is the
     # expensive leg (sequential beam insertions inside each shard task);

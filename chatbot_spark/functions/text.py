@@ -74,22 +74,6 @@ def strip_reference_suffix(col: Column, ref_tip: str) -> Column:
     return F.split(col, F.lit(ref_tip).cast("string"), 2).getItem(0)
 
 
-def snippet_join(df: DataFrame, content_col: str, order_col: str, group_cols: list[str]) -> DataFrame:
-    """H11: build the LLM context block — snippets joined with the
-    reference's separator (rag_graph.py:432-435), in retrieval order."""
-    return df.groupBy(*group_cols).agg(
-        F.concat_ws(
-            "\n=====\n",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(order_col), F.col(content_col)))
-                ),
-                lambda s: F.concat(F.lit("文档片段:\n\n"), s[content_col]),
-            ),
-        ).alias("document_snippets")
-    )
-
-
 # PII redaction (beyond-reference §2.J scope): the scrub every shareable
 # training corpus runs before release. Patterns are deliberately restricted
 # to syntax with IDENTICAL semantics in Java regex (Spark) and RE2 (DuckDB/

@@ -7,12 +7,13 @@ a shared-nothing batch engine. The Spark-native equivalents here keep the
 same contract (L2 top-k, recall traded for speed) with set-at-a-time
 execution:
 
- * IVF (inverted-file) index: MLlib KMeans over a sample → every corpus row
-   gets a ``centroid_id`` → the table is written partitioned/clustered by
-   centroid. Search = shortlist nprobe nearest centroids per query (on the
-   driver for a bounded batch, a tiny broadcast cross-join otherwise),
-   then exact re-rank only inside those cells. At 100 TB the scan prunes to
-   nprobe/nlist of the data — the batch analog of HNSW's beam search.
+ * IVF (inverted-file) index: numpy k-means over a bounded driver sample
+   → every corpus row gets a ``centroid_id`` → the table is written
+   partitioned/clustered by centroid. Search = shortlist nprobe nearest
+   centroids per query (on the driver for a bounded batch, a tiny
+   broadcast cross-join otherwise), then exact re-rank only inside those
+   cells. At 100 TB the scan prunes to nprobe/nlist of the data — the
+   batch analog of HNSW's beam search.
 
  * Random-hyperplane LSH (cosine) / BucketedRandomProjectionLSH (L2) via
    MLlib: hash buckets as a column, candidates = bucket join.
@@ -24,9 +25,8 @@ per batch, and the exact operator (operators.topk) is the recall oracle.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.ml.clustering import KMeans
 from pyspark.ml.feature import BucketedRandomProjectionLSH
-from pyspark.ml.functions import array_to_vector, vector_to_array
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -193,6 +193,42 @@ def _sample_matrix(df, vec_col: str, limit: int):
     return np.array(arr.to_pylist(), dtype=np.float64)
 
 
+def _index_space(rows: DataFrame, vec_col: str, metric: str, m2=None, append_to=None):
+    """(rows, m2) with ``vec_col`` mapped into an index's l2 space:
+    cosine unit-normalizes, inner_product stores the MIPS augmentation
+    [x, sqrt(M^2-||x||^2)] (see IVFIndex.__init__), l2 leaves ``rows``
+    untouched. A build (``append_to=None``) derives M^2 from ``rows``
+    with one agg; an append to an index of class ``append_to`` uses its
+    frozen ``m2`` and refuses rows whose squared norm exceeds it."""
+    if metric == "cosine":
+        from chatbot_spark.functions.vector import normalize
+
+        return rows.withColumn(vec_col, normalize(F.col(vec_col))), m2
+    if metric != "inner_product":
+        return rows, m2
+    from chatbot_spark.functions.vector import dot_product, mips_augment_corpus
+
+    if append_to is not None and m2 is None:
+        # skipping the overflow check instead would silently corrupt the
+        # index (r10 ADVICE)
+        raise ValueError(
+            "append: this inner_product index has no frozen M^2 "
+            "(direct construction or a meta row missing m2) — "
+            f"rebuild via {append_to}.build so the MIPS augmentation "
+            "bound is derived and persisted"
+        )
+    worst = rows.agg(F.max(dot_product(F.col(vec_col), F.col(vec_col)))).first()[0]
+    if append_to is None:
+        m2 = float(worst)
+    elif worst is not None and worst > m2:
+        raise ValueError(
+            f"append: a new row's squared norm ({worst:.6g}) exceeds "
+            f"the index's frozen M^2 ({m2:.6g}) — its MIPS augmentation "
+            "would need sqrt of a negative; rebuild the index to re-derive M"
+        )
+    return rows.withColumn(vec_col, mips_augment_corpus(F.col(vec_col), m2)), m2
+
+
 def _meta_table(metric: str, m2: float | None):
     """The 1-row (metric, m2) meta dataset as a pyarrow table — the
     driver-side twin of the old createDataFrame(...".write" (identical
@@ -270,11 +306,9 @@ class IVFIndex:
         vec_col: str = "embedding",
         id_col: str = "id",
         nlist: int = 64,
-        sample_fraction: float | None = None,
         seed: int = 42,
         max_iter: int = 25,
         fit_sample_size: int = 200_000,
-        use_mllib: bool = False,
         metric: str = "l2",
     ) -> "IVFIndex":
         """Fit k-means centroids on a bounded driver-side sample, then
@@ -285,11 +319,9 @@ class IVFIndex:
         trains on ~30-256 vectors per centroid, not the full corpus): the
         coarse quantizer only needs the density shape, and recall is
         governed by nprobe. A driver-side numpy Lloyd fit on ≤ ``fit_sample
-        _size`` rows costs milliseconds-to-seconds with zero Spark jobs; the
-        MLlib distributed fit (``use_mllib=True``) pays ~10 scheduled jobs
-        for the same centroids and only wins when even the SAMPLE exceeds
-        driver memory — at 200k × 1024-d float64 the sample is 1.6 GB,
-        so the default holds to well past 100 TB corpora.
+        _size`` rows costs milliseconds-to-seconds with zero Spark jobs; at
+        200k × 1024-d float64 the sample is 1.6 GB, so it holds to well
+        past 100 TB corpora.
 
         ``metric="cosine"`` unit-normalizes every row BEFORE the fit and
         the assignment (one narrow map — the index stores normalized
@@ -299,48 +331,13 @@ class IVFIndex:
         one narrow map; the fit/assignment run in the augmented space."""
         if metric not in ("l2", "cosine", "inner_product"):
             raise ValueError(f"unsupported metric {metric!r}")
-        m2 = None
-        if metric == "cosine":
-            from chatbot_spark.functions.vector import normalize
-
-            corpus = corpus.withColumn(vec_col, normalize(F.col(vec_col)))
-        elif metric == "inner_product":
-            from chatbot_spark.functions.vector import (
-                dot_product,
-                mips_augment_corpus,
-            )
-
-            m2 = float(
-                corpus.agg(
-                    F.max(dot_product(F.col(vec_col), F.col(vec_col)))
-                ).first()[0]
-            )
-            corpus = corpus.withColumn(
-                vec_col, mips_augment_corpus(F.col(vec_col), m2)
-            )
-        if use_mllib:
-            feat = corpus.withColumn("__features", array_to_vector(F.col(vec_col)))
-            fit_input = feat
-            if sample_fraction:
-                fit_input = feat.sample(fraction=sample_fraction, seed=seed)
-            fit_input = fit_input.persist()
-            model = KMeans(
-                k=nlist, seed=seed, maxIter=max_iter, initMode="k-means||",
-                featuresCol="__features", predictionCol="centroid_id",
-            ).fit(fit_input)
-            fit_input.unpersist()
-            indexed = model.transform(feat).drop("__features")
-            centers = [[float(x) for x in c] for c in model.clusterCenters()]
-        else:
-            sample = corpus.select(vec_col)
-            if sample_fraction:
-                sample = sample.sample(fraction=sample_fraction, seed=seed)
-            X = _sample_matrix(sample, vec_col, fit_sample_size)
-            centers_np = _numpy_kmeans(X, min(nlist, len(X)), seed, max_iter)
-            centers = [[float(x) for x in c] for c in centers_np]
-            indexed = corpus.withColumn(
-                "centroid_id", _assign_cells(F.col(vec_col), centers_np)
-            )
+        corpus, m2 = _index_space(corpus, vec_col, metric)
+        X = _sample_matrix(corpus, vec_col, fit_sample_size)
+        centers_np = _numpy_kmeans(X, min(nlist, len(X)), seed, max_iter)
+        centers = [[float(x) for x in c] for c in centers_np]
+        indexed = corpus.withColumn(
+            "centroid_id", _assign_cells(F.col(vec_col), centers_np)
+        )
         ctbl = arrow_table(
             list(enumerate(centers)), "centroid_id INT, centroid ARRAY<DOUBLE>"
         )
@@ -387,41 +384,9 @@ class IVFIndex:
         ctbl = self._centroid_table()
         order = np.argsort(ctbl.column("centroid_id").to_numpy(), kind="stable")
         centers = np.array(ctbl.column("centroid").to_pylist(), dtype=np.float64)[order]
-        if self.metric == "cosine":
-            from chatbot_spark.functions.vector import normalize
-
-            new_rows = new_rows.withColumn(
-                self.vec_col, normalize(F.col(self.vec_col))
-            )
-        elif self.metric == "inner_product":
-            from chatbot_spark.functions.vector import (
-                dot_product,
-                mips_augment_corpus,
-            )
-
-            if self.m2 is None:
-                # without the frozen M^2 the augmentation below would die
-                # inside float(None) — and SKIPPING the overflow check
-                # instead would silently corrupt the index (r10 ADVICE)
-                raise ValueError(
-                    "append: this inner_product index has no frozen M^2 "
-                    "(direct construction or a meta row missing m2) — "
-                    "rebuild via IVFIndex.build so the MIPS augmentation "
-                    "bound is derived and persisted"
-                )
-            worst = new_rows.agg(
-                F.max(dot_product(F.col(self.vec_col), F.col(self.vec_col)))
-            ).first()[0]
-            if worst is not None and worst > self.m2:
-                raise ValueError(
-                    f"append: a new row's squared norm ({worst:.6g}) exceeds "
-                    f"the index's frozen M^2 ({self.m2:.6g}) — its MIPS "
-                    "augmentation would need sqrt of a negative; rebuild the "
-                    "index to re-derive M"
-                )
-            new_rows = new_rows.withColumn(
-                self.vec_col, mips_augment_corpus(F.col(self.vec_col), self.m2)
-            )
+        new_rows, _ = _index_space(
+            new_rows, self.vec_col, self.metric, self.m2, append_to="IVFIndex"
+        )
         assigned = new_rows.withColumn(
             "centroid_id", _assign_cells(F.col(self.vec_col), centers)
         )

@@ -60,7 +60,13 @@ from chatbot_spark.io.smallio import (
     read_small_df,
     write_small_parquet,
 )
-from chatbot_spark.operators.ann import _assign_cells, _meta_table, _numpy_kmeans
+from chatbot_spark.operators.ann import (
+    _assign_cells,
+    _index_space,
+    _meta_table,
+    _numpy_kmeans,
+    _sample_matrix,
+)
 
 
 def _centroid_table(centers):
@@ -503,28 +509,7 @@ class NSWGraphIndex:
             raise ValueError(f"method must be 'insert' or 'knn', got {method!r}")
         if metric not in ("l2", "cosine", "inner_product"):
             raise ValueError(f"unsupported metric {metric!r}")
-        m2 = None
-        if metric == "cosine":
-            from chatbot_spark.functions.vector import normalize
-
-            corpus = corpus.withColumn(vec_col, normalize(F.col(vec_col)))
-        elif metric == "inner_product":
-            from chatbot_spark.functions.vector import (
-                dot_product,
-                mips_augment_corpus,
-            )
-
-            m2 = float(
-                corpus.agg(
-                    F.max(dot_product(F.col(vec_col), F.col(vec_col)))
-                ).first()[0]
-            )
-            corpus = corpus.withColumn(
-                vec_col, mips_augment_corpus(F.col(vec_col), m2)
-            )
-
-        from chatbot_spark.operators.ann import _sample_matrix
-
+        corpus, m2 = _index_space(corpus, vec_col, metric)
         X = _sample_matrix(corpus, vec_col, fit_sample_size)
         centers = _numpy_kmeans(X, min(nlist, len(X)), seed, max_iter)
         sharded = corpus.select(
@@ -723,42 +708,11 @@ class NSWGraphIndex:
         import numpy as np
 
         spark = new_rows.sparkSession
-        if self.metric == "cosine":
-            # the graph stores unit vectors — new rows must match
-            from chatbot_spark.functions.vector import normalize
-
-            new_rows = new_rows.withColumn(
-                self.vec_col, normalize(F.col(self.vec_col))
-            )
-        elif self.metric == "inner_product":
-            from chatbot_spark.functions.vector import (
-                dot_product,
-                mips_augment_corpus,
-            )
-
-            if self.m2 is None:
-                # without the frozen M^2 the augmentation below would die
-                # inside float(None) — and SKIPPING the overflow check
-                # instead would silently corrupt the index (r10 ADVICE)
-                raise ValueError(
-                    "append: this inner_product index has no frozen M^2 "
-                    "(direct construction or a meta row missing m2) — "
-                    "rebuild via NSWGraphIndex.build so the MIPS "
-                    "augmentation bound is derived and persisted"
-                )
-            worst = new_rows.agg(
-                F.max(dot_product(F.col(self.vec_col), F.col(self.vec_col)))
-            ).first()[0]
-            if worst is not None and worst > self.m2:
-                raise ValueError(
-                    f"append: a new row's squared norm ({worst:.6g}) exceeds "
-                    f"the index's frozen M^2 ({self.m2:.6g}) — its MIPS "
-                    "augmentation would need sqrt of a negative; rebuild "
-                    "the index to re-derive M"
-                )
-            new_rows = new_rows.withColumn(
-                self.vec_col, mips_augment_corpus(F.col(self.vec_col), self.m2)
-            )
+        # the graph stores index-space (unit / augmented) vectors — new
+        # rows must match
+        new_rows, _ = _index_space(
+            new_rows, self.vec_col, self.metric, self.m2, append_to="NSWGraphIndex"
+        )
         assigned = new_rows.select(
             F.col(self.id_col), F.col(self.vec_col)
         ).withColumn("shard", _assign_cells(F.col(self.vec_col), self.centers))

@@ -14,8 +14,10 @@ set-at-a-time:
  * encode: ONE Arrow-batched pass per corpus row — assign cell (BLAS
    argmin vs the broadcast centroid matrix), subtract its center, PQ-code
    the residual. Stored row: (id, centroid_id, m-byte code).
- * search: the query batch is collected once, routed to its nprobe
-   cells driver-side, and broadcast; per (query, probed cell) an
+ * search: the shared quantized-index skeleton (pq.py
+   ``_QuantizedIndex``). The query batch is collected once, routed to
+   its nprobe cells driver-side, and rides in the scan kernel's closure
+   with the cell→queries routing map; per (query, probed cell) the
    (m, ksub) ADC lookup table is built IN the kernel from the query's
    OWN residual against that cell (q − c), exact because
    ||q − x||² = ||(q−c) − (x−c)||²; ONE mapInPandas over the code table
@@ -33,18 +35,30 @@ are bit-reproducible against the exact scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chatbot_spark.functions.vector import sq_l2_distance
-from chatbot_spark.operators.ann import _numpy_kmeans
-from chatbot_spark.operators.pq import _fit_codebooks
+from chatbot_spark.io.smallio import write_small_parquet
+from chatbot_spark.operators import topk
+from chatbot_spark.operators.ann import _numpy_kmeans, _sample_matrix
+from chatbot_spark.operators.pq import (
+    _adc,
+    _codes,
+    _fit_codebooks,
+    _partial_topk,
+    _QuantizedIndex,
+    _query_batch,
+    _read_books,
+    _scan,
+    _small_rows,
+    _write_books,
+)
 
 
 def _encode_cell_and_code(vec_col, centers, books):
     """One Arrow pass: vector → (centroid_id, residual pq code). The
     centroid matrix and codebook tensor ride the closure (both tiny)."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -81,34 +95,32 @@ def _encode_cell_and_code(vec_col, centers, books):
     return pandas_udf(schema)(one_batch)(vec_col)
 
 
-class IVFPQIndex:
+def _ivf_blocks(centers, books, id_col: str, Q, routing):
+    """The IVF-PQ distance kernel (see pq._partial_topk): per probed cell
+    of a code batch, the queries routed to it (``routing``: cell →
+    query indices) scored by ADC of their residuals against the cell's
+    center."""
+
+    def blocks(pdf):
+        for cell, grp in pdf.groupby("centroid_id", sort=False):
+            qsel = routing.get(int(cell))
+            if qsel is not None:
+                codes = _codes(grp, "pq_code", books.shape[0])
+                cc = centers[int(cell)]
+                yield qsel, grp[id_col].to_numpy(), (
+                    lambda qc, codes=codes, cc=cc: _adc(books, Q[qc] - cc, codes)
+                )
+
+    return blocks
+
+
+class IVFPQIndex(_QuantizedIndex):
     """Coarse cells + residual PQ codes: (id, centroid_id, pq_code)."""
 
     def __init__(self, centers, books, encoded: DataFrame, vec_col: str, id_col: str):
+        super().__init__(encoded, vec_col, id_col)
         self.centers = centers      # numpy (nlist, d)
         self.books = books          # numpy (m, ksub, dsub) — residual codebooks
-        self.encoded = encoded      # (id_col, centroid_id, pq_code)
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self._live_broadcasts: list = []
-
-    def delete(self, ids) -> "IVFPQIndex":
-        """Delete vectors by id (see IVFIndex.delete — same filter
-        semantics on the encoded-codes table; codebooks untouched)."""
-        keep = self.encoded.filter(
-            ~F.col(self.id_col).isin([int(i) for i in ids])
-        )
-        out = IVFPQIndex(self.centers, self.books, keep, self.vec_col, self.id_col)
-        return out
-
-    def release(self) -> None:
-        """Free past broadcast-path query batches (see NSWGraphIndex.release)."""
-        for bc in self._live_broadcasts:
-            try:
-                bc.unpersist(blocking=False)
-            except Exception:
-                pass
-        self._live_broadcasts.clear()
 
     @classmethod
     def build(
@@ -125,12 +137,8 @@ class IVFPQIndex:
     ) -> "IVFPQIndex":
         """Driver-sample fit (FAISS training contract: density shape only),
         distributed encode in ONE narrow Arrow pass — no shuffle at all."""
-        import numpy as np
-
         if not 0 < ksub <= 256:
             raise ValueError("ksub must fit a uint8 code (1..256)")
-        from chatbot_spark.operators.ann import _sample_matrix
-
         X = _sample_matrix(corpus, vec_col, fit_sample_size)
         centers = _numpy_kmeans(X, min(nlist, len(X)), seed, max_iter)
         assign = (X @ centers.T * -2 + (centers**2).sum(axis=1)[None, :]).argmin(axis=1)
@@ -145,15 +153,11 @@ class IVFPQIndex:
     def write(self, path: str) -> None:
         """Codes clustered by cell (search scans only probed cells' files —
         parquet partition pruning), centroids + codebooks as tiny portable
-        parquet (no pickle)."""
+        parquet (no pickle), written driver-side (io/smallio)."""
         self.encoded.write.mode("overwrite").partitionBy("centroid_id").parquet(
             f"{path}/codes"
         )
-        # centroids + codebooks are driver-resident by construction —
-        # driver-side parquet writes, no Spark jobs (io/smallio)
         import pyarrow as pa
-
-        from chatbot_spark.io.smallio import write_small_parquet
 
         spark = self.encoded.sparkSession
         write_small_parquet(
@@ -169,61 +173,17 @@ class IVFPQIndex:
                 }
             ),
         )
-        mm, ksub, _ = self.books.shape
-        write_small_parquet(
-            spark,
-            f"{path}/books",
-            pa.table(
-                {
-                    "subspace": pa.array(
-                        [j for j in range(mm) for _ in range(ksub)], pa.int32()
-                    ),
-                    "code": pa.array(list(range(ksub)) * mm, pa.int32()),
-                    "center": pa.array(
-                        [
-                            [float(x) for x in self.books[j, c]]
-                            for j in range(mm)
-                            for c in range(ksub)
-                        ],
-                        pa.list_(pa.float64()),
-                    ),
-                }
-            ),
-        )
+        _write_books(spark, f"{path}/books", self.books)
 
     @classmethod
     def load(
         cls, spark, path: str, vec_col: str = "embedding", id_col: str = "id"
     ) -> "IVFPQIndex":
-        import numpy as np
-
-        from chatbot_spark.io.smallio import read_small_arrow
-
-        ctbl = read_small_arrow(spark, f"{path}/centroids")
-        crows = (
-            ctbl.to_pylist()
-            if ctbl is not None  # local: driver-side reads, no Spark jobs
-            else [
-                r.asDict()
-                for r in spark.read.parquet(f"{path}/centroids").collect()
-            ]
-        )
+        crows = _small_rows(spark, f"{path}/centroids")
         centers = np.empty((len(crows), len(crows[0]["centroid"])), dtype=np.float64)
         for r in crows:
             centers[r["centroid_id"]] = r["centroid"]
-        btbl = read_small_arrow(spark, f"{path}/books")
-        brows = (
-            btbl.to_pylist()
-            if btbl is not None
-            else [
-                r.asDict() for r in spark.read.parquet(f"{path}/books").collect()
-            ]
-        )
-        m = max(r["subspace"] for r in brows) + 1
-        ksub = max(r["code"] for r in brows) + 1
-        books = np.empty((m, ksub, len(brows[0]["center"])), dtype=np.float64)
-        for r in brows:
-            books[r["subspace"], r["code"]] = r["center"]
+        books = _read_books(spark, f"{path}/books")
         return cls(centers, books, spark.read.parquet(f"{path}/codes"), vec_col, id_col)
 
     def search(
@@ -235,94 +195,34 @@ class IVFPQIndex:
         corpus: DataFrame | None = None,
         query_id: str = "query_id",
         query_vec: str = "query_embedding",
-        query_chunk: int = 2048,
         route: str = "broadcast",
     ) -> DataFrame:
         """ADC top-k over nprobe cells. LUTs are per (query, probed cell)
         — built from the query's residual against that cell, so the ADC
         distance is exactly ||q − x||² up to quantization of x alone.
+        ``rerank`` as in _QuantizedIndex.search.
 
         Distribution contract, two routing modes:
 
         * ``route="broadcast"`` (default): the query batch is collected
           ONCE, routed to its nprobe cells driver-side (Q × nlist BLAS),
-          and broadcast with the cell→queries routing map; ONE
-          mapInPandas over the code table — statically pruned to the
-          probed cells, PartitionFilters on a written index — serves the
-          whole batch. DRIVER MEMORY IS O(Q × d) (collect + broadcast
-          hold the full batch); use for bounded batches up to ~100k
-          queries and free with ``release()``.
+          and shipped in the scan kernel's closure with the cell→queries
+          routing map; ONE mapInPandas over the code table — statically
+          pruned to the probed cells, PartitionFilters on a written
+          index — serves the whole batch. DRIVER MEMORY IS O(Q × d); use
+          for bounded batches up to ~100k queries.
         * ``route="join"`` (unbounded query sets): queries never touch
           the driver — distributed crossJoin vs the broadcast centroid
           table routes each query to its nprobe cells, then a cogrouped
           applyInPandas pairs each cell's codes with its routed queries
           (one extra shuffle of the routed queries, keyed by cell).
 
-        ``query_chunk`` bounds EXECUTOR memory in both modes: each cell
-        processes its routed queries in chunks, holding one (C, m, ksub)
-        residual-LUT tensor at a time with the gather vectorized across
-        the chunk. LUTs are recomputed per task rather than shipped —
-        keeps task closures O(books), not O(queries × books)."""
-        import numpy as np
-
-        c = self.centers
-        b = self.books
-        m, ksub, dsub = b.shape
+        In both modes a cell's routed queries are scored in chunks that
+        keep one distance block within topk's per-task pair budget."""
+        c, books, id_col = self.centers, self.books, self.id_col
         nprobe = min(nprobe, len(c))
-        id_field = self.encoded.schema[self.id_col]
-        qid_field = queries.schema[query_id]
-        out_schema = (
-            f"{query_id} {qid_field.dataType.simpleString()}, "
-            f"neighbor_id {id_field.dataType.simpleString()}, adist DOUBLE"
-        )
-        id_col = self.id_col
         kk = max(k, rerank)
-        chunk = max(1, int(query_chunk))
-
-        def adc_cell(grp, Q, qis, qid_values, cell: int):
-            """ADC partial top-kk for one cell's codes × its routed
-            queries (qis indexes into Q / qid_values). Returns a list of
-            result frames."""
-            import pandas as pd
-
-            codes = np.frombuffer(
-                b"".join(grp["pq_code"].tolist()), dtype=np.uint8
-            ).reshape(len(grp), m)
-            ids = grp[id_col].to_numpy()
-            n = len(ids)
-            take = min(kk, n)
-            cc = c[cell]
-            b2 = [(b[j] ** 2).sum(axis=1) for j in range(m)]
-            out = []
-            for lo in range(0, len(qis), chunk):
-                qc = qis[lo : lo + chunk]
-                nc = len(qc)
-                # per-query dgemv LUT build (NOT a batched GEMM):
-                # BLAS fold order must not depend on chunk size, or
-                # chunk-invariance breaks by ULPs
-                luts = np.empty((nc, m, ksub), dtype=np.float64)
-                for ci in range(nc):
-                    rq = Q[qc[ci]] - cc
-                    for j in range(m):
-                        rj = rq[j * dsub : (j + 1) * dsub]
-                        luts[ci, j] = (rj**2).sum() - 2 * b[j] @ rj + b2[j]
-                dist = np.zeros((nc, n), dtype=np.float64)
-                for j in range(m):
-                    dist += luts[:, j, :][:, codes[:, j]]
-                np.maximum(dist, 0.0, out=dist)
-                part = np.argpartition(dist, take - 1, axis=1)[:, :take]
-                qidx = np.repeat(qc, take)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            query_id: [qid_values[i] for i in qidx],
-                            "neighbor_id": ids[part.ravel()],
-                            "adist": np.take_along_axis(dist, part, axis=1).ravel(),
-                        }
-                    )
-                )
-            return out
-
+        schema = self._out_schema(queries, query_id)
         if route == "join":
             from chatbot_spark.operators.ann import _probe_cells
 
@@ -341,114 +241,40 @@ class IVFPQIndex:
             if not probed:
                 raise ValueError("empty query set")
             src = self.encoded.filter(F.col("centroid_id").isin(probed))
+            pair_block = topk._PAIR_BLOCK
 
             def cogroup_kernel(qdf, cdf):
-                import pandas as pd
-
-                if qdf.empty or cdf.empty:
-                    return pd.DataFrame({query_id: [], "neighbor_id": [], "adist": []})
                 Q = np.array(list(qdf["__qvec"]), dtype=np.float64)
-                qid_values = qdf["__qid"].tolist()
-                cell = int(cdf["centroid_id"].iloc[0])
-                frames = adc_cell(
-                    cdf, Q, np.arange(len(qid_values)), qid_values, cell
+                # one cell per cogroup: every query of the group probes it
+                cells = {int(x): np.arange(len(Q)) for x in cdf["centroid_id"].unique()}
+                blocks = _ivf_blocks(c, books, id_col, Q, cells)
+                return _partial_topk(
+                    blocks(cdf), qdf["__qid"].to_numpy(), kk, query_id, pair_block
                 )
-                allc = pd.concat(frames, ignore_index=True)
-                allc = allc.sort_values(["adist", "neighbor_id"], kind="mergesort")
-                return allc.groupby(query_id, sort=False).head(kk)
 
             cands = (
                 routed.groupBy("centroid_id")
                 .cogroup(src.groupBy("centroid_id"))
-                .applyInPandas(cogroup_kernel, out_schema)
+                .applyInPandas(cogroup_kernel, schema)
             )
         elif route == "broadcast":
-            rows = queries.select(query_id, query_vec).collect()
-            if not rows:
-                raise ValueError("empty query set")
-            qids_all = [r[0] for r in rows]
-            Q_all = np.array([r[1] for r in rows], dtype=np.float64)
+            qids, Q = _query_batch(queries.select(query_id, query_vec).collect())
             # per-query probed cells (tiny: Q × nlist on the driver)
-            cd = (
-                (Q_all**2).sum(axis=1)[:, None]
-                - 2 * Q_all @ c.T
-                + (c**2).sum(axis=1)[None, :]
-            )
+            cd = (Q**2).sum(axis=1)[:, None] - 2 * Q @ c.T + (c**2).sum(axis=1)[None, :]
             probe = np.argsort(cd, axis=1, kind="stable")[:, :nprobe]  # (Q, nprobe)
-            cell2q: dict[int, "np.ndarray"] = {}
-            for cell in np.unique(probe):
-                qi = np.unique(np.nonzero(probe == cell)[0])
-                cell2q[int(cell)] = qi
-            bc = queries.sparkSession.sparkContext.broadcast(
-                (qids_all, Q_all, cell2q)
-            )
-            self._live_broadcasts.append(bc)
-
-            probed_cells = sorted(cell2q)
+            routing = {
+                int(cell): np.unique(np.nonzero(probe == cell)[0])
+                for cell in np.unique(probe)
+            }
             # static cell pruning — PartitionFilters on a written index
-            cands_src = self.encoded.filter(F.col("centroid_id").isin(probed_cells))
-
-            def adc_partition(batches):
-                import pandas as pd
-
-                qids, Q, routing = bc.value
-                best: list[pd.DataFrame] = []
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    for cell, grp in pdf.groupby("centroid_id", sort=False):
-                        qis = routing.get(int(cell))
-                        if qis is None:
-                            continue
-                        best.extend(adc_cell(grp, Q, qis, qids, int(cell)))
-                if not best:
-                    return
-                allc = pd.concat(best, ignore_index=True)
-                allc = allc.sort_values(["adist", "neighbor_id"], kind="mergesort")
-                yield allc.groupby(query_id, sort=False).head(kk)
-
-            cands = cands_src.mapInPandas(adc_partition, schema=out_schema)
+            src = self.encoded.filter(F.col("centroid_id").isin(sorted(routing)))
+            blocks = _ivf_blocks(c, books, id_col, Q, routing)
+            cands = _scan(src, blocks, qids, kk, query_id, schema)
         else:
             raise ValueError(f"unknown route {route!r}; have ['broadcast', 'join']")
-        w = Window.partitionBy(query_id).orderBy(
-            F.col("adist").asc(), F.col("neighbor_id").asc()
-        )
-        if not rerank:
-            return (
-                cands.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .withColumn("dist", F.sqrt("adist"))
-                .drop("adist")
-            )
-        if corpus is None:
-            raise ValueError("rerank requires the raw-vector corpus")
-        top_r = (
-            cands.withColumn("__arank", F.row_number().over(w))
-            .filter(F.col("__arank") <= rerank)
-            .drop("__arank", "adist")
-        )
-        q = queries.select(F.col(query_id), F.col(query_vec).alias("__qvec"))
         # route='join' promises no query data on the driver — the rerank
-        # join must not broadcast q (that collects all Q vectors); Catalyst
-        # shuffle-joins on query_id instead
-        q_side = F.broadcast(q) if route == "broadcast" else q
-        exact = (
-            top_r.join(
-                corpus.select(
-                    F.col(self.id_col).alias("neighbor_id"),
-                    F.col(self.vec_col).alias("__cvec"),
-                ),
-                "neighbor_id",
-            )
-            .join(q_side, query_id)
-            .withColumn("__rdist", sq_l2_distance(F.col("__qvec"), F.col("__cvec")))
-        )
-        w2 = Window.partitionBy(query_id).orderBy(
-            F.col("__rdist").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .withColumn("dist", F.sqrt("__rdist"))
-            .select(query_id, "neighbor_id", "rank", "dist")
+        # join must not broadcast q either
+        return self._finish(
+            cands, queries, k, rerank, corpus, query_id, query_vec,
+            broadcast_queries=route == "broadcast",
         )

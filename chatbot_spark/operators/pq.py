@@ -16,17 +16,22 @@ Search", TPAMI 2011; FAISS `IVFx,PQy`), re-expressed set-at-a-time:
  * encode: one Arrow-batched pass; each row's code is argmin against the
    (m, ksub, dsub) codebook tensor shipped in the closure — BLAS per
    batch, emitted as a BINARY column (m bytes/row).
- * search (ADC — asymmetric distance computation): the query batch is
-   collected once and broadcast to the executors; ONE mapInPandas scan
-   of the code table serves the whole batch. Inside the kernel, per
-   chunk of queries an (m, ksub) LUT tensor is built and the distance
-   is a sum of m vectorized table gathers; partial top-k INSIDE the
-   kernel (each partition emits ≤ Q·k rows), global window top-k after.
-   No shuffle touches anything row-count sized; the wide data never
-   moves; one Spark job per search regardless of query count.
+ * search (ADC — asymmetric distance computation): per query an (m, ksub)
+   LUT of exact sub-distances to the centers; a row's distance is a sum
+   of m vectorized table gathers.
  * optional exact re-rank: top-R ADC candidates equi-join back to the
    raw vectors by id (R·Q rows — tiny), exact L2, final top-k. This is
    what restores recall lost to quantization.
+
+The search skeleton is shared by the whole quantized family (SQ8 in
+sq.py, PQ here, IVF-PQ in ivfpq.py) as :class:`_QuantizedIndex`: the
+query batch is collected once and rides in the scan kernel's closure
+(as in topk.scan_topk — PySpark broadcasts a large pickled command
+itself, for as long as the plan lives); ONE mapInPandas scan of the code
+table serves the whole batch, with a partial top-k per partition and
+the global window top-k after. No shuffle touches anything row-count
+sized; one Spark job per search regardless of query count. Each index
+supplies only its (queries × rows) distance kernel.
 
 Determinism contract: seeded numpy fit, argmin ties break to the lowest
 code index, ADC sums fold in fixed subspace order, and every ranking
@@ -38,17 +43,22 @@ with pruned/compressed scans.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import copy
+import functools
+import itertools
+
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chatbot_spark.functions.vector import sq_l2_distance
-from chatbot_spark.operators.ann import _numpy_kmeans
+from chatbot_spark.io.smallio import read_small_arrow, write_small_parquet
+from chatbot_spark.operators import topk
+from chatbot_spark.operators.ann import _numpy_kmeans, _sample_matrix
 
 
 def _fit_codebooks(X, m: int, ksub: int, seed: int, max_iter: int):
     """Per-subspace seeded k-means → (m, ksub, dsub) float64 tensor."""
-    import numpy as np
-
     n, d = X.shape
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
@@ -63,7 +73,6 @@ def _fit_codebooks(X, m: int, ksub: int, seed: int, max_iter: int):
 def _encode_codes(col, books):
     """pandas_udf: vector column → BINARY pq code (m bytes, one uint8 per
     subspace; requires ksub ≤ 256). Ties break to the lowest code index."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -87,7 +96,245 @@ def _encode_codes(col, books):
     return pandas_udf(T.BinaryType())(one_batch)(col)
 
 
-class PQIndex:
+def _codes(pdf, col: str, width: int):
+    """A BINARY code column as an (n, width) uint8 matrix."""
+    return np.frombuffer(b"".join(pdf[col].tolist()), dtype=np.uint8).reshape(
+        len(pdf), width
+    )
+
+
+def _adc(books, R, codes):
+    """(len(R), len(codes)) ADC distances of query rows R against PQ codes.
+    Each query's (m, ksub) LUT of exact sub-distances is built with dgemv,
+    NOT a batched GEMM, so its BLAS fold order does not depend on how many
+    queries share a block; the gather sums the m subspaces in fixed order.
+    The expanded form can dip to −ε for (near-)self matches — clamped so
+    sqrt stays real."""
+    m, ksub, dsub = books.shape
+    b2 = [(books[j] ** 2).sum(axis=1) for j in range(m)]
+    luts = np.empty((len(R), m, ksub), dtype=np.float64)
+    for ci, r in enumerate(R):
+        for j in range(m):
+            rj = r[j * dsub : (j + 1) * dsub]
+            luts[ci, j] = (rj**2).sum() - 2 * books[j] @ rj + b2[j]
+    dist = np.zeros((len(R), len(codes)), dtype=np.float64)
+    for j in range(m):
+        dist += luts[:, j, :][:, codes[:, j]]
+    return np.maximum(dist, 0.0, out=dist)
+
+
+def _partial_topk(blocks, qids, kk: int, query_id: str, pair_block: int):
+    """Per-query top-kk of one task's ``(query indices, row ids, dist)``
+    blocks, where ``dist(qc)`` is the (len(qc), rows) distance block of
+    those queries. Queries go in chunks so that one block holds at most
+    ``pair_block`` pairs (topk's per-task budget); ties order by
+    neighbor id, as the global window does."""
+    import pandas as pd
+
+    best = []
+    for qsel, ids, dist in blocks:
+        n = len(ids)
+        take = min(kk, n)
+        step = max(1, pair_block // n)
+        for lo in range(0, len(qsel), step):
+            qc = qsel[lo : lo + step]
+            D = dist(qc)
+            part = np.argpartition(D, take - 1, axis=1)[:, :take]
+            best.append(
+                pd.DataFrame(
+                    {
+                        query_id: qids[np.repeat(qc, take)],
+                        "neighbor_id": ids[part.ravel()],
+                        "__rdist": np.take_along_axis(D, part, axis=1).ravel(),
+                    }
+                )
+            )
+    if not best:
+        return pd.DataFrame({query_id: [], "neighbor_id": [], "__rdist": []})
+    allc = pd.concat(best, ignore_index=True)
+    allc = allc.sort_values(["__rdist", "neighbor_id"], kind="mergesort")
+    return allc.groupby(query_id, sort=False).head(kk)
+
+
+def _scan(src: DataFrame, blocks, qids, kk: int, query_id: str, schema: str) -> DataFrame:
+    """One mapInPandas pass over the code table ``src`` serving the query
+    batch captured in ``blocks``' closure: ≤ kk candidates per query per
+    partition. The pair budget is read here, on the driver, and captured."""
+    pair_block = topk._PAIR_BLOCK
+
+    def kernel(batches):
+        parts = (b for pdf in batches if not pdf.empty for b in blocks(pdf))
+        out = _partial_topk(parts, qids, kk, query_id, pair_block)
+        if len(out):
+            yield out
+
+    return src.mapInPandas(kernel, schema=schema)
+
+
+def _query_batch(rows):
+    """(query ids, (Q, d) float64 matrix) of collected query rows."""
+    if not rows:
+        raise ValueError("empty query set")
+    return np.array([r[0] for r in rows]), np.array([r[1] for r in rows], dtype=np.float64)
+
+
+def _small_rows(spark, path: str) -> list[dict]:
+    """Rows of a small driver-written parquet table (no Spark job when
+    the path is local)."""
+    tbl = read_small_arrow(spark, path)
+    if tbl is not None:
+        return tbl.to_pylist()
+    return [r.asDict() for r in spark.read.parquet(path).collect()]
+
+
+def _write_books(spark, path: str, books) -> None:
+    """Codebooks as a tiny parquet of (subspace, code, center) rows —
+    engine-portable, no pickle, written driver-side (io/smallio)."""
+    import pyarrow as pa
+
+    m, ksub, dsub = books.shape
+    tbl = pa.table(
+        {
+            "subspace": pa.array(np.repeat(np.arange(m), ksub), pa.int32()),
+            "code": pa.array(np.tile(np.arange(ksub), m), pa.int32()),
+            "center": pa.array(books.reshape(m * ksub, dsub).tolist(), pa.list_(pa.float64())),
+        }
+    )
+    write_small_parquet(spark, path, tbl)
+
+
+def _read_books(spark, path: str):
+    rows = _small_rows(spark, path)
+    m = max(r["subspace"] for r in rows) + 1
+    ksub = max(r["code"] for r in rows) + 1
+    books = np.empty((m, ksub, len(rows[0]["center"])), dtype=np.float64)
+    for r in rows:
+        books[r["subspace"], r["code"]] = r["center"]
+    return books
+
+
+class _QuantizedIndex:
+    """The search skeleton of the quantized indexes: a code table
+    ``encoded`` (id_col + a BINARY code column) scanned once per query
+    batch. A subclass supplies ``_blocks(Q)``, which returns the kernel
+    mapping one pandas batch of codes to ``(query indices, row ids,
+    dist)`` blocks (see :func:`_partial_topk`)."""
+
+    def __init__(self, encoded: DataFrame, vec_col: str, id_col: str):
+        self.encoded = encoded
+        self.vec_col = vec_col
+        self.id_col = id_col
+
+    def delete(self, ids):
+        """Delete vectors by id (see IVFIndex.delete — same filter
+        semantics on the encoded-codes table; codebooks untouched)."""
+        out = copy.copy(self)
+        out.encoded = self.encoded.filter(~F.col(self.id_col).isin([int(i) for i in ids]))
+        return out
+
+    def search(
+        self,
+        queries: DataFrame,
+        k: int = 10,
+        rerank: int = 0,
+        corpus: DataFrame | None = None,
+        query_id: str = "query_id",
+        query_vec: str = "query_embedding",
+        driver_batch_rows: int | None = None,
+    ) -> DataFrame:
+        """ADC top-k over the code table. With ``rerank=R > 0`` (requires
+        ``corpus``) the top max(k, R) ADC candidates per query are
+        re-scored with exact L2 against the raw vectors, so the output
+        matches the exact operator's (rank, dist) contract on every
+        shortlist that quantization ranked correctly.
+
+        The query batch is collected ONCE (one job — ids + raw vectors)
+        and ships in the scan kernel's closure, so DRIVER MEMORY IS
+        O(Q × d): the practical ceiling is ~100k queries at 1024-d on an
+        8 GB driver. A flat index has no cells to route by, so the
+        unbounded-query-set escape hatch is ``driver_batch_rows=B``:
+        stream the query DF through the driver B rows at a time
+        (toLocalIterator — one partition resident) and run one
+        eagerly-materialized scan per batch. The driver then holds ≤ B
+        vectors plus the small candidate outputs at any moment, at the
+        cost of ⌈Q/B⌉ passes over the codes; the output is identical,
+        since every batch sees every code partition. For cell-routed
+        unbounded search use IVFPQIndex.search(route="join").
+
+        Inside the kernel, queries are scored in chunks sized so that
+        one (queries × rows) distance block stays within topk's per-task
+        pair budget, which bounds EXECUTOR memory whatever the batch
+        size."""
+        kk = max(k, rerank)
+        schema = self._out_schema(queries, query_id)
+        rows = queries.select(query_id, query_vec)
+        if driver_batch_rows is not None:
+            cands = self._search_driver_batched(
+                rows, max(1, int(driver_batch_rows)), kk, query_id, schema
+            )
+            # unbounded-Q contract: the rerank join must not broadcast the
+            # query side either (that would collect all Q vectors)
+            return self._finish(
+                cands, queries, k, rerank, corpus, query_id, query_vec,
+                broadcast_queries=False,
+            )
+        qids, Q = _query_batch(rows.collect())
+        cands = _scan(self.encoded, self._blocks(Q), qids, kk, query_id, schema)
+        return self._finish(cands, queries, k, rerank, corpus, query_id, query_vec)
+
+    def _search_driver_batched(self, rows, batch_rows, kk, query_id, schema):
+        """Candidates of a query set streamed through the driver
+        ``batch_rows`` at a time, one scan per batch. Each scan is
+        materialized at once (localCheckpoint(eager)), so the driver
+        never holds more than one batch of query vectors."""
+        it, outs = rows.toLocalIterator(), []
+        while batch := list(itertools.islice(it, batch_rows)):
+            qids, Q = _query_batch(batch)
+            scan = _scan(self.encoded, self._blocks(Q), qids, kk, query_id, schema)
+            outs.append(scan.localCheckpoint(eager=True))
+        if not outs:
+            raise ValueError("empty query set")
+        return functools.reduce(DataFrame.unionByName, outs)
+
+    def _out_schema(self, queries: DataFrame, query_id: str) -> str:
+        qid_t = queries.schema[query_id].dataType.simpleString()
+        nid_t = self.encoded.schema[self.id_col].dataType.simpleString()
+        return f"{query_id} {qid_t}, neighbor_id {nid_t}, __rdist DOUBLE"
+
+    def _finish(
+        self, cands, queries, k, rerank, corpus, query_id, query_vec,
+        broadcast_queries: bool = True,
+    ) -> DataFrame:
+        """The final window over the ADC candidates; with ``rerank``, the
+        top max(k, rerank) shortlist joins the raw vectors by id and is
+        re-ranked on exact L2. ``broadcast_queries=False`` keeps query
+        vectors off the driver on the unbounded-query paths (Catalyst
+        shuffle-joins on query_id instead)."""
+        if not rerank:
+            return topk.final_topk(cands, k, "l2", [query_id])
+        if corpus is None:
+            raise ValueError("rerank requires the raw-vector corpus")
+        q = queries.select(F.col(query_id), F.col(query_vec).alias("__qvec"))
+        exact = (
+            topk.final_topk(cands, max(k, rerank), "l2", [query_id], include_distance=False)
+            .join(
+                corpus.select(
+                    F.col(self.id_col).alias("neighbor_id"),
+                    F.col(self.vec_col).alias("__cvec"),
+                ),
+                "neighbor_id",
+            )
+            .join(F.broadcast(q) if broadcast_queries else q, query_id)
+            .select(
+                query_id,
+                "neighbor_id",
+                sq_l2_distance(F.col("__qvec"), F.col("__cvec")).alias("__rdist"),
+            )
+        )
+        return topk.final_topk(exact, k, "l2", [query_id])
+
+
+class PQIndex(_QuantizedIndex):
     """Product-quantized corpus: BINARY codes + the codebook tensor.
 
     build():  corpus -> encoded corpus (id + pq_code, m bytes/row)
@@ -96,30 +343,8 @@ class PQIndex:
     """
 
     def __init__(self, books, encoded: DataFrame, vec_col: str, id_col: str):
+        super().__init__(encoded, vec_col, id_col)
         self.books = books          # numpy (m, ksub, dsub)
-        self.encoded = encoded      # (id_col, pq_code BINARY)
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self._live_broadcasts: list = []
-
-    def delete(self, ids) -> "PQIndex":
-        """Delete vectors by id (see IVFIndex.delete — same filter
-        semantics on the encoded-codes table; codebooks untouched)."""
-        keep = self.encoded.filter(
-            ~F.col(self.id_col).isin([int(i) for i in ids])
-        )
-        out = PQIndex(self.books, keep, self.vec_col, self.id_col)
-        return out
-
-    def release(self) -> None:
-        """Free past query-batch broadcasts (see NSWGraphIndex.release):
-        call after their result DataFrames are materialized."""
-        for bc in self._live_broadcasts:
-            try:
-                bc.unpersist(blocking=False)
-            except Exception:
-                pass
-        self._live_broadcasts.clear()
 
     @classmethod
     def build(
@@ -136,12 +361,8 @@ class PQIndex:
         """Fit codebooks on ≤ fit_sample_size driver-side rows (the FAISS
         training contract — codebooks need density shape, not the corpus),
         then encode every row distributed in one narrow Arrow pass."""
-        import numpy as np
-
         if not 0 < ksub <= 256:
             raise ValueError("ksub must fit a uint8 code (1..256)")
-        from chatbot_spark.operators.ann import _sample_matrix
-
         X = _sample_matrix(corpus, vec_col, fit_sample_size)
         books = _fit_codebooks(X, m, ksub, seed, max_iter)
         encoded = corpus.select(
@@ -150,283 +371,20 @@ class PQIndex:
         return cls(books, encoded, vec_col, id_col)
 
     def write(self, path: str) -> None:
-        """Persist code table + codebooks (codebooks as a tiny parquet
-        of (subspace, code, center) rows — engine-portable, no pickle).
-        No coalesce(1) on the metadata: collapsing a parallelized python
-        lineage into one task costs ~7 s of serial deserialization for a
-        512-row table; a handful of small files is free by comparison."""
+        """Persist code table + codebooks (see :func:`_write_books`)."""
         self.encoded.write.mode("overwrite").parquet(f"{path}/codes")
-        m, ksub, dsub = self.books.shape
-        # the codebook is driver-resident by construction (numpy fit) —
-        # driver-side parquet write, no Spark job (io/smallio)
-        import pyarrow as pa
-
-        from chatbot_spark.io.smallio import write_small_parquet
-
-        tbl = pa.table(
-            {
-                "subspace": pa.array(
-                    [j for j in range(m) for _ in range(ksub)], pa.int32()
-                ),
-                "code": pa.array(list(range(ksub)) * m, pa.int32()),
-                "center": pa.array(
-                    [
-                        [float(x) for x in self.books[j, c]]
-                        for j in range(m)
-                        for c in range(ksub)
-                    ],
-                    pa.list_(pa.float64()),
-                ),
-            }
-        )
-        write_small_parquet(self.encoded.sparkSession, f"{path}/books", tbl)
+        _write_books(self.encoded.sparkSession, f"{path}/books", self.books)
 
     @classmethod
     def load(cls, spark, path: str, vec_col: str = "embedding", id_col: str = "id") -> "PQIndex":
-        import numpy as np
-
-        from chatbot_spark.io.smallio import read_small_arrow
-
-        btbl = read_small_arrow(spark, f"{path}/books")
-        rows = (
-            btbl.to_pylist()
-            if btbl is not None  # local: driver-side read, no Spark job
-            else [r.asDict() for r in spark.read.parquet(f"{path}/books").collect()]
-        )
-        m = max(r["subspace"] for r in rows) + 1
-        ksub = max(r["code"] for r in rows) + 1
-        dsub = len(rows[0]["center"])
-        books = np.empty((m, ksub, dsub), dtype=np.float64)
-        for r in rows:
-            books[r["subspace"], r["code"]] = r["center"]
+        books = _read_books(spark, f"{path}/books")
         return cls(books, spark.read.parquet(f"{path}/codes"), vec_col, id_col)
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        rerank: int = 0,
-        corpus: DataFrame | None = None,
-        query_id: str = "query_id",
-        query_vec: str = "query_embedding",
-        query_chunk: int = 8192,
-        driver_batch_rows: int | None = None,
-    ) -> DataFrame:
-        """ADC top-k. With ``rerank=R > 0`` (requires ``corpus``), the top
-        R ADC candidates per query are re-scored with exact L2 against the
-        raw vectors and the final top-k comes from those exact distances —
-        output then matches the exact operator's (rank, dist) contract on
-        every candidate quantization ranked correctly.
+    def _blocks(self, Q):
+        books, id_col = self.books, self.id_col
 
-        Distribution contract: the query batch is collected ONCE (one
-        job — ids + raw vectors) and torrent-shipped to every executor as
-        a broadcast variable; ONE mapInPandas scan of the code table then
-        serves the whole batch. DRIVER MEMORY IS O(Q × d) — collect and
-        broadcast both hold the full batch, so the practical ceiling is
-        ~100k queries at 1024-d on an 8 GB driver. A flat PQ index has no
-        cells to route by, so the unbounded-query-set escape hatch is
-        ``driver_batch_rows=B``: stream the query DF through the driver B
-        rows at a time (toLocalIterator — one partition resident), run
-        one eagerly-materialized scan per batch, and free each batch's
-        broadcast before the next (driver holds ≤ B vectors + the small
-        candidate outputs at any moment, at the cost of ⌈Q/B⌉ passes over
-        the codes). For cell-routed unbounded search use
-        IVFPQIndex.search(route="join") instead — broadcasts there are
-        tracked and freed by ``release()``.
+        def blocks(pdf):
+            codes = _codes(pdf, "pq_code", books.shape[0])
+            yield np.arange(len(Q)), pdf[id_col].to_numpy(), lambda qc: _adc(books, Q[qc], codes)
 
-        ``query_chunk`` bounds EXECUTOR memory: inside the kernel, LUT
-        tensors are built per chunk of queries ((C, m, ksub) doubles live
-        at a time) and the distance gather is vectorized across the
-        chunk. LUTs are recomputed per partition rather than shipped —
-        C·m·ksub BLAS per partition is noise next to the code scan, and
-        it keeps the task closure O(books), not O(queries × books)."""
-        import numpy as np
-
-        b = self.books
-        m, ksub, dsub = b.shape
-        id_field = self.encoded.schema[self.id_col]
-        qid_field = queries.schema[query_id]
-        out_schema = (
-            f"{query_id} {qid_field.dataType.simpleString()}, "
-            f"neighbor_id {id_field.dataType.simpleString()}, adist DOUBLE"
-        )
-        id_col = self.id_col
-        kk = max(k, rerank)
-        chunk = max(1, int(query_chunk))
-
-        if driver_batch_rows is not None:
-            cands = self._search_driver_batched(
-                queries, int(driver_batch_rows), query_id, query_vec, out_schema, kk, chunk
-            )
-            # unbounded-Q contract: the rerank join must not broadcast the
-            # query side either (F.broadcast(q) would collect all Q vectors
-            # to the driver — the exact condition this path avoids)
-            return self._finish(
-                cands, queries, k, rerank, corpus, query_id, query_vec,
-                broadcast_queries=False,
-            )
-
-        rows = queries.select(query_id, query_vec).collect()
-        if not rows:
-            raise ValueError("empty query set")
-        bc = queries.sparkSession.sparkContext.broadcast(
-            ([r[0] for r in rows], np.array([r[1] for r in rows], dtype=np.float64))
-        )
-        self._live_broadcasts.append(bc)
-        cands = self._adc_scan(bc, out_schema, kk, chunk, query_id)
-        return self._finish(cands, queries, k, rerank, corpus, query_id, query_vec)
-
-    def _adc_scan(self, bc, out_schema, kk, chunk, query_id):
-        """One mapInPandas pass over the codes serving the broadcast query
-        batch ``bc`` = (qids, Q matrix)."""
-        import numpy as np
-
-        b = self.books
-        m, ksub, dsub = b.shape
-        id_col = self.id_col
-
-        def adc_partition(batches):
-            import pandas as pd
-
-            qids, Q = bc.value
-            nq = len(qids)
-            # accumulate per-partition candidates, emit one partial top-k
-            best: list[pd.DataFrame] = []
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.frombuffer(
-                    b"".join(pdf["pq_code"].tolist()), dtype=np.uint8
-                ).reshape(len(pdf), m)
-                ids = pdf[id_col].to_numpy()
-                n = len(ids)
-                take = min(kk, n)
-                b2 = [(b[j] ** 2).sum(axis=1) for j in range(m)]
-                for lo in range(0, nq, chunk):
-                    Qc = Q[lo : lo + chunk]  # (C, d)
-                    nc = len(Qc)
-                    # (C, m, ksub) LUT of exact sub-distances q↔center,
-                    # built per query with dgemv (NOT a batched GEMM):
-                    # BLAS fold order must not depend on chunk size, or
-                    # chunk-invariance breaks by ULPs
-                    luts = np.empty((nc, m, ksub), dtype=np.float64)
-                    for ci in range(nc):
-                        for j in range(m):
-                            qj = Qc[ci, j * dsub : (j + 1) * dsub]
-                            luts[ci, j] = (qj**2).sum() - 2 * b[j] @ qj + b2[j]
-                    # gather: distance = Σ_j LUT[·, j, code_j], vectorized
-                    # over the whole chunk; the expanded form can dip to −ε
-                    # for (near-)self matches — clamp so sqrt stays real
-                    dist = np.zeros((nc, n), dtype=np.float64)
-                    for j in range(m):
-                        dist += luts[:, j, :][:, codes[:, j]]
-                    np.maximum(dist, 0.0, out=dist)
-                    part = np.argpartition(dist, take - 1, axis=1)[:, :take]
-                    qidx = np.repeat(np.arange(lo, lo + nc), take)
-                    best.append(
-                        pd.DataFrame(
-                            {
-                                query_id: [qids[i] for i in qidx],
-                                "neighbor_id": ids[part.ravel()],
-                                "adist": np.take_along_axis(dist, part, axis=1).ravel(),
-                            }
-                        )
-                    )
-            if not best:
-                return
-            allc = pd.concat(best, ignore_index=True)
-            # partial top-k per query within this partition (stable order:
-            # adist then id — the global window re-ranks identically)
-            allc = allc.sort_values(["adist", "neighbor_id"], kind="mergesort")
-            yield allc.groupby(query_id, sort=False).head(kk)
-
-        return self.encoded.mapInPandas(adc_partition, schema=out_schema)
-
-    def _search_driver_batched(
-        self, queries, batch_rows: int, query_id, query_vec, out_schema, kk, chunk
-    ):
-        """Bounded-driver-memory path for unbounded query sets: stream the
-        query DF through the driver ``batch_rows`` at a time, run one scan
-        per batch, eagerly materialize its (small, ≤ batch×kk rows)
-        candidates, and free the batch broadcast before the next. ⌈Q/B⌉
-        passes over the codes — the price of a flat (cell-less) index."""
-        import numpy as np
-
-        sc = queries.sparkSession.sparkContext
-        batch_rows = max(1, batch_rows)
-        outs = []
-        buf_ids: list = []
-        buf_vecs: list = []
-
-        def flush():
-            bc = sc.broadcast(
-                (list(buf_ids), np.array(buf_vecs, dtype=np.float64))
-            )
-            # localCheckpoint(eager): candidates are computed NOW, so the
-            # broadcast can be freed immediately (result no longer lazy)
-            part = self._adc_scan(
-                bc, out_schema, kk, chunk, query_id
-            ).localCheckpoint(eager=True)
-            bc.unpersist(blocking=False)
-            outs.append(part)
-            buf_ids.clear()
-            buf_vecs.clear()
-
-        for row in queries.select(query_id, query_vec).toLocalIterator():
-            buf_ids.append(row[0])
-            buf_vecs.append(row[1])
-            if len(buf_ids) >= batch_rows:
-                flush()
-        if buf_ids:
-            flush()
-        if not outs:
-            raise ValueError("empty query set")
-        cands = outs[0]
-        for o in outs[1:]:
-            cands = cands.unionByName(o)
-        return cands
-
-    def _finish(
-        self, cands, queries, k, rerank, corpus, query_id, query_vec,
-        broadcast_queries: bool = True,
-    ):
-        w = Window.partitionBy(query_id).orderBy(
-            F.col("adist").asc(), F.col("neighbor_id").asc()
-        )
-        if not rerank:
-            return (
-                cands.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .withColumn("dist", F.sqrt("adist"))
-                .drop("adist")
-            )
-        if corpus is None:
-            raise ValueError("rerank requires the raw-vector corpus")
-        top_r = (
-            cands.withColumn("__arank", F.row_number().over(w))
-            .filter(F.col("__arank") <= rerank)
-            .drop("__arank", "adist")
-        )
-        q = queries.select(
-            F.col(query_id), F.col(query_vec).alias("__qvec")
-        )
-        exact = (
-            top_r.join(
-                corpus.select(
-                    F.col(self.id_col).alias("neighbor_id"),
-                    F.col(self.vec_col).alias("__cvec"),
-                ),
-                "neighbor_id",
-            )
-            .join(F.broadcast(q) if broadcast_queries else q, query_id)
-            .withColumn("__rdist", sq_l2_distance(F.col("__qvec"), F.col("__cvec")))
-        )
-        w2 = Window.partitionBy(query_id).orderBy(
-            F.col("__rdist").asc(), F.col("neighbor_id").asc()
-        )
-        return (
-            exact.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .withColumn("dist", F.sqrt("__rdist"))
-            .select(query_id, "neighbor_id", "rank", "dist")
-        )
+        return blocks

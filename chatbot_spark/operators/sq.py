@@ -12,7 +12,7 @@ code table is ¼ the raw size, scans decode with two BLAS ops, and
 recall loss at 8 bits is tiny (bounded by half a quantization step per
 dimension), usually recovered entirely by a small exact re-rank.
 
-Execution model (same distribution contract as PQIndex):
+Execution model:
  * train: per-dimension min/max via posexplode + groupBy(dim) — map-side
    partial aggregation collapses each partition to d rows before the
    shuffle, so the exchange is O(d × partitions) regardless of corpus
@@ -21,60 +21,43 @@ Execution model (same distribution contract as PQIndex):
    d bytes/row. ``code = round((v - min) * 255 / span)`` clamped to
    [0, 255]; degenerate dimensions (span 0) encode to 0 and decode to
    their constant.
- * search (ADC): query batch collected once and broadcast; ONE
-   mapInPandas scan of the code table serves the whole batch — decode a
-   partition's codes to float64 ((rows, d) BLAS), distances via the
-   ‖x‖² − 2q·x + ‖q‖² expansion, partial top-k inside the kernel,
-   global window top-k after. Optional exact re-rank by id join
-   restores any recall lost to quantization.
+ * search (ADC): the shared quantized-index skeleton (pq.py
+   ``_QuantizedIndex`` — query batch in the scan kernel's closure, one
+   mapInPandas scan, partial top-k per partition, global window after).
+   SQ's own kernel decodes a batch's codes to float64 ((rows, d) BLAS)
+   and takes distances via the ‖x‖² − 2q·x + ‖q‖² expansion. Optional
+   exact re-rank by id join restores any recall lost to quantization.
 
 Determinism: bounds are exact min/max (order-independent), numpy
 rounding is IEEE half-to-even everywhere, ties in ranking break on
 neighbor id — same discipline as ann.py/pq.py. The zero-quantization-
 error pytest (vectors already on the 256-point grid) pins the ADC
-machinery bit-for-bit against the exact scan.
+machinery against the exact scan (same top-k, distances to 1e-9).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chatbot_spark.io.smallio import write_small_parquet
+from chatbot_spark.operators.pq import _codes, _QuantizedIndex, _small_rows
 
-class SQIndex:
+
+class SQIndex(_QuantizedIndex):
     """Scalar-quantized corpus: BINARY codes (d bytes/row) + per-dim bounds.
 
     build():  corpus -> encoded corpus (id + sq_code) + (mins, spans)
     search(): queries -> top-k per query by decoded-L2 over the code
-              table, optionally exact-re-ranked against the raw vectors.
+              table, optionally exact-re-ranked against the raw vectors
+              (see _QuantizedIndex.search).
     """
 
     def __init__(self, mins, spans, encoded: DataFrame, vec_col: str, id_col: str):
+        super().__init__(encoded, vec_col, id_col)
         self.mins = mins            # numpy (d,) float64
         self.spans = spans          # numpy (d,) float64 (>= 0)
-        self.encoded = encoded      # (id_col, sq_code BINARY)
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self._live_broadcasts: list = []
-
-    def delete(self, ids) -> "SQIndex":
-        """Delete vectors by id (see IVFIndex.delete — same filter
-        semantics on the encoded-codes table; codebooks untouched)."""
-        keep = self.encoded.filter(
-            ~F.col(self.id_col).isin([int(i) for i in ids])
-        )
-        out = SQIndex(self.mins, self.spans, keep, self.vec_col, self.id_col)
-        return out
-
-    def release(self) -> None:
-        """Free past query-batch broadcasts once their result DataFrames
-        are materialized (see PQIndex.release)."""
-        for bc in self._live_broadcasts:
-            try:
-                bc.unpersist(blocking=False)
-            except Exception:
-                pass
-        self._live_broadcasts.clear()
 
     # ------------------------------------------------------------- train
 
@@ -85,8 +68,6 @@ class SQIndex:
         vec_col: str = "embedding",
         id_col: str = "id",
     ) -> "SQIndex":
-        import numpy as np
-
         bounds = (
             corpus.select(F.posexplode(vec_col).alias("dim", "v"))
             .groupBy("dim")
@@ -108,13 +89,9 @@ class SQIndex:
 
     def write(self, path: str) -> None:
         """Code table + a tiny parquet of (dim, lo, span) rows — portable,
-        no pickle (same recipe as PQIndex.write)."""
+        no pickle, written driver-side (io/smallio)."""
         self.encoded.write.mode("overwrite").parquet(f"{path}/codes")
-        # bounds are driver-resident by construction — driver-side
-        # parquet write, no Spark job (io/smallio)
         import pyarrow as pa
-
-        from chatbot_spark.io.smallio import write_small_parquet
 
         d = len(self.mins)
         tbl = pa.table(
@@ -128,18 +105,7 @@ class SQIndex:
 
     @classmethod
     def load(cls, spark, path: str, vec_col: str = "embedding", id_col: str = "id") -> "SQIndex":
-        import numpy as np
-
-        from chatbot_spark.io.smallio import read_small_arrow
-
-        btbl = read_small_arrow(spark, f"{path}/bounds")
-        rows = (
-            btbl.to_pylist()
-            if btbl is not None  # local: driver-side read, no Spark job
-            else [
-                r.asDict() for r in spark.read.parquet(f"{path}/bounds").collect()
-            ]
-        )
+        rows = _small_rows(spark, f"{path}/bounds")
         d = max(r["dim"] for r in rows) + 1
         mins = np.zeros(d, dtype=np.float64)
         spans = np.zeros(d, dtype=np.float64)
@@ -149,190 +115,24 @@ class SQIndex:
 
     # -------------------------------------------------------------- search
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int = 10,
-        rerank: int = 0,
-        corpus: DataFrame | None = None,
-        query_id: str = "query_id",
-        query_vec: str = "query_embedding",
-        driver_batch_rows: int | None = None,
-    ) -> DataFrame:
-        """Decoded-L2 top-k over the code table; ``rerank=R > 0`` (with
-        ``corpus``) re-scores the top-R shortlist with exact L2 so the
-        final (rank, dist) match the exact operator's contract on every
-        shortlist that quantization ranked correctly.
+    def _blocks(self, Q):
+        mins, scale, id_col = self.mins, self.spans / 255.0, self.id_col
+        qn = (Q * Q).sum(axis=1)
 
-        Default path: the query batch is collected once and broadcast —
-        driver memory O(Q × d), the bounded-batch contract shared by the
-        whole ANN family. For UNBOUNDED query sets pass
-        ``driver_batch_rows=B`` (the PQIndex contract, round-5 verdict
-        item 7): the query DF streams through the driver B rows at a
-        time via toLocalIterator, each batch's scan is eagerly
-        materialized (localCheckpoint) and its broadcast freed before
-        the next — driver holds ≤ B vectors at any moment, at the cost
-        of ⌈Q/B⌉ passes over the codes. Output is identical to the
-        unbatched plan: per-partition partial top-k survives batching
-        (each batch sees every code partition), and the global window
-        re-ranks with the same (adist, neighbor_id) total order."""
-        import numpy as np
-
-        qid_t = queries.schema[query_id].dataType.simpleString()
-        nid_t = self.encoded.schema[self.id_col].dataType.simpleString()
-        out_schema = f"{query_id} {qid_t}, neighbor_id {nid_t}, adist DOUBLE"
-        kk = max(k, rerank)
-
-        if driver_batch_rows is not None:
-            cands = self._search_driver_batched(
-                queries, int(driver_batch_rows), query_id, query_vec,
-                out_schema, kk,
-            )
-            # unbounded-Q contract: the rerank join must not broadcast
-            # the query side either (F.broadcast(q) would collect all Q
-            # vectors to the driver — the exact condition this avoids)
-            return self._finish(
-                cands, queries, k, rerank, corpus, query_id, query_vec,
-                broadcast_queries=False,
+        def blocks(pdf):
+            Xd = _codes(pdf, "sq_code", len(mins)).astype(np.float64) * scale + mins
+            xn = (Xd * Xd).sum(axis=1)
+            # clamp: the expansion can land ~-1e-13 for identical vectors
+            # (BLAS reassociation); sqrt(neg) → NaN dist
+            yield np.arange(len(Q)), pdf[id_col].to_numpy(), lambda qc: np.maximum(
+                qn[qc, None] - 2.0 * (Q[qc] @ Xd.T) + xn[None, :], 0.0
             )
 
-        rows = queries.select(query_id, query_vec).collect()
-        if not rows:
-            raise ValueError("empty query set")
-        qids = [r[0] for r in rows]
-        Q = np.array([r[1] for r in rows], dtype=np.float64)
-        bc = queries.sparkSession.sparkContext.broadcast((qids, Q))
-        self._live_broadcasts.append(bc)
-        cands = self._sq_scan(bc, out_schema, kk, query_id)
-        return self._finish(cands, queries, k, rerank, corpus, query_id, query_vec)
-
-    def _sq_scan(self, bc, out_schema, kk, query_id):
-        """One mapInPandas pass over the code table serving the broadcast
-        query batch ``bc`` = (qids, Q matrix)."""
-        import numpy as np
-
-        mins, spans = self.mins, self.spans
-        scale = spans / 255.0
-        id_col = self.id_col
-
-        def scan(batches):
-            import pandas as pd
-
-            ids_q, Qm = bc.value
-            qn = (Qm * Qm).sum(axis=1)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.frombuffer(
-                    b"".join(pdf["sq_code"].tolist()), dtype=np.uint8
-                ).reshape(len(pdf), -1)
-                Xd = codes.astype(np.float64) * scale + mins
-                xn = (Xd * Xd).sum(axis=1)
-                # clamp: the expansion can land ~-1e-13 for identical
-                # vectors (BLAS reassociation); sqrt(neg) → NaN dist
-                d2 = np.maximum(
-                    qn[:, None] - 2.0 * (Qm @ Xd.T) + xn[None, :], 0.0
-                )
-                top = min(kk, d2.shape[1])
-                idx = np.argpartition(d2, top - 1, axis=1)[:, :top]
-                out_q, out_n, out_d = [], [], []
-                nid = pdf[id_col].to_numpy()
-                for qi in range(len(ids_q)):
-                    out_q.extend([ids_q[qi]] * top)
-                    out_n.extend(nid[idx[qi]])
-                    out_d.extend(d2[qi, idx[qi]])
-                yield pd.DataFrame(
-                    {query_id: out_q, "neighbor_id": out_n, "adist": out_d}
-                )
-
-        return self.encoded.mapInPandas(scan, schema=out_schema)
-
-    def _search_driver_batched(
-        self, queries, batch_rows: int, query_id, query_vec, out_schema, kk
-    ):
-        """Bounded-driver-memory path for unbounded query sets (the
-        PQIndex._search_driver_batched recipe): stream, scan per batch,
-        eagerly materialize the (small, ≤ batch×kk·P rows) candidates,
-        free the batch broadcast before the next."""
-        import numpy as np
-
-        sc = queries.sparkSession.sparkContext
-        batch_rows = max(1, batch_rows)
-        outs = []
-        buf_ids: list = []
-        buf_vecs: list = []
-
-        def flush():
-            bc = sc.broadcast(
-                (list(buf_ids), np.array(buf_vecs, dtype=np.float64))
-            )
-            # localCheckpoint(eager): candidates are computed NOW, so the
-            # broadcast can be freed immediately (result no longer lazy)
-            part = self._sq_scan(bc, out_schema, kk, query_id).localCheckpoint(
-                eager=True
-            )
-            bc.unpersist(blocking=False)
-            outs.append(part)
-            buf_ids.clear()
-            buf_vecs.clear()
-
-        for row in queries.select(query_id, query_vec).toLocalIterator():
-            buf_ids.append(row[0])
-            buf_vecs.append(row[1])
-            if len(buf_ids) >= batch_rows:
-                flush()
-        if buf_ids:
-            flush()
-        if not outs:
-            raise ValueError("empty query set")
-        cands = outs[0]
-        for o in outs[1:]:
-            cands = cands.unionByName(o)
-        return cands
-
-    def _finish(
-        self, cands, queries, k, rerank, corpus, query_id, query_vec,
-        broadcast_queries: bool = True,
-    ):
-        w = Window.partitionBy(query_id).orderBy(
-            F.col("adist").asc(), F.col("neighbor_id").asc()
-        )
-        short = (
-            cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= max(k, rerank))
-        )
-        if rerank and corpus is not None:
-            from chatbot_spark.functions.vector import l2_distance
-
-            raw = corpus.select(
-                F.col(self.id_col).alias("neighbor_id"),
-                F.col(self.vec_col).alias("__nvec"),
-            )
-            qv = queries.select(query_id, query_vec)
-            if broadcast_queries:
-                qv = F.broadcast(qv)
-            exact = (
-                short.select(query_id, "neighbor_id")
-                .join(raw, "neighbor_id")
-                .join(qv, query_id)
-                .withColumn("dist", l2_distance(F.col(query_vec), F.col("__nvec")))
-            )
-            w2 = Window.partitionBy(query_id).orderBy(
-                F.col("dist").asc(), F.col("neighbor_id").asc()
-            )
-            return (
-                exact.withColumn("rank", F.row_number().over(w2))
-                .filter(F.col("rank") <= k)
-                .select(query_id, "neighbor_id", "rank", "dist")
-            )
-        return short.filter(F.col("rank") <= k).select(
-            query_id, "neighbor_id", "rank", F.sqrt("adist").alias("dist")
-        )
+        return blocks
 
 
 def _encode_sq(col, mins, spans):
     """Arrow-batched encode: ARRAY<FLOAT> -> BINARY of d uint8 codes."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

@@ -240,53 +240,40 @@ def test_ivfpq_codes_are_m_bytes(corpus):
     assert [r["n"] for r in lens] == [8]
 
 
-def test_pq_chunked_queries_equal_unchunked(corpus, queries):
-    """Streaming the query side in chunks (bounded-driver contract) is a
-    pure repartitioning of the same work: query_chunk=3 over 10 queries
-    (4 kernel branches) must reproduce the single-chunk result exactly,
-    on both the ADC path and the exact-rerank path."""
+def test_pq_chunked_queries_equal_unchunked(corpus, queries, monkeypatch):
+    """Scoring the query batch in chunks is a pure repartitioning of the
+    same work: a pair budget of 1 forces one query per chunk, which must
+    reproduce the single-chunk rows bit for bit (the per-query dgemv LUT
+    makes ADC distances independent of the chunk), on both the ADC path
+    and the exact-rerank path."""
+    from chatbot_spark.operators import topk
     from chatbot_spark.operators.pq import PQIndex
 
     index = PQIndex.build(corpus, vec_col="embedding", id_col="vec_id", m=8, ksub=16)
-    # (C, dsub) @ (dsub, ksub) BLAS blocking differs by chunk shape, so
-    # ADC distances may differ in the last ulp between chunkings — the
-    # neighbor SETS must agree and distances to 1e-9
-    whole = index.search(queries, k=10).collect()
-    chunked = index.search(queries, k=10, query_chunk=3).collect()
-    assert {(r.query_id, r.neighbor_id) for r in whole} == {
-        (r.query_id, r.neighbor_id) for r in chunked
-    }
-    wd = {(r.query_id, r.neighbor_id): r.dist for r in whole}
-    assert all(abs(r.dist - wd[(r.query_id, r.neighbor_id)]) < 1e-9 for r in chunked)
-    # the exact-rerank path re-scores against raw vectors with one fixed
-    # expression — it must be bit-identical across chunkings
-    whole_rr = sorted(
-        map(tuple, index.search(queries, k=5, rerank=50, corpus=corpus).collect())
-    )
-    chunked_rr = sorted(
-        map(
-            tuple,
-            index.search(
-                queries, k=5, rerank=50, corpus=corpus, query_chunk=3
-            ).collect(),
+
+    def both():
+        return (
+            sorted(map(tuple, index.search(queries, k=10).collect())),
+            sorted(map(tuple, index.search(queries, k=5, rerank=50, corpus=corpus).collect())),
         )
-    )
-    assert whole_rr == chunked_rr
+
+    whole = both()
+    monkeypatch.setattr(topk, "_PAIR_BLOCK", 1)
+    assert both() == whole
 
 
-def test_ivfpq_chunked_queries_equal_unchunked(corpus, queries):
-    """Same chunk-invariance contract for IVF-PQ: per-chunk probed-cell
-    pruning and per-chunk residual LUTs must compose to the identical
-    global top-k."""
+def test_ivfpq_chunked_queries_equal_unchunked(corpus, queries, monkeypatch):
+    """Same chunk-invariance contract for IVF-PQ: per-chunk residual LUTs
+    over each probed cell must compose to the identical global top-k."""
+    from chatbot_spark.operators import topk
     from chatbot_spark.operators.ivfpq import IVFPQIndex
 
     index = IVFPQIndex.build(
         corpus, vec_col="embedding", id_col="vec_id", nlist=8, m=16, ksub=32
     )
     whole = sorted(map(tuple, index.search(queries, k=10, nprobe=4).collect()))
-    chunked = sorted(
-        map(tuple, index.search(queries, k=10, nprobe=4, query_chunk=3).collect())
-    )
+    monkeypatch.setattr(topk, "_PAIR_BLOCK", 1)
+    chunked = sorted(map(tuple, index.search(queries, k=10, nprobe=4).collect()))
     assert whole == chunked
 
 
@@ -500,8 +487,8 @@ def _n_jobs(spark) -> int:
 def test_ann_search_jobs_independent_of_query_count(spark, corpus):
     """The distributed query side: a PQ/IVF-PQ/NSW search is one bounded
     query-collect plus ONE scan job — the Spark job count must not grow
-    with the query count or shrink with PQ/IVF-PQ's query_chunk (the old
-    driver chunk loop submitted one serialized job per chunk)."""
+    with the query count (the old driver chunk loop submitted one
+    serialized job per chunk)."""
     from chatbot_spark.operators.hnsw import NSWGraphIndex
     from chatbot_spark.operators.ivfpq import IVFPQIndex
     from chatbot_spark.operators.pq import PQIndex
@@ -527,8 +514,8 @@ def test_ann_search_jobs_independent_of_query_count(spark, corpus):
         return _n_jobs(spark) - before
 
     for idx, kwargs in (
-        (pq, {"query_chunk": 3}),
-        (ivfpq, {"nprobe": 2, "query_chunk": 3}),
+        (pq, {}),
+        (ivfpq, {"nprobe": 2}),
         (nsw, {"nprobe": 2}),
     ):
         few = jobs_for(lambda: idx.search(q_of(3), k=5, **kwargs))
@@ -643,9 +630,9 @@ def test_ann_join_route_job_count_independent_of_query_count(spark, corpus):
 
 
 def test_pq_driver_batched_equals_broadcast(spark, corpus, queries):
-    """The bounded-driver-memory PQ path (driver_batch_rows streaming +
-    per-batch broadcast free) must return identical rows to the one-shot
-    broadcast path, batch boundaries notwithstanding."""
+    """The bounded-driver-memory PQ path (driver_batch_rows streaming,
+    one eagerly materialized scan per batch) must return identical rows
+    to the one-shot path, batch boundaries notwithstanding."""
     from chatbot_spark.operators.pq import PQIndex
 
     pq = PQIndex.build(corpus, vec_col="embedding", id_col="vec_id", m=16, ksub=32)
@@ -653,25 +640,12 @@ def test_pq_driver_batched_equals_broadcast(spark, corpus, queries):
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in pq.search(queries, k=5).collect()
     }
-    n_tracked = len(pq._live_broadcasts)  # the broadcast-path call above
     b = {
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in pq.search(queries, k=5, driver_batch_rows=3).collect()
     }
     assert a == b
-    # batched path frees its per-batch broadcasts as it goes — nothing new
-    assert len(pq._live_broadcasts) == n_tracked
 
-
-def test_ann_release_frees_broadcasts(spark, corpus, queries):
-    """search() tracks its query-batch broadcast; release() clears it."""
-    from chatbot_spark.operators.pq import PQIndex
-
-    pq = PQIndex.build(corpus, vec_col="embedding", id_col="vec_id", m=16, ksub=32)
-    pq.search(queries, k=5).write.format("noop").mode("overwrite").save()
-    assert len(pq._live_broadcasts) == 1
-    pq.release()
-    assert pq._live_broadcasts == []
 
 def test_nsw_rebalance_bounds_shards_and_stays_exact(spark, corpus, queries, tmp_path):
     """OPTIMIZE maintenance: build small (nlist=2 → big shards), append,
@@ -829,7 +803,6 @@ def test_sq_zero_quantization_error_matches_exact(spark):
     }
     ed = {(r.query_id, r.neighbor_id): r.dist for r in exact}
     assert all(abs(r.dist - ed[(r.query_id, r.neighbor_id)]) < 1e-9 for r in got)
-    index.release()
 
 
 def test_sq_codes_are_d_bytes_and_rerank_recall(corpus, queries, exact):
@@ -843,7 +816,6 @@ def test_sq_codes_are_d_bytes_and_rerank_recall(corpus, queries, exact):
     assert [r.n for r in lens] == [64]  # 64-d float32 (256 B) -> 64 B
     approx = index.search(queries, k=10, rerank=100, corpus=corpus)
     assert recall_at_k(approx, exact) >= 0.95
-    index.release()
 
 
 def test_sq_write_load_roundtrip(spark, corpus, queries, tmp_path):
@@ -856,8 +828,6 @@ def test_sq_write_load_roundtrip(spark, corpus, queries, tmp_path):
     a = sorted(map(tuple, index.search(queries, k=5).collect()))
     b = sorted(map(tuple, loaded.search(queries, k=5).collect()))
     assert a == b
-    index.release()
-    loaded.release()
 
 
 def test_nsw_hierarchy_layer_invariants(spark, corpus):
@@ -1008,7 +978,7 @@ def test_nsw_optimize_cycle_versioned_maintenance(spark, corpus, queries, exact,
 def test_sq_driver_batched_equals_broadcast(spark, corpus, queries):
     """Round-5 verdict item 7: SQIndex grows the same bounded-driver
     driver_batch_rows path as PQIndex — identical rows to the one-shot
-    broadcast path, per-batch broadcasts freed as it goes."""
+    path."""
     from chatbot_spark.operators.sq import SQIndex
 
     index = SQIndex.build(corpus, vec_col="embedding", id_col="vec_id")
@@ -1016,14 +986,11 @@ def test_sq_driver_batched_equals_broadcast(spark, corpus, queries):
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in index.search(queries, k=5).collect()
     }
-    n_tracked = len(index._live_broadcasts)
     b = {
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in index.search(queries, k=5, driver_batch_rows=3).collect()
     }
     assert a == b
-    assert len(index._live_broadcasts) == n_tracked
-    index.release()
 
 
 def test_sq_driver_batched_rerank_equals_broadcast(spark, corpus, queries):
@@ -1045,7 +1012,6 @@ def test_sq_driver_batched_rerank_equals_broadcast(spark, corpus, queries):
         )
     )
     assert a == b
-    index.release()
 
 
 def test_sq_degenerate_constant_dimension(spark):
@@ -1064,7 +1030,6 @@ def test_sq_degenerate_constant_dimension(spark):
     top = index.search(queries, k=3).collect()
     assert [r.neighbor_id for r in sorted(top, key=lambda r: r.rank)][0] == 0
     assert abs(sorted(top, key=lambda r: r.rank)[0].dist) < 1e-12
-    index.release()
 
 def test_nsw_exact_fast_path_equals_walk(spark, corpus, queries):
     """The r11 exact-mode fast path (nprobe >= nshards AND ef >= max

@@ -6,6 +6,7 @@ over the remaining corpus (checked exactly where the index is exact)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from chatbot_spark.operators.ann import BRPIndex, IVFIndex
@@ -73,3 +74,19 @@ def test_delete_absent_ids_is_noop(spark):
     idx = IVFIndex.build(corpus, vec_col="embedding", id_col="vec_id", nlist=2)
     before = idx.indexed.count()
     assert idx.delete({10_000}).indexed.count() == before
+
+
+def test_quantized_rerank_without_corpus_raises(spark):
+    """rerank re-scores the shortlist against the raw vectors, so every
+    quantized index refuses it without ``corpus`` instead of returning
+    unreranked ADC rows."""
+    corpus = _corpus(spark)
+    q = _queries(corpus)
+    for idx, kwargs in (
+        (PQIndex.build(corpus, vec_col="embedding", id_col="vec_id", m=4, ksub=16), {}),
+        (IVFPQIndex.build(corpus, vec_col="embedding", id_col="vec_id",
+                          nlist=4, m=4, ksub=16), {"nprobe": 4}),
+        (SQIndex.build(corpus, vec_col="embedding", id_col="vec_id"), {}),
+    ):
+        with pytest.raises(ValueError, match="rerank requires the raw-vector corpus"):
+            idx.search(q, k=5, rerank=20, **kwargs)

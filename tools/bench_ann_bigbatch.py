@@ -80,7 +80,6 @@ def main() -> int:
         out = idx.search(queries, k=k, nprobe=nprobe, route=route)
         rows = out.count()
         results[route] = {"sec": round(time.time() - t0, 3), "rows": rows}
-        idx.release()
     assert results["broadcast"]["rows"] == results["join"]["rows"], results
 
     payload = {
