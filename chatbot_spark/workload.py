@@ -6272,7 +6272,8 @@ def sq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank restores the top-10. Unlike PQ the quantizer is fully
     deterministic (no seed), but the workload embeddings aren't on the
     256-point grid, so the driver oracle asserts the family recall SLO;
-    the zero-quantization-error pytest pins ADC ≡ exact bit-for-bit."""
+    the zero-quantization-error pytest pins ADC ≡ exact (same top-k,
+    distances to 1e-9)."""
     from chatbot_spark.operators.sq import SQIndex
 
     emb = load_table(spark, sf_dir, "embeddings")
