@@ -13,14 +13,14 @@ Local masters start their Python workers from ``chatbot_spark.worker_daemon``
 (``spark.python.daemon.module``). Spark's worker ``PYTHONPATH`` puts
 ``pyspark.zip``, the py4j zip and the spark-core jar ahead of site-packages,
 and pyspark's worker calls ``importlib.invalidate_caches()`` for every task,
-which makes each zipimporter re-read its archive: about 0.13-0.35 s per task
-before any kernel runs (a no-op ``mapInArrow`` stage went 0.375 -> 0.194 s,
-perfbench ``retrieve`` 26.5 -> 43.0 items/s on a 4-core host). The daemon
-drops those archives when the directory install holds the same pyspark, so
-workers import the driver's pyspark files. ``python -m`` must find the
-daemon module in a worker started from any working directory, so the engine
-root goes first on ``spark.executorEnv.PYTHONPATH`` (after it, any value the
-caller passed). Other masters keep Spark's own daemon and paths.
+which makes each zipimporter re-read its archive before any kernel runs
+(perfbench ``retrieve`` read 28.4 -> 44.5 items/s without the re-reads, on
+a 4-core host). The daemon drops those archives when the directory install
+holds the same pyspark, so workers import the driver's pyspark files.
+``python -m`` must find the daemon module in a worker started from any
+working directory, so the engine root goes first on
+``spark.executorEnv.PYTHONPATH`` (after it, any value the caller passed).
+Other masters keep Spark's own daemon and paths.
 """
 
 from __future__ import annotations
