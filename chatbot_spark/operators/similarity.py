@@ -3,10 +3,17 @@
  * embedding_neardup_pairs — ε-ball self-join (near-duplicate detection by
    embedding cosine), exact; the LSH/IVF variants in operators.ann are the
    scale path with identical output contracts.
+ * embedding_neardup_pairs_blocked / _bucketed — the same pair set by
+   BLAS: tiled over the whole corpus, or over k-means cell pairs the
+   triangle inequality cannot rule out.
 
 Scale: the self-join projects to (id, vec) before joining, ranks on
 squared/dot quantities (no sqrt per pair), and the ε-ball variant is the
 operator to replace with ann.BRPIndex bucket joins once N² stops fitting.
+At or below ``NEARDUP_DRIVER_SOLVE_ROWS`` rows both BLAS variants skip
+their Spark machinery: they collect (id, unit vector) once and run one
+chunked pair pass on the driver (``_driver_pairs``), which emits the same
+pair set as their distributed regime.
 
 Exact cosine top-k per query is ``topk.knn_join(metric="cosine")`` (the
 Arrow ``scan_topk`` kernel); it reports cosine DISTANCE, so a similarity
@@ -59,6 +66,63 @@ def embedding_neardup_pairs(
     )
 
 
+# row-chunk width of the driver pair pass's sims slab (memory bound:
+# chunk x n doubles); module-level so tests can shrink it to exercise
+# chunk boundaries on small corpora
+_DRIVER_PAIR_CHUNK = 4096
+
+# row gate of the blocked and bucketed operators' driver pair pass (r13):
+# at 20k rows the full pair scan is a few dgemm slabs on the driver
+NEARDUP_DRIVER_SOLVE_ROWS = 20_000
+
+
+def _driver_pairs(ids, U, min_cosine: float):
+    """The driver regime's pair pass: every (id_a < id_b) pair of rows of
+    the unit matrix ``U`` (n ≥ 1 rows, aligned with int64 ``ids``) whose
+    cosine is ≥ ``min_cosine``, as an Arrow (id_a, id_b, cosine) table.
+
+    One ``U[a:a+chunk] @ U.T`` dgemm slab per ``_DRIVER_PAIR_CHUNK`` rows,
+    thresholded with the ``min_cosine - 1e-12`` guard band the
+    distributed kernels carry. The keep rule is id-strict
+    (``ids[i] < ids[j]``, as in those kernels), so each unordered pair is
+    emitted once and duplicate ids never self-pair. NaN rows (zero-norm
+    vectors normalized in numpy) compare false and never pair."""
+    import numpy as np
+    import pyarrow as pa
+
+    thr = min_cosine - 1e-12
+    step = _DRIVER_PAIR_CHUNK
+    outs_a, outs_b, outs_c = [], [], []
+    for a in range(0, len(U), step):
+        sims = U[a : a + step] @ U.T
+        bi, bj = np.nonzero(sims >= thr)
+        keep = ids[bi + a] < ids[bj]
+        bi, bj = bi[keep], bj[keep]
+        outs_a.append(ids[bi + a])
+        outs_b.append(ids[bj])
+        outs_c.append(sims[bi, bj])
+    return pa.table(
+        {
+            "id_a": pa.array(np.concatenate(outs_a), pa.int64()),
+            "id_b": pa.array(np.concatenate(outs_b), pa.int64()),
+            "cosine": pa.array(np.concatenate(outs_c), pa.float64()),
+        }
+    )
+
+
+def _unit_rows(vectors):
+    """(n, d) float64 matrix of ``vectors`` scaled to unit L2 norm — the
+    blocked operator's one normalization, shared by its stream kernel,
+    its tile loader and its driver pass. A zero-norm row becomes NaN, so
+    it never passes a cosine threshold."""
+    import numpy as np
+
+    mat = np.array(vectors, dtype=np.float64)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat
+
+
 def embedding_neardup_pairs_blocked(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -76,7 +140,16 @@ def embedding_neardup_pairs_blocked(
     union over tiles is the full upper triangle: a pair (a < b) is emitted
     exactly once, by the single tile that owns ``b``.
 
-    Scale contract: the DRIVER never touches vector data — the tile write
+    Size gate (the bucketed operator's): at or below
+    ``NEARDUP_DRIVER_SOLVE_ROWS`` raw rows, (id, vec) is collected once
+    as Arrow, normalized by the same numpy code the tiles use, and
+    ``_driver_pairs`` returns the result as a local table — no tile
+    write, no read-back, no stream job. The pair set equals the tiled
+    one; each cosine is the same dgemm dot product up to BLAS blocking
+    (within 1e-12).
+
+    Scale contract (above the gate, or with ``CBS_FORCE_DISTRIBUTED=1``):
+    the DRIVER never touches vector data — the tile write
     is one distributed job, the loop below iterates over tile *numbers*
     (metadata), and executors fetch tiles directly from shared storage.
     Each Python worker holds ONE tile at a time (``tile_rows`` ≈ 1 M ×
@@ -98,6 +171,7 @@ def embedding_neardup_pairs_blocked(
     import tempfile
     from collections.abc import Iterator
 
+    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -111,9 +185,22 @@ def embedding_neardup_pairs_blocked(
 
     from chatbot_spark.io.tables import spread
 
+    spark = df.sparkSession
     side = df.select(id_col, vec_col)
+    if driver_solves(df.select(id_col), NEARDUP_DRIVER_SOLVE_ROWS):
+        probe = side.toArrow()  # bounded by the row probe above
+        if probe.num_rows == 0:
+            return local_df(spark, [], out_schema)
+        ids = np.asarray(
+            probe.column(id_col).to_numpy(zero_copy_only=False), dtype=np.int64
+        )
+        U = _unit_rows(probe.column(vec_col).to_pylist())
+        return local_df(spark, _driver_pairs(ids, U, min_cosine))
+
     n = side.count()
-    n_tiles = max(1, -(-n // tile_rows))
+    if n == 0:  # an empty tile write leaves no partition to read back
+        return local_df(spark, [], out_schema)
+    n_tiles = -(-n // tile_rows)
     # r14 (guide §2.5/§2.6 — parallelism from rows, not bytes): the
     # streaming pass below is pure BLAS CPU per row over a small
     # compressed scan, which AQE byte-coalescing collapses to 1-2 tasks
@@ -129,7 +216,6 @@ def embedding_neardup_pairs_blocked(
     # the corpus, so the per-tile `stream_id < tile_id` emit is exactly-once
     tile_of = F.pmod(F.abs(F.xxhash64(F.col(id_col))), F.lit(n_tiles))
 
-    spark = df.sparkSession
     tiles_path = os.path.join(
         work_dir or tempfile.mkdtemp(prefix="cbs_neardup_tiles_"), "tiles"
     )
@@ -155,8 +241,7 @@ def embedding_neardup_pairs_blocked(
             for pdf in batches:
                 if pdf.empty:  # empty partitions yield empty Arrow batches
                     continue
-                q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                q /= np.linalg.norm(q, axis=1, keepdims=True)
+                q = _unit_rows(list(pdf[vec_col]))
                 qids = pdf[id_col].to_numpy(dtype=np.int64)
                 sims = q @ M.T  # (batch, tile) BLAS
                 bi, bj = np.nonzero(sims >= min_cosine - 1e-12)
@@ -166,22 +251,10 @@ def embedding_neardup_pairs_blocked(
 
         outs.append(stream.mapInPandas(kernel, out_schema))
 
-    if not outs:
-        return local_df(spark, [], out_schema)
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-# row-chunk width of the driver-gated pair kernel's sims slab (memory
-# bound: chunk x n doubles); module-level so tests can shrink it to
-# exercise chunk boundaries on small corpora
-_DRIVER_PAIR_CHUNK = 4096
-
-# row gate of embedding_neardup_pairs_bucketed's driver BLAS pass (r13):
-# at 20k rows the full pair scan is a few dgemm slabs on the driver
-NEARDUP_DRIVER_SOLVE_ROWS = 20_000
 
 
 def embedding_neardup_pairs_bucketed(
@@ -199,8 +272,8 @@ def embedding_neardup_pairs_bucketed(
 
     Size gate (r13, the components/LPA driver-solve precedent): at or
     below ``NEARDUP_DRIVER_SOLVE_ROWS`` raw rows the pair set is
-    computed in one chunked BLAS pass on the driver over the SAME
-    JVM-normalized unit vectors the distributed kernel would see — the
+    computed by ``_driver_pairs`` (the blocked operator's driver pass
+    too) over the SAME JVM-normalized unit vectors the distributed kernel would see — the
     emitted (min id, max id) pair set is identical (each unordered pair
     enumerated exactly once either way, same ``thr`` guard band), and
     the cosine values are the same dgemm to reassociation (~1e-15; the
@@ -266,40 +339,14 @@ def embedding_neardup_pairs_bucketed(
     # just to decide. raw rows >= non-zero-norm rows, so raw <= gate
     # still bounds the collect below.
     if driver_solves(df.select(F.col(id_col)), NEARDUP_DRIVER_SOLVE_ROWS):
-        import pyarrow as pa
-
         probe = unit.toArrow()  # bounded by the row probe above
-        ids = np.asarray(
-            probe.column("__id").to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        if len(ids) == 0:
+        if probe.num_rows == 0:
             return local_df(spark, [], out_schema)
-        U = np.array(probe.column("__unit").to_pylist(), dtype=np.float64)
-        thr_d = min_cosine - 1e-12
-        outs_a, outs_b, outs_c = [], [], []
-        step = _DRIVER_PAIR_CHUNK  # bounds the sims slab at step x n
-        for a in range(0, len(U), step):
-            sims = U[a : a + step] @ U.T
-            bi, bj = np.nonzero(sims >= thr_d)
-            gi = bi + a
-            # id-strict (r13 ADVICE): the distributed diagonal kernel
-            # keeps lids[bi] < lids[bj], so duplicate ids never emit
-            # self-pairs — match it exactly (ids unique => identical
-            # to the former position-triangle keep)
-            keep = ids[gi] < ids[bj]
-            ia, ib = ids[gi[keep]], ids[bj[keep]]
-            outs_a.append(np.minimum(ia, ib))
-            outs_b.append(np.maximum(ia, ib))
-            outs_c.append(sims[bi[keep], bj[keep]])
-        tbl = pa.table(
-            {
-                "id_a": pa.array(np.concatenate(outs_a), pa.int64()),
-                "id_b": pa.array(np.concatenate(outs_b), pa.int64()),
-                "cosine": pa.array(np.concatenate(outs_c), pa.float64()),
-            }
+        ids = np.asarray(
+            probe.column("__id").to_numpy(zero_copy_only=False), dtype=np.int64
         )
-        return local_df(spark, tbl)
+        U = np.array(probe.column("__unit").to_pylist(), dtype=np.float64)
+        return local_df(spark, _driver_pairs(ids, U, min_cosine))
 
     from chatbot_spark.operators.ann import _sample_matrix
 
@@ -448,8 +495,7 @@ def _load_tile_matrix(tile_dir: str, id_col: str, vec_col: str):
 
     tbl = pq.read_table(tile_dir, columns=[id_col, vec_col])
     ids = tbl[id_col].to_numpy(zero_copy_only=False).astype(np.int64)
-    mat = np.array(tbl[vec_col].to_pylist(), dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    mat = _unit_rows(tbl[vec_col].to_pylist())
     _TILE_CACHE.clear()
     _TILE_CACHE[tile_dir] = (ids, mat)
     return ids, mat

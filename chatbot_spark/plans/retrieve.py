@@ -448,20 +448,21 @@ def _index_content_stamp(spark, path: str) -> tuple:
     partition overwrite alike), plus the marker's presence set. An
     in-place append/compact therefore changes the stamp and the next
     retrieve() loads fresh — cross-process safe, unlike the in-process
-    invalidation hook. Cost: ≤4 FS metadata RPCs per retrieve call,
-    micro against the ~0.5 s load it guards."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    stamp = []
-    for sub in ("cells", "graph", "centroids", "tombstones", "meta"):
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}/_SUCCESS")
-        try:
-            fs = p.getFileSystem(conf)
-            st = fs.getFileStatus(p)
-            stamp.append((sub, st.getModificationTime(), st.getLen()))
-        except Exception:
-            continue  # this layout has no such dir — part of the stamp
-    return tuple(stamp)
+    invalidation hook. Cost: one ``globStatus`` over the five candidate
+    markers per retrieve call. A per-directory ``getFileStatus`` would
+    raise (and convert) a Java exception for each directory the layout
+    lacks: IVF has no graph or tombstones, NSW no cells."""
+    subs = ("cells", "graph", "centroids", "tombstones", "meta")
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{path}/{{{','.join(subs)}}}/_SUCCESS"
+    )
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = {
+        st.getPath().getParent().getName(): (st.getModificationTime(), st.getLen())
+        for st in fs.globStatus(pattern) or []
+    }
+    # a directory this layout lacks is absent — part of the stamp
+    return tuple((sub, *found[sub]) for sub in subs if sub in found)
 
 
 def _routed_universal(

@@ -668,6 +668,59 @@ def test_index_cache_auto_invalidates_on_inplace_mutation(
     assert 0 not in got_after  # stale cache would still emit id 0
 
 
+def test_index_content_stamp_one_glob_equals_per_dir_lookups(
+    spark, fixture, tmp_path
+):
+    """The retrieve cache's content stamp comes from one globStatus over
+    the five candidate _SUCCESS markers. It must equal the former
+    per-directory getFileStatus stamp on an IVF layout (no graph or
+    tombstones dir) and an NSW layout (no cells dir), before and after an
+    in-place append(path=), and still change after the IVF append."""
+    from chatbot_spark.operators.ann import IVFIndex
+    from chatbot_spark.operators.hnsw import NSWGraphIndex
+    from chatbot_spark.plans.retrieve import _index_content_stamp
+
+    def per_dir_stamp(path):
+        jvm = spark._jvm
+        conf = spark._jsc.hadoopConfiguration()
+        stamp = []
+        for sub in ("cells", "graph", "centroids", "tombstones", "meta"):
+            p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}/_SUCCESS")
+            fs = p.getFileSystem(conf)
+            if fs.exists(p):
+                st = fs.getFileStatus(p)
+                stamp.append((sub, st.getModificationTime(), st.getLen()))
+        return tuple(stamp)
+
+    rows, df, queries, qdf = fixture
+    vecs = df.select("id", "embedding")
+    extra = spark.createDataFrame(
+        [(30_000, rows[0][1])], "id long, embedding array<double>"
+    )
+    ivf = str(tmp_path / "ivf_stamp")
+    IVFIndex.build(vecs, vec_col="embedding", id_col="id", nlist=4).write(ivf)
+    nsw = str(tmp_path / "nsw_stamp")
+    NSWGraphIndex.build(
+        vecs, vec_col="embedding", id_col="id", nlist=2, m=8,
+        ef_construction=32, method="knn",
+    ).write(nsw)
+    stamps = {}
+    for path, loader, absent, kw in (
+        (ivf, IVFIndex, {"graph", "tombstones"}, {}),
+        (nsw, NSWGraphIndex, {"cells"}, {"m": 8, "ef_construction": 32}),
+    ):
+        stamp = _index_content_stamp(spark, path)
+        assert stamp == per_dir_stamp(path)
+        assert stamp and absent.isdisjoint(sub for sub, *_ in stamp)
+        loader.load(spark, path, vec_col="embedding", id_col="id").append(
+            extra, path=path, **kw
+        )
+        after = _index_content_stamp(spark, path)
+        assert after == per_dir_stamp(path)
+        stamps[path] = (stamp, after)
+    assert stamps[ivf][0] != stamps[ivf][1]
+
+
 def test_brute_gate_still_validates_index_registration(
     spark, fixture, tmp_path
 ):

@@ -95,16 +95,18 @@ def test_semdedup_gate_strict_id_filter(spark):
     assert {(r.id_a, r.id_b) for r in out} == {(7, 9)}
 
 
-def test_blocked_neardup_batch_shape_invariance(spark, sf_dir):
+def test_blocked_neardup_batch_shape_invariance(spark, sf_dir, monkeypatch):
     """r14 spread() on the blocked-matmul stream side: the emitted pair
     set AND the float64 cosines must be bit-identical under any input
     partitioning (every pair value is one dgemm element; its
-    k-accumulation does not depend on batch composition)."""
+    k-accumulation does not depend on batch composition). The corpus is
+    under the driver gate, so the stream regime is forced."""
     import struct
 
     from chatbot_spark.io.tables import load_table
     from chatbot_spark.operators.similarity import embedding_neardup_pairs_blocked
 
+    monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", "1")
     emb = load_table(spark, sf_dir, "embeddings")
     a = {
         (r.id_a, r.id_b): struct.pack("<d", r.cosine)

@@ -113,11 +113,12 @@ def test_knn_component_filter(spark, sf_dir):
     assert codes <= {1, 2}
 
 
-def test_blocked_neardup_tiled_equals_exact(spark, sf_dir):
+def test_blocked_neardup_tiled_equals_exact(spark, sf_dir, monkeypatch):
     """The tiled blocked-matmul near-dup must produce the IDENTICAL pair
     set as the exact expression form on a corpus spanning several tiles
     (tile_rows far below the corpus size forces the multi-tile path and
-    the exactly-once upper-triangle emit across tiles)."""
+    the exactly-once upper-triangle emit across tiles). The corpus is
+    under the driver gate, so the tiled regime is forced."""
     from chatbot_spark.operators.similarity import (
         embedding_neardup_pairs,
         embedding_neardup_pairs_blocked,
@@ -129,6 +130,7 @@ def test_blocked_neardup_tiled_equals_exact(spark, sf_dir):
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in embedding_neardup_pairs(emb, min_cosine=0.3).collect()
     }
+    monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", "1")
     tiled = {
         (r["id_a"], r["id_b"]): r["cosine"]
         for r in embedding_neardup_pairs_blocked(
@@ -278,6 +280,79 @@ def test_bucketed_neardup_driver_gate_equals_distributed(
     finally:
         sim_mod._DRIVER_PAIR_CHUNK = orig
     assert chunked == set(dist)
+
+
+def _pairs(df):
+    return {(r["id_a"], r["id_b"]): r["cosine"] for r in df.collect()}
+
+
+def test_blocked_neardup_driver_gate_equals_distributed(spark, sf_dir, monkeypatch):
+    """Size gate of the blocked operator: the driver pair pass must emit
+    the same pair set as the tiled stream (forced via
+    CBS_FORCE_DISTRIBUTED=1), with cosines within 1e-12 — both regimes
+    normalize with the same numpy code and compute each cosine as one
+    dgemm dot product. A chunk boundary inside the corpus must not drop
+    or duplicate cross-chunk pairs."""
+    from chatbot_spark.operators import similarity as sim_mod
+    from chatbot_spark.operators.similarity import embedding_neardup_pairs_blocked
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    with monkeypatch.context() as m:
+        m.setenv("CBS_FORCE_DISTRIBUTED", "1")
+        dist = _pairs(embedding_neardup_pairs_blocked(emb, min_cosine=0.35))
+    drv = _pairs(embedding_neardup_pairs_blocked(emb, min_cosine=0.35))
+    assert len(dist) > 0 and set(drv) == set(dist)
+    for k, v in drv.items():
+        assert abs(v - dist[k]) <= 1e-12
+    monkeypatch.setattr(sim_mod, "_DRIVER_PAIR_CHUNK", 97)
+    chunked = _pairs(embedding_neardup_pairs_blocked(emb, min_cosine=0.35))
+    assert set(chunked) == set(dist)
+
+
+def test_blocked_neardup_driver_edge_inputs(spark, monkeypatch):
+    """Both regimes of the blocked operator on edge inputs: a zero-norm
+    vector never pairs (cosine undefined), a duplicated id never pairs
+    with itself, and an empty input returns the typed empty result."""
+    from chatbot_spark.operators.similarity import embedding_neardup_pairs_blocked
+
+    rows = [
+        (0, [0.0, 0.0]),
+        (1, [0.0, 0.0]),
+        (2, [1.0, 0.0]),
+        (3, [1.0, 0.0]),
+        (7, [0.0, 1.0]),
+        (7, [0.0, 1.0]),  # duplicate id, identical vector
+        (9, [0.1, 0.9]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    schema = "struct<id_a:bigint,id_b:bigint,cosine:double>"
+    for forced in ("0", "1"):
+        monkeypatch.setenv("CBS_FORCE_DISTRIBUTED", forced)
+        got = _pairs(embedding_neardup_pairs_blocked(emb, min_cosine=0.9))
+        assert set(got) == {(2, 3), (7, 9)}, forced
+        empty = embedding_neardup_pairs_blocked(emb.limit(0), min_cosine=0.9)
+        assert empty.schema.simpleString() == schema
+        assert empty.collect() == []
+
+
+def test_blocked_neardup_gate_boundary(spark, sf_dir, monkeypatch):
+    """The gate is inclusive: a corpus of exactly N rows takes the driver
+    pass (a local table, no Python stream in the plan) and a gate of
+    N - 1 rows takes the tiled stream, with the same pair set."""
+    from chatbot_spark.operators import similarity as sim_mod
+    from chatbot_spark.operators.similarity import embedding_neardup_pairs_blocked
+
+    monkeypatch.delenv("CBS_FORCE_DISTRIBUTED", raising=False)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    n = emb.count()
+    got = {}
+    for gate in (n, n - 1):
+        monkeypatch.setattr(sim_mod, "NEARDUP_DRIVER_SOLVE_ROWS", gate)
+        out = embedding_neardup_pairs_blocked(emb, min_cosine=0.35)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got[gate] = ("MapInPandas" in plan, set(_pairs(out)))
+    assert got[n][0] is False and got[n - 1][0] is True
+    assert got[n][1] == got[n - 1][1] and got[n][1]
 
 
 def test_bucketed_neardup_zero_norm_and_empty(spark):

@@ -91,6 +91,10 @@ def run_one(df, which: str, n: int) -> tuple[float, int, int]:
 
 
 def main() -> int:
+    # both generators answer sizes up to NEARDUP_DRIVER_SOLVE_ROWS with
+    # the same driver pair pass; force the tiled and bucketed Spark plans
+    # this tool compares
+    os.environ["CBS_FORCE_DISTRIBUTED"] = "1"
     from chatbot_spark.session import get_spark
 
     sizes = [int(a) for a in sys.argv[1:]] or [20_000, 40_000]
