@@ -273,7 +273,8 @@ def embedding_neardup_pairs_bucketed(
     Size gate (r13, the components/LPA driver-solve precedent): at or
     below ``NEARDUP_DRIVER_SOLVE_ROWS`` raw rows the pair set is
     computed by ``_driver_pairs`` (the blocked operator's driver pass
-    too) over the SAME JVM-normalized unit vectors the distributed kernel would see — the
+    too) over the SAME JVM-normalized unit vectors the distributed
+    kernel would see — the
     emitted (min id, max id) pair set is identical (each unordered pair
     enumerated exactly once either way, same ``thr`` guard band), and
     the cosine values are the same dgemm to reassociation (~1e-15; the

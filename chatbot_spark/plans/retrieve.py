@@ -444,10 +444,11 @@ def invalidate_index_cache(path: str | None = None) -> None:
 def _index_content_stamp(spark, path: str) -> tuple:
     """Cheap content fingerprint of a written index: the modification
     time of each data dir's _SUCCESS marker (Spark rewrites the marker
-    on EVERY successful write job — mode-append, overwrite, and dynamic
-    partition overwrite alike), plus the marker's presence set. An
-    in-place append/compact therefore changes the stamp and the next
-    retrieve() loads fresh — cross-process safe, unlike the in-process
+    on every mode-append and overwrite write job; a dynamic partition
+    overwrite, as NSW's in-place append does on ``graph``, leaves it
+    as it was), plus the marker's presence set. An in-place IVF append
+    or a compact therefore changes the stamp and the next retrieve()
+    loads fresh — cross-process safe, unlike the in-process
     invalidation hook. Cost: one ``globStatus`` over the five candidate
     markers per retrieve call. A per-directory ``getFileStatus`` would
     raise (and convert) a Java exception for each directory the layout

@@ -345,8 +345,11 @@ WHERE a.vec_id < b.vec_id
 )
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: ε-ball similarity self-join (embedding-cosine near-dup) — the
-    blocked-matmul execution (broadcast side + BLAS per Arrow batch); the
-    expression-form operator embedding_neardup_pairs is its exact twin."""
+    blocked-matmul operator: at or below NEARDUP_DRIVER_SOLVE_ROWS rows
+    one chunked BLAS pair pass on the driver, above it parquet tiles plus
+    one BLAS matmul per (Arrow batch × tile); both emit the same pair
+    set. The expression-form operator embedding_neardup_pairs is its
+    exact twin."""
     from chatbot_spark.operators.similarity import embedding_neardup_pairs_blocked
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -391,8 +394,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE pair generation (collapse_exact_duplicates — duplicate storms
     make any pair generator quadratic on the duplicated content; the
     collapse is exactly semantics-preserving for component dedup, see its
-    docstring), the tiled exact operator generates rep pairs so the
-    DuckDB oracle can replicate the full graph bit-for-bit, and verdicts
+    docstring), the blocked exact operator generates rep pairs (on the
+    driver at or below NEARDUP_DRIVER_SOLVE_ROWS reps, tiled above) so
+    the DuckDB oracle can replicate the full graph bit-for-bit, and verdicts
     expand back through the (id, rep) mapping: the expanded component's
     min id IS the rep component's min id. At 100 TB swap the tiled
     generator for the LSH/IVF-bucketed one (same downstream). Reference
